@@ -2,8 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, date_format, timestamp_millis}
+import org.apache.spark.sql.functions.{col, date_format, lit, timestamp_millis}
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.normalize.Normalizers
@@ -170,6 +172,18 @@ object StreamCli {
     * batch queries read; the reference instead exits — `stream.py:172` —
     * but this sandbox has no PG server to point a DSN at).
     *
+    * One collect feeds every sink: each micro-batch is computed by one
+    * Spark job that collects its rows together with their console lines.
+    * The lines print from those rows, and the same rows, as one local
+    * DataFrame, go to the CSV write and to the JDBC (or parquet) append.
+    *
+    * `ts_ingest_ms` is one value per micro-batch, the wall clock when the
+    * sink receives the batch; it is not computed in the streaming plan. A
+    * batch replayed from the checkpoint is stamped again, so its rows may
+    * carry a later stamp than the failed attempt's (earlier the stamp was
+    * the batch timestamp in the offset log). The JDBC sink stays
+    * exactly-once per `batch_id`: the replay replaces that batch's rows.
+    *
     * Returns (csv rows, pg-or-parquet rows) read back from the sinks. */
   def run(spark: SparkSession, args: CliArgs): (Long, Long) = {
     val pairs = resolveStreams(args)
@@ -193,16 +207,28 @@ object StreamCli {
     else if (writePg)
       println(s"[cli] no --pg-url: PG sink modeled as parquet append at $pqDir")
     val lineCol = ConsoleSink.line(colors = !args.noColor)
-    val q = unified.writeStream
+    // ts_ingest_ms is stamped on the collected rows, not in the streaming
+    // plan: Spark folds current_timestamp into a new literal every
+    // micro-batch, which changes the generated class of every union
+    // branch and recompiles it on every trigger. Dropped here, column
+    // pruning removes the stamp from every branch.
+    val q = unified.drop("ts_ingest_ms").writeStream
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.ProcessingTime(args.triggerMs))
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val batch = df.persist()
-        try {
-          // WriterShim order: print, then forward (stream.py:64-87); the
-          // collect is presentation I/O bounded per micro-batch
-          batch.select(lineCol.as("line")).collect()
-            .foreach(r => println(r.getString(0)))
+        val ingestMs = System.currentTimeMillis()
+        // the collect is the console sink itself (presentation I/O
+        // bounded per micro-batch); every other sink reads the same rows
+        val lines = df.select(col("*"), lineCol.as("line"))
+        val rows = lines.collect()
+        // WriterShim order: print, then forward (stream.py:64-87)
+        rows.foreach(r => println(r.getString(r.length - 1)))
+        if ((writeCsv || writePg) && rows.nonEmpty) {
+          // a local relation: Spark projects it on the driver, so the
+          // stamp compiles no code
+          val batch = spark.createDataFrame(rows.toSeq.asJava, lines.schema)
+            .select(unified.columns.map(c =>
+              if (c == "ts_ingest_ms") lit(ingestMs).as(c) else col(c)).toSeq: _*)
           if (writeCsv) batch
             .withColumn("day",
               date_format(timestamp_millis(col("ts_ingest_ms")), "yyyy-MM-dd"))
@@ -213,8 +239,7 @@ object StreamCli {
             JdbcSink.appendBatchExactlyOnce(batch, batchId, args.pgUrl,
               args.pgTable, props, args.pgBatch, dialect = dialect)
           else if (writePg) batch.write.mode("append").parquet(pqDir)
-        } finally batch.unpersist()
-        ()
+        }
       }
       .start()
     try q.processAllAvailable() finally q.stop()

@@ -651,9 +651,11 @@ object TimeWindows {
     // HampelSpec proves it exhaustively over every 5-tuple of a 5-symbol
     // alphabet (min/max networks are monotone, so order types with ties
     // cover the general case) and pins batch output equality. The
-    // edge-row rule is unchanged: cents is never NULL here (value
-    // filtered NOT NULL), so "lag2/lead2 both present" ⇔ the old
-    // size(frame) === 5.
+    // edge-row rule is the old size(frame) === 5 (collect_list skips
+    // NULLs): all five frame values must be present. cents is NULL when
+    // a value overflows DECIMAL(18,2) with ANSI mode off, and least/
+    // greatest skip NULL arguments, so a NULL anywhere in the frame
+    // drops the frame rather than taking a median of fewer than 5.
     events
       .filter(col("value").isNotNull)
       .select(col("event_type"), col("ts"), col("event_id"),
@@ -663,7 +665,8 @@ object TimeWindows {
       .withColumn("m1", lag(col("cents"), 1).over(w))
       .withColumn("p1", lead(col("cents"), 1).over(w))
       .withColumn("p2", lead(col("cents"), 2).over(w))
-      .filter(col("m2").isNotNull && col("p2").isNotNull)
+      .filter(col("m2").isNotNull && col("m1").isNotNull &&
+        col("cents").isNotNull && col("p1").isNotNull && col("p2").isNotNull)
       // med and mad are PINNED ([[graft.ops.pinned]]): the dev > 3·mad
       // filter would otherwise be pushdown-substituted through both
       // aliases — med's network expanded 6x inside mad's, the whole tree

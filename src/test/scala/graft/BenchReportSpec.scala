@@ -93,6 +93,16 @@ class BenchReportSpec extends AnyFunSuite {
     assert(!Bench.fullJson(rs, Nil, "sf0.1").contains("constr"))
   }
 
+  test("construction time comes from the pass of the min total") {
+    // pass 2 has the min total; pass 3 the min construction. Taking each
+    // min on its own would report 0.2 s construction beside a 2.0 s total
+    // whose own pass spent 1.5 s constructing.
+    val perPass = Seq((3.0, 0.5, true), (2.0, 1.5, true), (4.0, 0.2, true))
+    val (total, constr) = Bench.minPass(perPass)
+    assert(total == 2.0 && constr == 1.5)
+    assert(total - constr == 0.5, "action must be the same pass's remainder")
+  }
+
   test("full detail json stamps load averages and per-pass times") {
     val rs = Seq("a" -> 1.0, "b" -> 2.5)
     val passTimes = Seq(Seq("a" -> 1.2, "b" -> 2.5), Seq("a" -> 1.0, "b" -> 9.9))

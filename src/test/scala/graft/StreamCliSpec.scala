@@ -1,9 +1,14 @@
 package graft
 
+import java.io.{ByteArrayOutputStream, OutputStream, PrintStream}
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.functions.col
+import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.MicroBatchPlans
+
+import graft.model.Schemas
 import graft.normalize.Fixtures
 
 /** CLI orchestrator spec: stream resolution semantics (incl. the aster/
@@ -12,6 +17,24 @@ import graft.normalize.Fixtures
 class StreamCliSpec extends SparkSpec {
 
   private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+
+  /** Fixture captures for every `--all` source. The Binance capture cycles
+    * its fixture frames up to `binanceFrames`: more than the replay
+    * source's 1000 frames per batch spreads a run over several
+    * micro-batches. */
+  private def allFrames(prefix: String,
+      binanceFrames: Int = Fixtures.binance.size): String = {
+    val framesRoot = tmp(prefix)
+    val binance = Iterator.continually(Fixtures.binance).flatten.take(binanceFrames).toSeq
+    Seq("binance" -> binance, "aster" -> Fixtures.aster,
+      "bybit" -> Fixtures.bybit, "okx" -> Fixtures.okx).foreach { case (ex, fx) =>
+      Files.write(Paths.get(s"$framesRoot/$ex.jsonl"), fx.mkString("\n").getBytes)
+    }
+    Files.createDirectories(Paths.get(s"$framesRoot/hyperliquid"))
+    Files.write(Paths.get(s"$framesRoot/hyperliquid/hour1.json"),
+      Fixtures.hyperliquid.mkString("", "\n", "\n").getBytes)
+    framesRoot
+  }
 
   test("resolveStreams: --all roster, ex:mk list, single pair, market rewrites") {
     import StreamCli._
@@ -118,14 +141,7 @@ class StreamCliSpec extends SparkSpec {
   }
 
   test("--all: the full 8-pair roster runs as ONE streaming query over 5 sources") {
-    val framesRoot = tmp("cli_all_frames")
-    Seq("binance" -> Fixtures.binance, "aster" -> Fixtures.aster,
-      "bybit" -> Fixtures.bybit, "okx" -> Fixtures.okx).foreach { case (ex, fx) =>
-      Files.write(Paths.get(s"$framesRoot/$ex.jsonl"), fx.mkString("\n").getBytes)
-    }
-    Files.createDirectories(Paths.get(s"$framesRoot/hyperliquid"))
-    Files.write(Paths.get(s"$framesRoot/hyperliquid/hour1.json"),
-      Fixtures.hyperliquid.mkString("", "\n", "\n").getBytes)
+    val framesRoot = allFrames("cli_all_frames")
     val out = tmp("cli_all_out")
     val (csvRows, pgRows) = StreamCli.run(spark, StreamCli.CliArgs(
       all = true, framesRoot = framesRoot, outdirRoot = out, triggerMs = 100L))
@@ -143,6 +159,74 @@ class StreamCliSpec extends SparkSpec {
     assert(Set("binance" -> "usdt", "binance" -> "coin", "bybit" -> "usdt",
       "bybit" -> "coin", "okx" -> "usdt", "aster" -> "usdt",
       "hyperliquid" -> "usdc").subsetOf(pairs), s"got $pairs")
+  }
+
+  test("--all over several micro-batches: one stamp per batch, CSV == JDBC, a line per row") {
+    val framesRoot = allFrames("cli_mb_frames", binanceFrames = 1200)
+    val out = tmp("cli_mb_out")
+    val url = "jdbc:derby:memory:cli_mb;create=true"
+    val console = new ByteArrayOutputStream()
+    val t0 = System.currentTimeMillis()
+    val (csvRows, pgRows) = Console.withOut(new PrintStream(console, true, "UTF-8"))(
+      StreamCli.run(spark, StreamCli.CliArgs(all = true, framesRoot = framesRoot,
+        outdirRoot = out, triggerMs = 100L, noColor = true, pgUrl = url)))
+    val t1 = System.currentTimeMillis()
+    val jdbc = spark.read.jdbc(url, "liquidations", new java.util.Properties())
+    val jdbcRows = jdbc.collect()
+    assert(csvRows == jdbcRows.length && pgRows == jdbcRows.length)
+    // each batch_id: one shared, non-null ts_ingest_ms, taken during the
+    // run, and no two batches share one
+    val byBatch = jdbcRows.groupBy(_.getAs[Long]("batch_id"))
+    assert(byBatch.size >= 2, s"expected several micro-batches: ${byBatch.keySet}")
+    val stamps = byBatch.map { case (b, rs) =>
+      val ts = rs.map(r => Option(r.getAs[java.lang.Long]("ts_ingest_ms"))).distinct
+      assert(ts.length == 1 && ts.head.isDefined, s"batch $b carries stamps $ts")
+      ts.head.get.longValue
+    }
+    assert(stamps.toSet.size == byBatch.size, s"batches share a stamp: $stamps")
+    assert(stamps.forall(ts => ts >= t0 && ts <= t1), s"stamps $stamps outside the run")
+    // CSV holds the same rows as JDBC, ts_ingest_ms included, so each CSV
+    // row carries its batch's stamp too
+    val cols = Schemas.unified.fieldNames.map(col)
+    def multiset(rs: Array[org.apache.spark.sql.Row]) =
+      rs.toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
+    val csv = spark.read.option("header", "true").schema(Schemas.unified)
+      .csv(s"$out/csv")
+    assert(multiset(csv.select(cols: _*).collect()) ==
+      multiset(jdbc.select(cols: _*).collect()))
+    // every CSV part-file keeps the unified column order
+    val parts = Files.walk(Paths.get(s"$out/csv")).iterator().asScala
+      .filter(_.toString.endsWith(".csv")).toSeq
+    assert(parts.nonEmpty)
+    parts.foreach { p =>
+      val header = Files.readAllLines(p).get(0)
+      assert(header == Schemas.unified.fieldNames.mkString(","), s"$p: $header")
+    }
+    // the console printed one line per row
+    val printed = console.toString("UTF-8").split("\n")
+      .count(l => l.startsWith("[") && !l.startsWith("[cli]"))
+    assert(printed == jdbcRows.length)
+  }
+
+  test("no per-batch value reaches the optimized plan of the main ingest query") {
+    // a value that changes every micro-batch changes the generated class
+    // of every stage it reaches, which is then compiled again on every
+    // trigger
+    val framesRoot = allFrames("cli_plan_frames", binanceFrames = 1200)
+    val out = tmp("cli_plan_out")
+    val quiet = new PrintStream(OutputStream.nullOutputStream())
+    val (_, batches) = MicroBatchPlans.during(spark)(Console.withOut(quiet)(
+      StreamCli.run(spark, StreamCli.CliArgs(all = true, framesRoot = framesRoot,
+        outdirRoot = out, triggerMs = 100L, noWrite = true))))
+    assert(batches.size >= 2, s"expected several micro-batches: ${batches.size}")
+    batches.foreach { ie =>
+      val leaked = MicroBatchPlans.perBatchValues(ie)
+      assert(leaked.isEmpty, s"batch ${ie.currentBatchId} plan holds $leaked:\n" +
+        ie.optimizedPlan)
+      // the stamp is set on the collected rows, outside the streamed plan
+      assert(ie.optimizedPlan.output.map(_.name) ==
+        Schemas.unified.fieldNames.filterNot(_ == "ts_ingest_ms").toSeq)
+    }
   }
 
   test("--candles/--vwap: dashboard queries run over the replay pipeline") {

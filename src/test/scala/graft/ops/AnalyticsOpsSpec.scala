@@ -857,6 +857,45 @@ class AnalyticsOpsSpec extends SparkSpec {
       s"a level shift must not be flagged: $got")
   }
 
+  test("ts_hampel: an overflow-to-NULL value drops every frame it sits in") {
+    import spark.implicits._
+    import java.sql.Timestamp
+    val base = 1700000000000L
+    // 1e17 overflows DECIMAL(18,2): with ANSI mode off its cents is NULL.
+    // The 700 spike's frame holds that NULL, so only the 500 and 900
+    // spikes have five values and are flagged.
+    val vals = Seq(10, 10, 500, 10, 10, 10, 700, 1e17, 10, 10, 900, 10, 10, 10)
+      .map(_.toDouble)
+    val df = vals.zipWithIndex.map { case (v, i) =>
+      ("s", new Timestamp(base + i * 1000L), i.toLong, v)
+    }.toDF("event_type", "ts", "event_id", "value")
+    // the collect_list formulation it replaced: NULLs are skipped and a
+    // frame counts only with all five values
+    val cents = vals.map(v => if (math.abs(v) >= 1e16) None else Some(math.round(v * 100)))
+    val want = (2 until vals.size - 2).flatMap { i =>
+      val frame = (i - 2 to i + 2).flatMap(cents(_))
+      if (frame.size < 5) None
+      else {
+        val med = frame.sorted.apply(2)
+        val mad = frame.map(c => math.abs(c - med)).sorted.apply(2)
+        val dev = math.abs(frame(2) - med)
+        if (dev > 3 * mad) Some((i.toLong, frame(2), med, dev)) else None
+      }
+    }.toSet
+    assert(want.map(_._1) == Set(2L, 10L), s"reference: $want")
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val got = TimeWindows.hampelFlags(df).collect()
+        .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
+      assert(got == want)
+    } finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("ts_mk_trend: monotone series hits tau = 1, alternating stays near 0") {
     import spark.implicits._
     import java.sql.Timestamp

@@ -1,0 +1,50 @@
+package org.apache.spark.sql.graftbridge
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{CurrentBatchTimestamp, Expression, ExpressionWithRandomSeed}
+import org.apache.spark.sql.execution.streaming.runtime.IncrementalExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+
+/** The executions of the streaming micro-batches that ran, for specs that
+  * inspect the plans a query really executed. Each micro-batch ends one
+  * SQL execution whose QueryExecution is the batch's IncrementalExecution;
+  * `SparkListenerSQLExecutionEnd.qe` is private[sql], hence this package. */
+object MicroBatchPlans {
+  def during[T](spark: SparkSession)(body: => T): (T, Seq[IncrementalExecution]) = {
+    val seen = new ConcurrentLinkedQueue[IncrementalExecution]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case end: SparkListenerSQLExecutionEnd => end.qe match {
+          case ie: IncrementalExecution => seen.add(ie): Unit
+          case _ =>
+        }
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.listenerBus.waitUntilEmpty()
+      (out, seen.asScala.toSeq.sortBy(_.currentBatchId))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The per-batch values left in a micro-batch's plan after optimization:
+    * the batch timestamp that stands in for current_timestamp, now,
+    * localtimestamp and current_date, and the random seeds Spark draws
+    * anew for every batch. The batch's own optimized plan has already
+    * folded the timestamp into a literal, so this optimizes its analyzed
+    * plan again and looks before that fold. */
+  def perBatchValues(ie: IncrementalExecution): Seq[Expression] =
+    ie.sparkSession.sessionState.optimizer.execute(ie.analyzed)
+      .flatMap(_.expressions.flatMap(_.collect {
+        case e: CurrentBatchTimestamp => e
+        case e: ExpressionWithRandomSeed => e
+      }))
+}
