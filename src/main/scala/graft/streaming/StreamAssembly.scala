@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import scala.reflect.runtime.universe.TypeTag
 
 import graft.normalize.Normalizers
 
@@ -1005,15 +1006,105 @@ object StreamAssembly {
           col("cnt") * col("n_trail") * 2L < col("trail_sum")).as("dropped"))
   }
 
-  /** Shipped reference traffic profile for [[driftStream]] — the baseline
-    * distribution the live mix is compared against (production broadcasts
-    * yesterday's profile; a literal here, the model-artifact convention of
-    * [[graft.ops.TextOps.encPieces]]). Traffic outside the profile falls
-    * into an implicit `other` bucket whose baseline mass is zero — JSD
-    * stays finite by construction, so an unknown event type registers as
-    * drift instead of an error. */
+  /** Keyed state of a [[closeOnWatermark]] fold: the carry that crosses
+    * bucket boundaries, and the open buckets by start ms. */
+  private[streaming] final case class FoldState[C, B](carry: C,
+      open: Map[Long, B])
+
+  /** The carry of a fold whose buckets share nothing. */
+  private[streaming] final case class NoCarry()
+
+  /** One row as a fold step sees it: event id, event-time ms, the packed
+    * (µs-in-day, id mod 2²⁰) order key by which the batch twins' max_by
+    * picks a day's close, and the projected value. */
+  private[streaming] final case class Tick[V](id: Long, ms: Long,
+      ordKey: Long, v: V)
+
+  private val dayMs = 86400000L
+
+  private def utcDay(ms: Long): String = java.time.Instant.ofEpochMilli(ms)
+    .atOffset(java.time.ZoneOffset.UTC).toLocalDate.toString
+
+  /** The batch twins' 1e-6 floor-round ([[graft.ops.roundD]]). */
+  private def round6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
+
+  /** The batch twins' integer cents, floor(x·100+0.5). */
+  private def toCents(x: Double): Long = math.floor(x * 100 + 0.5).toLong
+
+  private def doubleValue: Column = col("value").cast("double")
+
+  /** CLOSE-ON-WATERMARK FOLD — the one keyed-state loop behind the
+    * bucket-close streaming twins (ONE definition of the scaffolding; each
+    * twin keeps its projection, its row step and its close step). Per
+    * event type, rows fold into open event-time buckets of `bucketMs`
+    * (UTC days or hours), and each bucket is closed EXACTLY ONCE:
+    *
+    *  - `step(carry, open bucket, tick)` applies one row. Within a
+    *    micro-batch rows apply in full-µs (ts, id) order; across
+    *    micro-batches the feed is assumed in order per key (the
+    *    [[anomalyStream]] convention). Together these replay the batch
+    *    twins' window order.
+    *  - `close(key, bucket start, carry, bucket)` runs for every open
+    *    bucket whose end is at or before the watermark, in start order,
+    *    and returns the next carry and at most one report row.
+    *  - Retention: when a key's idle timeout fires, the key is removed only
+    *    if it has no open bucket and its carry equals `init`. Otherwise
+    *    the state stays and the timeout re-arms, so a carry (rings,
+    *    previous close, running lines) survives any silence, exactly as
+    *    the batch twins' frames lag across calendar gaps.
+    *
+    * `value` is the one column `step` reads besides id and time (`lit(0)`
+    * when it reads none). State per key is the carry plus O(open
+    * buckets), independent of event volume. */
+  private def closeOnWatermark[V: TypeTag, C, B, R](events: DataFrame,
+      value: Column, bucketMs: Long, watermark: String, idleTimeout: String,
+      init: C)(step: (C, Option[B], Tick[V]) => (C, B))(
+      close: (String, Long, C, B) => (C, Option[R]))(
+      implicit stateEnc: Encoder[FoldState[C, B]],
+      outEnc: Encoder[R]): Dataset[R] = {
+    import events.sparkSession.implicits._
+    events.select(col("event_type"), col("event_id"), col("ts"), value)
+      .withWatermark("ts", watermark)
+      .as[(String, Long, java.sql.Timestamp, V)]
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[FoldState[C, B], R](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        case (key, rows, state) =>
+          var carry = state.getOption.fold(init)(_.carry)
+          var open = state.getOption.fold(Map.empty[Long, B])(_.open)
+          var lastMs = 0L
+          rows.toSeq.sortBy(r => (r._3.getTime, r._3.getNanos, r._2))
+            .foreach { case (_, id, ts, v) =>
+              val ms = ts.getTime
+              lastMs = math.max(lastMs, ms)
+              val us = math.floorDiv(ms, 1000L) * 1000000L + ts.getNanos / 1000L
+              val ordKey = math.floorMod(us, 86400000000L) * 1048576L +
+                math.floorMod(id, 1048576L)
+              val k = math.floorDiv(ms, bucketMs) * bucketMs
+              val (c, b) = step(carry, open.get(k), Tick(id, ms, ordKey, v))
+              carry = c
+              open += k -> b
+            }
+          val wm = state.getCurrentWatermarkMs()
+          // an earlier open bucket always ends first, so takeWhile is exact
+          val out = open.keys.toSeq.sorted.takeWhile(_ + bucketMs <= wm)
+            .flatMap { k =>
+              val (c, r) = close(key, k, carry, open(k))
+              carry = c
+              open -= k
+              r
+            }
+          if (state.hasTimedOut && open.isEmpty && carry == init)
+            state.remove()
+          else {
+            state.update(FoldState(carry, open))
+            state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
+          }
+          out.iterator
+      }
+  }
+
   final case class GapDayState(lastMs: Long, maxGap: Long, n: Long)
-  final case class GapState(open: Map[Long, GapDayState])
   final case class GapReport(event_type: String, day: String,
       n_events: Long, max_gap_ms: Long)
 
@@ -1024,63 +1115,25 @@ object StreamAssembly {
     * idle watchdog on its file-tail feed — `hyperliquid_adapter.py:316-319`
     * wakes every 30 min and warns when the node log has gone silent; at
     * monitor grain that is "max silent gap per (type, UTC day)". Per key:
-    * gaps are measured between consecutive events (per-batch full-µs
-    * (ts, id) sort; cross-batch causality assumes an in-order feed per
-    * key — the [[anomalyStream]] convention), accumulated per open day,
-    * and the day's report (n_events, max_gap_ms) is emitted EXACTLY ONCE
-    * when the watermark closes the day. A day-boundary gap does not exist
-    * by definition (the batch twin's lag is partitioned by day), so the
-    * first event of a day opens it at gap 0 and a single-event day
-    * reports 0 — the batch twin's coalesce(max(gap), 0). State per key is
-    * O(open days) fixed-size counters, independent of event volume;
-    * EventTimeTimeout + idle timeout reaps keys whose feed stopped
-    * (after one final flush of any watermark-closed days). */
+    * gaps are measured between consecutive events, accumulated per open
+    * day, and the day's report (n_events, max_gap_ms) is emitted EXACTLY
+    * ONCE when the watermark closes the day. A day-boundary gap does not
+    * exist by definition (the batch twin's lag is partitioned by day), so
+    * the first event of a day opens it at gap 0 and a single-event day
+    * reports 0 — the batch twin's coalesce(max(gap), 0). Nothing carries
+    * across days, so [[closeOnWatermark]] removes a key whose feed stopped
+    * once its open days have flushed. */
   def gapStream(events: DataFrame,
       watermark: String = "2 hours",
       idleTimeout: String = "60 days"): Dataset[GapReport] = {
     import events.sparkSession.implicits._
-    val dayMs = 86400000L
-    val typed = events
-      .select(col("event_type"), col("event_id"), col("ts"))
-      .withWatermark("ts", watermark)
-      .as[(String, Long, java.sql.Timestamp)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[GapState, GapReport](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, rows, state) =>
-          var s = state.getOption.getOrElse(GapState(Map.empty))
-          var lastMs = 0L
-          rows.toSeq.sortBy(r => (r._3.getTime, r._3.getNanos, r._2))
-            .foreach { case (_, _, ts) =>
-              val ms = ts.getTime
-              lastMs = math.max(lastMs, ms)
-              val d = math.floorDiv(ms, dayMs) * dayMs
-              val g = s.open.get(d) match {
-                case None => GapDayState(ms, 0L, 1L)
-                case Some(p) =>
-                  GapDayState(ms, math.max(p.maxGap, ms - p.lastMs), p.n + 1L)
-              }
-              s = s.copy(open = s.open + (d -> g))
-            }
-          val wm = state.getCurrentWatermarkMs()
-          // close in day order; an earlier open day always closes before a
-          // later one (its end is smaller), so takeWhile is exact
-          val out = s.open.keys.toSeq.sorted
-            .takeWhile(d => d + dayMs <= wm)
-            .map { d =>
-              val g = s.open(d)
-              s = s.copy(open = s.open - d)
-              GapReport(key, java.time.Instant.ofEpochMilli(d)
-                .atOffset(java.time.ZoneOffset.UTC).toLocalDate.toString,
-                g.n, g.maxGap)
-            }
-          if (state.hasTimedOut && s.open.isEmpty) state.remove()
-          else {
-            state.update(s)
-            state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
-          }
-          out.iterator
-      }
+    closeOnWatermark[Int, NoCarry, GapDayState, GapReport](events, lit(0),
+        dayMs, watermark, idleTimeout, NoCarry()) { (nc, day, t) =>
+      (nc, day.fold(GapDayState(t.ms, 0L, 1L))(p =>
+        GapDayState(t.ms, math.max(p.maxGap, t.ms - p.lastMs), p.n + 1L)))
+    } { (key, d, nc, g) =>
+      (nc, Some(GapReport(key, utcDay(d), g.n, g.maxGap)))
+    }
   }
 
   /** STREAMING SESSION WINDOWS — the burst/cascade detector live: per
@@ -1130,7 +1183,6 @@ object StreamAssembly {
 
   final case class EwmaDay(maxKey: Long, close: Double,
       sumMicros: Long, n: Long)
-  final case class EwmaState(ring: Vector[Double], open: Map[Long, EwmaDay])
   final case class EwmaReport(event_type: String, day: String,
       ewma_close: Double, ewma_mean: Double)
 
@@ -1149,74 +1201,37 @@ object StreamAssembly {
     * the batch side's DECIMAL(18,6) sum — and divide once in double with
     * the identical tree. The 8-value ring carries ACROSS day boundaries
     * exactly like the batch lag window (partitioned by type only). State
-    * per key: 8 doubles + O(open days) counters, independent of volume.
-    * Per-batch full-µs sort; cross-batch in-order feed per key (the
-    * [[anomalyStream]] convention). */
+    * per key: 8 doubles + O(open days) counters, independent of volume. */
   def ewmaStream(events: DataFrame,
       watermark: String = "2 hours",
       idleTimeout: String = "60 days"): Dataset[EwmaReport] = {
     import events.sparkSession.implicits._
-    val dayMs = 86400000L
     val d = 0.75
-    val typed = events
-      .select(col("event_type"), col("event_id"), col("ts"),
-        col("value").cast("double"))
-      .withWatermark("ts", watermark)
-      .as[(String, Long, java.sql.Timestamp, Double)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[EwmaState, EwmaReport](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, rows, state) =>
-          var s = state.getOption.getOrElse(EwmaState(Vector.empty, Map.empty))
-          var lastMs = 0L
-          rows.toSeq.sortBy(r => (r._3.getTime, r._3.getNanos, r._2))
-            .foreach { case (_, id, ts, v) =>
-              val ms = ts.getTime
-              lastMs = math.max(lastMs, ms)
-              // current value is tap j=0, ring carries taps 1..7
-              val vals = v +: s.ring
-              var num = 0.0; var den = 0.0; var j = 0
-              while (j < vals.length) {
-                val w = math.pow(d, j)
-                num += vals(j) * w; den += w; j += 1
-              }
-              val e = math.floor(num / den * 1e6 + 0.5) / 1e6
-              val eMicros = math.rint(e * 1e6).toLong
-              val us = math.floorDiv(ms, 1000L) * 1000000L +
-                ts.getNanos / 1000L
-              val ordKey = math.floorMod(us, 86400000000L) * 1048576L +
-                math.floorMod(id, 1048576L)
-              val dayKey = math.floorDiv(ms, dayMs) * dayMs
-              val cur = s.open.get(dayKey) match {
-                case None => EwmaDay(ordKey, e, eMicros, 1L)
-                case Some(p) =>
-                  val (mk, cl) =
-                    if (ordKey > p.maxKey) (ordKey, e) else (p.maxKey, p.close)
-                  EwmaDay(mk, cl, p.sumMicros + eMicros, p.n + 1L)
-              }
-              s = EwmaState((v +: s.ring).take(7), s.open + (dayKey -> cur))
-            }
-          val wm = state.getCurrentWatermarkMs()
-          val out = s.open.keys.toSeq.sorted
-            .takeWhile(k => k + dayMs <= wm)
-            .map { k =>
-              val a = s.open(k)
-              s = s.copy(open = s.open - k)
-              // the batch twin's DECIMAL(18,6) sum cast to double, / count
-              val mean = java.math.BigDecimal.valueOf(a.sumMicros, 6)
-                .doubleValue() / a.n
-              EwmaReport(key, java.time.Instant.ofEpochMilli(k)
-                .atOffset(java.time.ZoneOffset.UTC).toLocalDate.toString,
-                a.close, mean)
-            }
-          // Idle-gap policy: the trailing-close ring survives the timeout
-          // (re-arm, never remove) — the batch twin's row frame lags
-          // across calendar gaps, so forgetting the ring after 60 idle
-          // days would diverge on the first post-gap day. O(|types|) keys.
-          state.update(s)
-          state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
-          out.iterator
-      }
+    closeOnWatermark[Double, Vector[Double], EwmaDay, EwmaReport](events,
+        doubleValue, dayMs, watermark, idleTimeout, Vector.empty) {
+      (ring, day, t) =>
+        // current value is tap j=0, ring carries taps 1..7
+        val vals = t.v +: ring
+        var num = 0.0; var den = 0.0; var j = 0
+        while (j < vals.length) {
+          val w = math.pow(d, j)
+          num += vals(j) * w; den += w; j += 1
+        }
+        val e = round6(num / den)
+        val eMicros = math.rint(e * 1e6).toLong
+        (vals.take(7), day match {
+          case None => EwmaDay(t.ordKey, e, eMicros, 1L)
+          case Some(p) =>
+            val (mk, cl) =
+              if (t.ordKey > p.maxKey) (t.ordKey, e) else (p.maxKey, p.close)
+            EwmaDay(mk, cl, p.sumMicros + eMicros, p.n + 1L)
+        })
+    } { (key, k, ring, a) =>
+      // the batch twin's DECIMAL(18,6) sum cast to double, / count
+      val mean = java.math.BigDecimal.valueOf(a.sumMicros, 6)
+        .doubleValue() / a.n
+      (ring, Some(EwmaReport(key, utcDay(k), a.close, mean)))
+    }
   }
 
   final case class FunnelWinState(t1: Long, t2: Long, t3: Long)
@@ -1292,17 +1307,24 @@ object StreamAssembly {
       }
   }
 
-  final case class BollDay(maxKey: Long, close: Double)
-  final case class BollState(ring: Vector[Long], open: Map[Long, BollDay])
+  /** A day's close candidate: the value at the largest packed order key. */
+  final case class DayClose(maxKey: Long, close: Double)
   final case class BollReport(event_type: String, day: String, close: Double,
       n: Long, ma: Double, sd: Double, upper: Double, lower: Double,
       breach: Int)
+
+  /** The row step of the twins that read only the day close: the batch
+    * twins' max_by(value, packed key). */
+  private def lastClose[C](carry: C, day: Option[DayClose],
+      t: Tick[Double]): (C, DayClose) =
+    (carry, day.filter(_.maxKey >= t.ordKey)
+      .getOrElse(DayClose(t.ordKey, t.v)))
 
   /** STREAMING BOLLINGER BANDS — the mean-reversion alert live, per
     * (type, UTC day): trailing-5-day mean ± 2σ on the daily close with
     * the breach flag, each day emitted exactly once when the watermark
     * closes it. The live twin of the oracle-checked `ta_bollinger` batch
-    * query (ONE definition, two runtimes — the [[ewmaStream]] class).
+    * query (ONE definition, two runtimes).
     *
     * Bit-exactness with the batch twin: the day close is picked by the
     * SAME packed (µs-in-day, id mod 2²⁰) ordering key; closes quantize
@@ -1318,233 +1340,118 @@ object StreamAssembly {
       watermark: String = "2 hours",
       idleTimeout: String = "60 days"): Dataset[BollReport] = {
     import events.sparkSession.implicits._
-    val dayMs = 86400000L
-    val typed = events
-      .select(col("event_type"), col("event_id"), col("ts"),
-        col("value").cast("double"))
-      .withWatermark("ts", watermark)
-      .as[(String, Long, java.sql.Timestamp, Double)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[BollState, BollReport](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, rows, state) =>
-          var s = state.getOption.getOrElse(BollState(Vector.empty, Map.empty))
-          var lastMs = 0L
-          rows.foreach { case (_, id, ts, v) =>
-            val ms = ts.getTime
-            lastMs = math.max(lastMs, ms)
-            val us = math.floorDiv(ms, 1000L) * 1000000L + ts.getNanos / 1000L
-            val ordKey = math.floorMod(us, 86400000000L) * 1048576L +
-              math.floorMod(id, 1048576L)
-            val dayKey = math.floorDiv(ms, dayMs) * dayMs
-            val cur = s.open.get(dayKey) match {
-              case Some(p) if p.maxKey >= ordKey => p
-              case _ => BollDay(ordKey, v)
-            }
-            s = s.copy(open = s.open + (dayKey -> cur))
+    closeOnWatermark[Double, Vector[Long], DayClose, BollReport](events,
+        doubleValue, dayMs, watermark, idleTimeout, Vector.empty)(lastClose) {
+      (key, k, ring, day) =>
+        val close = day.close
+        val c = toCents(close)
+        val win = ring.takeRight(4) :+ c
+        val n = win.size
+        val rep =
+          if (n < 2) None
+          else {
+            val sx = win.sum.toDouble
+            val sxx = win.map(x => x * x).sum.toDouble
+            val nd = n.toDouble
+            val ma = sx / nd / 100.0
+            val sd = math.sqrt(math.max(
+              (sxx * nd - sx * sx) / (nd * (nd - 1.0)), 0.0)) / 100.0
+            Some(BollReport(key, utcDay(k), close, n.toLong, round6(ma),
+              round6(sd), round6(ma + 2.0 * sd), round6(ma - 2.0 * sd),
+              if (close > ma + 2.0 * sd || close < ma - 2.0 * sd) 1 else 0))
           }
-          val wm = state.getCurrentWatermarkMs()
-          val out = s.open.keys.toSeq.sorted
-            .takeWhile(k => k + dayMs <= wm)
-            .flatMap { k =>
-              val close = s.open(k).close
-              s = s.copy(open = s.open - k)
-              val c = math.floor(close * 100 + 0.5).toLong
-              val win = s.ring.takeRight(4) :+ c
-              s = s.copy(ring = (s.ring :+ c).takeRight(4))
-              val n = win.size
-              if (n < 2) None
-              else {
-                val sx = win.sum.toDouble
-                val sxx = win.map(x => x * x).sum.toDouble
-                val nd = n.toDouble
-                val ma = sx / nd / 100.0
-                val sd = math.sqrt(math.max(
-                  (sxx * nd - sx * sx) / (nd * (nd - 1.0)), 0.0)) / 100.0
-                def r6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
-                Some(BollReport(key, java.time.Instant.ofEpochMilli(k)
-                  .atOffset(java.time.ZoneOffset.UTC).toLocalDate.toString,
-                  close, n.toLong, r6(ma), r6(sd),
-                  r6(ma + 2.0 * sd), r6(ma - 2.0 * sd),
-                  if (close > ma + 2.0 * sd || close < ma - 2.0 * sd) 1
-                  else 0))
-              }
-            }
-          // Idle-gap policy: the cents ring survives the timeout (re-arm,
-          // never remove) — the batch rowsBetween(-4,0) frame lags across
-          // calendar gaps, so the first post-gap day must still see the
-          // pre-gap closes. (The old removal guard on ring.isEmpty was
-          // unreachable once a day had closed; retention is now the
-          // documented policy, shared with atrStream/ewmaStream, and is
-          // O(|types|) keys by construction.)
-          state.update(s)
-          state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
-          out.iterator
-      }
+        ((ring :+ c).takeRight(4), rep)
+    }
   }
 
   final case class AtrDay(maxKey: Long, hi: Long, lo: Long, cl: Long)
   final case class AtrState(prevClose: Long, hasPrev: Boolean,
-      ring: Vector[Long], open: Map[Long, AtrDay])
+      ring: Vector[Long])
   final case class AtrReport(event_type: String, day: String, tr: Double,
       atr: Double)
+
+  /** The row step of the range twins: the day's integer-cents hi, lo and
+    * close candidate. Per-row cent quantization commutes with min/max
+    * because floor is monotone (the documented ta_atr argument). */
+  private def centsRange[C](carry: C, day: Option[AtrDay],
+      t: Tick[Double]): (C, AtrDay) = {
+    val c = toCents(t.v)
+    (carry, day match {
+      case None => AtrDay(t.ordKey, c, c, c)
+      case Some(p) =>
+        val (mk, cl) =
+          if (t.ordKey > p.maxKey) (t.ordKey, c) else (p.maxKey, p.cl)
+        AtrDay(mk, math.max(p.hi, c), math.min(p.lo, c), cl)
+    })
+  }
 
   /** STREAMING AVERAGE TRUE RANGE — the position-sizing volatility unit
     * live, per (type, UTC day): TR = max(hi−lo, |hi−prev_cl|, |lo−prev_cl|)
     * with its trailing-7-day simple mean, each day emitted exactly once at
-    * watermark close. Live twin of the oracle-checked `ta_atr`
-    * ([[bollingerStream]]'s class). All state is integer CENTS: the open
-    * day's (hi, lo, packed-key close candidate), the previous CLOSED
-    * day's close (first day coalesces to its own close — the batch
-    * convention), and a 6-long TR ring; the mean replays the batch tree
-    * (Σtr/n/100, 1e-6 floor-round). hi/lo/close-candidate updates are
-    * order-free within a batch, so no per-batch sort is needed. */
+    * watermark close. Live twin of the oracle-checked `ta_atr`. All state
+    * is integer CENTS: the open day's (hi, lo, packed-key close
+    * candidate), the previous CLOSED day's close (first day coalesces to
+    * its own close — the batch convention), and a 6-long TR ring; the
+    * mean replays the batch tree (Σtr/n/100, 1e-6 floor-round). */
   def atrStream(events: DataFrame,
       watermark: String = "2 hours",
       idleTimeout: String = "60 days"): Dataset[AtrReport] = {
     import events.sparkSession.implicits._
-    val dayMs = 86400000L
-    val typed = events
-      .select(col("event_type"), col("event_id"), col("ts"),
-        col("value").cast("double"))
-      .withWatermark("ts", watermark)
-      .as[(String, Long, java.sql.Timestamp, Double)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[AtrState, AtrReport](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, rows, state) =>
-          var s = state.getOption
-            .getOrElse(AtrState(0L, hasPrev = false, Vector.empty, Map.empty))
-          var lastMs = 0L
-          rows.foreach { case (_, id, ts, v) =>
-            val ms = ts.getTime
-            lastMs = math.max(lastMs, ms)
-            val us = math.floorDiv(ms, 1000L) * 1000000L + ts.getNanos / 1000L
-            val ordKey = math.floorMod(us, 86400000000L) * 1048576L +
-              math.floorMod(id, 1048576L)
-            val dayKey = math.floorDiv(ms, dayMs) * dayMs
-            val c = math.floor(v * 100 + 0.5).toLong
-            val cur = s.open.get(dayKey) match {
-              case None => AtrDay(ordKey, c, c, c)
-              case Some(p) =>
-                val (mk, cl) =
-                  if (ordKey > p.maxKey) (ordKey, c) else (p.maxKey, p.cl)
-                AtrDay(mk, math.max(p.hi, c), math.min(p.lo, c), cl)
-            }
-            s = s.copy(open = s.open + (dayKey -> cur))
-          }
-          val wm = state.getCurrentWatermarkMs()
-          val out = s.open.keys.toSeq.sorted
-            .takeWhile(k => k + dayMs <= wm)
-            .map { k =>
-              val a = s.open(k)
-              val pc = if (s.hasPrev) s.prevClose else a.cl
-              val tr = math.max(a.hi - a.lo,
-                math.max(math.abs(a.hi - pc), math.abs(a.lo - pc)))
-              val win = s.ring.takeRight(6) :+ tr
-              s = AtrState(a.cl, hasPrev = true,
-                (s.ring :+ tr).takeRight(6), s.open - k)
-              def r6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
-              AtrReport(key, java.time.Instant.ofEpochMilli(k)
-                .atOffset(java.time.ZoneOffset.UTC).toLocalDate.toString,
-                tr.toDouble / 100.0,
-                r6(win.sum.toDouble / win.size.toDouble / 100.0))
-            }
-          // Idle-gap policy: prevClose + the TR ring survive the timeout
-          // (re-arm, never remove) — the batch twin lags prev_close across
-          // calendar gaps, so the first post-gap day must NOT coalesce to
-          // its own close. Shared policy with bollingerStream/ewmaStream;
-          // O(|types|) keys.
-          state.update(s)
-          state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
-          out.iterator
-      }
+    closeOnWatermark[Double, AtrState, AtrDay, AtrReport](events,
+        doubleValue, dayMs, watermark, idleTimeout,
+        AtrState(0L, hasPrev = false, Vector.empty))(centsRange) {
+      (key, k, s, a) =>
+        val pc = if (s.hasPrev) s.prevClose else a.cl
+        val tr = math.max(a.hi - a.lo,
+          math.max(math.abs(a.hi - pc), math.abs(a.lo - pc)))
+        val win = s.ring.takeRight(6) :+ tr
+        (AtrState(a.cl, hasPrev = true, (s.ring :+ tr).takeRight(6)),
+          Some(AtrReport(key, utcDay(k), tr.toDouble / 100.0,
+            round6(win.sum.toDouble / win.size.toDouble / 100.0))))
+    }
   }
 
-  final case class RsiDay(maxKey: Long, close: Double)
   final case class RsiState(prevClose: Long, hasPrev: Boolean,
-      deltas: Vector[Long], open: Map[Long, RsiDay])
+      deltas: Vector[Long])
   final case class RsiReport(event_type: String, day: String,
       gain7: Long, loss7: Long, rsi: Option[Double])
 
   /** STREAMING RSI-7 — the momentum oscillator live, per (type, UTC day):
     * Cutler's SMA form, 100·Σgain/(Σgain+Σloss) over the trailing 7
     * close-to-close moves, each day emitted exactly once at watermark
-    * close. Live twin of the oracle-checked `ta_rsi`
-    * ([[bollingerStream]]'s class). Bit-exactness: the day close is
-    * picked by the SAME packed (µs-in-day, id mod 2²⁰) key; deltas are
-    * exact cent integers; warm-up matches the batch position semantics
-    * (the first day has no delta; emission starts at the 7th delta);
-    * a flat week (Σ = 0) is None in both runtimes (batch nullif). State
-    * per key: prev close + a ≤7-long delta ring + O(open days), and the
-    * idle-gap policy retains the carry across timeouts ([[atrStream]]). */
+    * close. Live twin of the oracle-checked `ta_rsi`. Bit-exactness: the
+    * day close is picked by the SAME packed (µs-in-day, id mod 2²⁰) key;
+    * deltas are exact cent integers; warm-up matches the batch position
+    * semantics (the first day has no delta; emission starts at the 7th
+    * delta); a flat week (Σ = 0) is None in both runtimes (batch nullif).
+    * State per key: prev close + a ≤7-long delta ring + O(open days). */
   def rsiStream(events: DataFrame,
       watermark: String = "2 hours",
       idleTimeout: String = "60 days"): Dataset[RsiReport] = {
     import events.sparkSession.implicits._
-    val dayMs = 86400000L
-    val typed = events
-      .select(col("event_type"), col("event_id"), col("ts"),
-        col("value").cast("double"))
-      .withWatermark("ts", watermark)
-      .as[(String, Long, java.sql.Timestamp, Double)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[RsiState, RsiReport](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, rows, state) =>
-          var s = state.getOption.getOrElse(
-            RsiState(0L, hasPrev = false, Vector.empty, Map.empty))
-          var lastMs = 0L
-          rows.foreach { case (_, id, ts, v) =>
-            val ms = ts.getTime
-            lastMs = math.max(lastMs, ms)
-            val us = math.floorDiv(ms, 1000L) * 1000000L + ts.getNanos / 1000L
-            val ordKey = math.floorMod(us, 86400000000L) * 1048576L +
-              math.floorMod(id, 1048576L)
-            val dayKey = math.floorDiv(ms, dayMs) * dayMs
-            val cur = s.open.get(dayKey) match {
-              case Some(p) if p.maxKey >= ordKey => p
-              case _ => RsiDay(ordKey, v)
-            }
-            s = s.copy(open = s.open + (dayKey -> cur))
+    closeOnWatermark[Double, RsiState, DayClose, RsiReport](events,
+        doubleValue, dayMs, watermark, idleTimeout,
+        RsiState(0L, hasPrev = false, Vector.empty))(lastClose) {
+      (key, k, s, day) =>
+        val c = toCents(day.close)
+        val win =
+          if (s.hasPrev) (s.deltas :+ (c - s.prevClose)).takeRight(7)
+          else s.deltas
+        val rep =
+          if (win.size < 7) None
+          else {
+            val gain = win.map(d => math.max(d, 0L)).sum
+            val loss = win.map(d => math.max(-d, 0L)).sum
+            Some(RsiReport(key, utcDay(k), gain, loss,
+              if (gain + loss == 0L) None
+              else Some(round6(100.0 * gain.toDouble /
+                (gain + loss).toDouble))))
           }
-          val wm = state.getCurrentWatermarkMs()
-          val out = s.open.keys.toSeq.sorted
-            .takeWhile(k => k + dayMs <= wm)
-            .flatMap { k =>
-              val c = math.floor(s.open(k).close * 100 + 0.5).toLong
-              val rep =
-                if (!s.hasPrev) { s = s.copy(open = s.open - k); None }
-                else {
-                  val delta = c - s.prevClose
-                  val win = (s.deltas :+ delta).takeRight(7)
-                  s = s.copy(deltas = win, open = s.open - k)
-                  if (win.size < 7) None
-                  else {
-                    val gain = win.map(d => math.max(d, 0L)).sum
-                    val loss = win.map(d => math.max(-d, 0L)).sum
-                    val rsi =
-                      if (gain + loss == 0L) None
-                      else Some(math.floor(100.0 * gain.toDouble /
-                        (gain + loss).toDouble * 1e6 + 0.5) / 1e6)
-                    Some(RsiReport(key, java.time.Instant.ofEpochMilli(k)
-                      .atOffset(java.time.ZoneOffset.UTC).toLocalDate
-                      .toString, gain, loss, rsi))
-                  }
-                }
-              s = s.copy(prevClose = c, hasPrev = true)
-              rep
-            }
-          // Idle-gap policy: prevClose + the delta ring survive ([[atrStream]])
-          state.update(s)
-          state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
-          out.iterator
-      }
+        (RsiState(c, hasPrev = true, win), rep)
+    }
   }
 
-  final case class MacdDay(maxKey: Long, close: Double)
-  final case class MacdState(closes: Vector[Double], macds: Vector[Double],
-      open: Map[Long, MacdDay])
+  final case class MacdState(closes: Vector[Double], macds: Vector[Double])
   final case class MacdReport(event_type: String, day: String,
       ema_fast: Double, ema_slow: Double, macd: Double, signal: Double,
       hist: Double)
@@ -1564,15 +1471,13 @@ object StreamAssembly {
     * three points (fast, slow, macd → signal input, hist). Day closes
     * are raw doubles picked by the same packed key, so both runtimes
     * feed bit-identical inputs through an identical IEEE tree. State per
-    * key: 16 closes + 4 quantized MACDs + O(open days); the idle-gap
-    * policy retains the rings (batch lags across calendar gaps). */
+    * key: 16 closes + 4 quantized MACDs + O(open days). */
   def macdStream(events: DataFrame,
       watermark: String = "2 hours",
       idleTimeout: String = "60 days"): Dataset[MacdReport] = {
     import events.sparkSession.implicits._
     import graft.ops.MarketOps.{macdFastD, macdSlowD, macdSigD,
       macdFastK, macdSlowK, macdSigK}
-    val dayMs = 86400000L
     // lag(src, j) over the day sequence = ring(size-1-j); ascending-j
     // accumulation replays the batch emaTaps addition order exactly
     def ema(ring: Vector[Double], k: Int, d: Double): Double = {
@@ -1587,132 +1492,53 @@ object StreamAssembly {
       }
       num / den
     }
-    def r6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
-    val typed = events
-      .select(col("event_type"), col("event_id"), col("ts"),
-        col("value").cast("double"))
-      .withWatermark("ts", watermark)
-      .as[(String, Long, java.sql.Timestamp, Double)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[MacdState, MacdReport](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, rows, state) =>
-          var s = state.getOption.getOrElse(
-            MacdState(Vector.empty, Vector.empty, Map.empty))
-          var lastMs = 0L
-          rows.foreach { case (_, id, ts, v) =>
-            val ms = ts.getTime
-            lastMs = math.max(lastMs, ms)
-            val us = math.floorDiv(ms, 1000L) * 1000000L + ts.getNanos / 1000L
-            val ordKey = math.floorMod(us, 86400000000L) * 1048576L +
-              math.floorMod(id, 1048576L)
-            val dayKey = math.floorDiv(ms, dayMs) * dayMs
-            val cur = s.open.get(dayKey) match {
-              case Some(p) if p.maxKey >= ordKey => p
-              case _ => MacdDay(ordKey, v)
-            }
-            s = s.copy(open = s.open + (dayKey -> cur))
-          }
-          val wm = state.getCurrentWatermarkMs()
-          val out = s.open.keys.toSeq.sorted
-            .takeWhile(k => k + dayMs <= wm)
-            .map { k =>
-              val closes = (s.closes :+ s.open(k).close).takeRight(macdSlowK)
-              val fast = r6(ema(closes, macdFastK, macdFastD))
-              val slow = r6(ema(closes, macdSlowK, macdSlowD))
-              val macd = r6(fast - slow)
-              val macds = (s.macds :+ macd).takeRight(macdSigK)
-              s = MacdState(closes, macds, s.open - k)
-              val signal = r6(ema(macds, macdSigK, macdSigD))
-              MacdReport(key, java.time.Instant.ofEpochMilli(k)
-                .atOffset(java.time.ZoneOffset.UTC).toLocalDate.toString,
-                fast, slow, macd, signal, r6(macd - signal))
-            }
-          // Idle-gap policy: close/MACD rings survive ([[bollingerStream]])
-          state.update(s)
-          state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
-          out.iterator
-      }
+    closeOnWatermark[Double, MacdState, DayClose, MacdReport](events,
+        doubleValue, dayMs, watermark, idleTimeout,
+        MacdState(Vector.empty, Vector.empty))(lastClose) {
+      (key, k, s, day) =>
+        val closes = (s.closes :+ day.close).takeRight(macdSlowK)
+        val fast = round6(ema(closes, macdFastK, macdFastD))
+        val slow = round6(ema(closes, macdSlowK, macdSlowD))
+        val macd = round6(fast - slow)
+        val macds = (s.macds :+ macd).takeRight(macdSigK)
+        val signal = round6(ema(macds, macdSigK, macdSigD))
+        (MacdState(closes, macds), Some(MacdReport(key, utcDay(k),
+          fast, slow, macd, signal, round6(macd - signal))))
+    }
   }
 
   final case class StochBar(hi: Long, lo: Long)
-  final case class StochState(ring: Vector[StochBar],
-      open: Map[Long, AtrDay])
   final case class StochReport(event_type: String, day: String,
       close: Double, pct_k: Option[Double])
 
   /** STREAMING STOCHASTIC %K — the range-position oscillator live, per
     * (type, UTC day): 100·(close−L7)/(H7−L7) over the trailing 7 days'
     * hi/lo envelope, each day emitted exactly once at watermark close.
-    * Live twin of the oracle-checked `ta_stoch` ([[atrStream]]'s class —
-    * it even reuses AtrDay's integer-cents day fold; per-row cent
-    * quantization commutes with min/max because floor is monotone, the
-    * documented ta_atr argument). Emits from the first day (the batch
-    * rowsBetween(-6,0) frame has no warm-up filter); a flat 7-day
-    * envelope (H7=L7) is None in both runtimes (batch nullif). State per
-    * key: a ≤6-bar (hi,lo) ring + O(open days); idle-gap policy retains
-    * the ring ([[bollingerStream]]). */
+    * Live twin of the oracle-checked `ta_stoch`; it shares
+    * [[atrStream]]'s integer-cents day fold. Emits from the first day
+    * (the batch rowsBetween(-6,0) frame has no warm-up filter); a flat
+    * 7-day envelope (H7=L7) is None in both runtimes (batch nullif).
+    * State per key: a ≤6-bar (hi,lo) ring + O(open days). */
   def stochStream(events: DataFrame,
       watermark: String = "2 hours",
       idleTimeout: String = "60 days"): Dataset[StochReport] = {
     import events.sparkSession.implicits._
-    val dayMs = 86400000L
-    val typed = events
-      .select(col("event_type"), col("event_id"), col("ts"),
-        col("value").cast("double"))
-      .withWatermark("ts", watermark)
-      .as[(String, Long, java.sql.Timestamp, Double)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[StochState, StochReport](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, rows, state) =>
-          var s = state.getOption.getOrElse(
-            StochState(Vector.empty, Map.empty))
-          var lastMs = 0L
-          rows.foreach { case (_, id, ts, v) =>
-            val ms = ts.getTime
-            lastMs = math.max(lastMs, ms)
-            val us = math.floorDiv(ms, 1000L) * 1000000L + ts.getNanos / 1000L
-            val ordKey = math.floorMod(us, 86400000000L) * 1048576L +
-              math.floorMod(id, 1048576L)
-            val dayKey = math.floorDiv(ms, dayMs) * dayMs
-            val c = math.floor(v * 100 + 0.5).toLong
-            val cur = s.open.get(dayKey) match {
-              case None => AtrDay(ordKey, c, c, c)
-              case Some(p) =>
-                val (mk, cl) =
-                  if (ordKey > p.maxKey) (ordKey, c) else (p.maxKey, p.cl)
-                AtrDay(mk, math.max(p.hi, c), math.min(p.lo, c), cl)
-            }
-            s = s.copy(open = s.open + (dayKey -> cur))
-          }
-          val wm = state.getCurrentWatermarkMs()
-          val out = s.open.keys.toSeq.sorted
-            .takeWhile(k => k + dayMs <= wm)
-            .map { k =>
-              val a = s.open(k)
-              val win = s.ring.takeRight(6) :+ StochBar(a.hi, a.lo)
-              val h7 = win.map(_.hi).max
-              val l7 = win.map(_.lo).min
-              s = StochState((s.ring :+ StochBar(a.hi, a.lo)).takeRight(6),
-                s.open - k)
-              val pct =
-                if (h7 == l7) None
-                else Some(math.floor(100.0 * (a.cl - l7).toDouble /
-                  (h7 - l7).toDouble * 1e6 + 0.5) / 1e6)
-              StochReport(key, java.time.Instant.ofEpochMilli(k)
-                .atOffset(java.time.ZoneOffset.UTC).toLocalDate.toString,
-                a.cl.toDouble / 100.0, pct)
-            }
-          // Idle-gap policy: the (hi,lo) ring survives ([[atrStream]])
-          state.update(s)
-          state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
-          out.iterator
-      }
+    closeOnWatermark[Double, Vector[StochBar], AtrDay, StochReport](events,
+        doubleValue, dayMs, watermark, idleTimeout, Vector.empty)(centsRange) {
+      (key, k, ring, a) =>
+        val bar = StochBar(a.hi, a.lo)
+        val win = ring.takeRight(6) :+ bar
+        val h7 = win.map(_.hi).max
+        val l7 = win.map(_.lo).min
+        val pct =
+          if (h7 == l7) None
+          else Some(round6(100.0 * (a.cl - l7).toDouble / (h7 - l7).toDouble))
+        ((ring :+ bar).takeRight(6),
+          Some(StochReport(key, utcDay(k), a.cl.toDouble / 100.0, pct)))
+    }
   }
 
   final case class RvDay(hasPrev: Boolean, prev: Double, n: Long, ssq: Long)
-  final case class RvState(open: Map[Long, RvDay])
   final case class RvReport(event_type: String, day: String, n_ret: Long,
       rv: Double)
 
@@ -1720,67 +1546,32 @@ object StreamAssembly {
     * (type, UTC day): √Σr² over TICK-to-tick simple returns quantized to
     * the 1e-6 ppm grid, emitted once at watermark close. Live twin of
     * the oracle-checked `ta_rv`. The batch twin's lag partitions by
-    * (type, day) — nothing carries across days, so this is the
-    * [[gapStream]] state class (flush-and-forget; the idle timeout may
-    * remove an emptied key, no retention needed). Per-batch full-µs
-    * (ts, id) sort + the cross-batch in-order feed convention replays
-    * the batch lag order; a zero previous tick NULLs the return out of
-    * both count and sum in both runtimes. State per key: one (prev,
-    * n, Σri²) triple per OPEN day — independent of tick volume. */
+    * (type, day) — nothing carries across days, so (like [[gapStream]])
+    * an idle key is removed once its open days have flushed. The
+    * (ts, id) row order replays the batch lag order; a zero previous tick
+    * NULLs the return out of both count and sum in both runtimes. State
+    * per key: one (prev, n, Σri²) triple per OPEN day — independent of
+    * tick volume. */
   def rvStream(events: DataFrame,
       watermark: String = "2 hours",
       idleTimeout: String = "60 days"): Dataset[RvReport] = {
     import events.sparkSession.implicits._
-    val dayMs = 86400000L
-    val typed = events
-      .select(col("event_type"), col("event_id"), col("ts"),
-        col("value").cast("double"))
-      .withWatermark("ts", watermark)
-      .as[(String, Long, java.sql.Timestamp, Double)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[RvState, RvReport](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, rows, state) =>
-          var s = state.getOption.getOrElse(RvState(Map.empty))
-          var lastMs = 0L
-          rows.toSeq.sortBy(r => (r._3.getTime, r._3.getNanos, r._2))
-            .foreach { case (_, _, ts, v) =>
-              val ms = ts.getTime
-              lastMs = math.max(lastMs, ms)
-              val dayKey = math.floorDiv(ms, dayMs) * dayMs
-              val d = s.open.getOrElse(dayKey,
-                RvDay(hasPrev = false, 0.0, 0L, 0L))
-              val next =
-                if (!d.hasPrev || d.prev == 0.0)
-                  RvDay(hasPrev = true, v, d.n, d.ssq)
-                else {
-                  val ri = math.floor((v / d.prev - 1.0) * 1e6 + 0.5).toLong
-                  RvDay(hasPrev = true, v, d.n + 1L, d.ssq + ri * ri)
-                }
-              s = RvState(s.open + (dayKey -> next))
-            }
-          val wm = state.getCurrentWatermarkMs()
-          val out = s.open.keys.toSeq.sorted
-            .takeWhile(k => k + dayMs <= wm)
-            .map { k =>
-              val d = s.open(k)
-              s = RvState(s.open - k)
-              RvReport(key, java.time.Instant.ofEpochMilli(k)
-                .atOffset(java.time.ZoneOffset.UTC).toLocalDate.toString,
-                d.n,
-                math.floor(math.sqrt(d.ssq.toDouble) / 1e6 * 1e6 + 0.5) / 1e6)
-            }
-          if (state.hasTimedOut && s.open.isEmpty) state.remove()
-          else {
-            state.update(s)
-            state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
-          }
-          out.iterator
-      }
+    closeOnWatermark[Double, NoCarry, RvDay, RvReport](events, doubleValue,
+        dayMs, watermark, idleTimeout, NoCarry()) { (nc, day, t) =>
+      val d = day.getOrElse(RvDay(hasPrev = false, 0.0, 0L, 0L))
+      (nc,
+        if (!d.hasPrev || d.prev == 0.0) RvDay(hasPrev = true, t.v, d.n, d.ssq)
+        else {
+          val ri = math.floor((t.v / d.prev - 1.0) * 1e6 + 0.5).toLong
+          RvDay(hasPrev = true, t.v, d.n + 1L, d.ssq + ri * ri)
+        })
+    } { (key, k, nc, d) =>
+      (nc, Some(RvReport(key, utcDay(k), d.n,
+        round6(math.sqrt(d.ssq.toDouble) / 1e6))))
+    }
   }
 
-  final case class CrossState(ring: Vector[Long], ppos: Long,
-      open: Map[Long, BollDay])
+  final case class CrossState(ring: Vector[Long], ppos: Long)
   final case class CrossAlert(event_type: String, day: String,
       cross_type: String)
 
@@ -1795,69 +1586,32 @@ object StreamAssembly {
     * equal-windows days (rel = 0 by construction while w3 = w7) and
     * touch-and-continue through zero can't false-fire — the batch
     * last(nullif(rel,0), ignoreNulls) frame carried as one long.
-    * State per key: ≤6-close ring + ppos + O(open days); idle-gap
-    * policy retains both ([[bollingerStream]]). */
+    * State per key: ≤6-close ring + ppos + O(open days). */
   def smaCrossStream(events: DataFrame,
       watermark: String = "2 hours",
       idleTimeout: String = "60 days"): Dataset[CrossAlert] = {
     import events.sparkSession.implicits._
-    val dayMs = 86400000L
-    val typed = events
-      .select(col("event_type"), col("event_id"), col("ts"),
-        col("value").cast("double"))
-      .withWatermark("ts", watermark)
-      .as[(String, Long, java.sql.Timestamp, Double)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[CrossState, CrossAlert](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, rows, state) =>
-          var s = state.getOption.getOrElse(
-            CrossState(Vector.empty, 0L, Map.empty))
-          var lastMs = 0L
-          rows.foreach { case (_, id, ts, v) =>
-            val ms = ts.getTime
-            lastMs = math.max(lastMs, ms)
-            val us = math.floorDiv(ms, 1000L) * 1000000L + ts.getNanos / 1000L
-            val ordKey = math.floorMod(us, 86400000000L) * 1048576L +
-              math.floorMod(id, 1048576L)
-            val dayKey = math.floorDiv(ms, dayMs) * dayMs
-            val cur = s.open.get(dayKey) match {
-              case Some(p) if p.maxKey >= ordKey => p
-              case _ => BollDay(ordKey, v)
-            }
-            s = s.copy(open = s.open + (dayKey -> cur))
-          }
-          val wm = state.getCurrentWatermarkMs()
-          val out = s.open.keys.toSeq.sorted
-            .takeWhile(k => k + dayMs <= wm)
-            .flatMap { k =>
-              val c = math.floor(s.open(k).close * 100 + 0.5).toLong
-              val win7 = s.ring.takeRight(6) :+ c
-              val win3 = win7.takeRight(3)
-              val (sf, nf) = (win3.sum, win3.size.toLong)
-              val (ss, ns) = (win7.sum, win7.size.toLong)
-              val rel =
-                if (sf * ns > ss * nf) 1L
-                else if (sf * ns < ss * nf) -1L else 0L
-              val fire = rel != 0L && s.ppos != 0L && s.ppos != rel
-              s = CrossState((s.ring :+ c).takeRight(6),
-                if (rel != 0L) rel else s.ppos, s.open - k)
-              if (fire)
-                Some(CrossAlert(key, java.time.Instant.ofEpochMilli(k)
-                  .atOffset(java.time.ZoneOffset.UTC).toLocalDate.toString,
-                  if (rel == 1L) "golden" else "death"))
-              else None
-            }
-          // Idle-gap policy: ring + last-position survive ([[atrStream]])
-          state.update(s)
-          state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
-          out.iterator
-      }
+    closeOnWatermark[Double, CrossState, DayClose, CrossAlert](events,
+        doubleValue, dayMs, watermark, idleTimeout,
+        CrossState(Vector.empty, 0L))(lastClose) { (key, k, s, day) =>
+      val c = toCents(day.close)
+      val win7 = s.ring.takeRight(6) :+ c
+      val win3 = win7.takeRight(3)
+      val (sf, nf) = (win3.sum, win3.size.toLong)
+      val (ss, ns) = (win7.sum, win7.size.toLong)
+      val rel =
+        if (sf * ns > ss * nf) 1L
+        else if (sf * ns < ss * nf) -1L else 0L
+      val fire = rel != 0L && s.ppos != 0L && s.ppos != rel
+      (CrossState((s.ring :+ c).takeRight(6), if (rel != 0L) rel else s.ppos),
+        if (fire) Some(CrossAlert(key, utcDay(k),
+          if (rel == 1L) "golden" else "death"))
+        else None)
+    }
   }
 
   final case class ObvDay(maxKey: Long, cl: Long, qty: Long)
-  final case class ObvState(prevClose: Long, hasPrev: Boolean, obv: Long,
-      open: Map[Long, ObvDay])
+  final case class ObvState(prevClose: Long, hasPrev: Boolean, obv: Long)
   final case class ObvReport(event_type: String, day: String, qty: Long,
       obv: Long)
 
@@ -1866,70 +1620,38 @@ object StreamAssembly {
     * close-to-close direction, accumulated, emitted at watermark close.
     * Live twin of the oracle-checked `ta_obv` — ALL-integer exactly like
     * the batch query (three-way sign on cent closes, long sums, no
-    * doubles anywhere). First day carries sign 0 in both engines. The
-    * running OBV and prev close survive idle gaps (the cumulative line
-    * must not reset — [[atrStream]]'s retention policy). */
+    * doubles anywhere). First day carries sign 0 in both engines. */
   def obvStream(events: DataFrame,
       watermark: String = "2 hours",
       idleTimeout: String = "60 days"): Dataset[ObvReport] = {
     import events.sparkSession.implicits._
-    val dayMs = 86400000L
-    val typed = events
-      .select(col("event_type"), col("event_id"), col("ts"),
-        col("value").cast("double"),
-        get_json_object(col("props"), "$.k").cast("long"))
-      .withWatermark("ts", watermark)
-      .as[(String, Long, java.sql.Timestamp, Double, Option[Long])]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[ObvState, ObvReport](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, rows, state) =>
-          var s = state.getOption.getOrElse(
-            ObvState(0L, hasPrev = false, 0L, Map.empty))
-          var lastMs = 0L
-          rows.foreach { case (_, id, ts, v, kOpt) =>
-            val ms = ts.getTime
-            lastMs = math.max(lastMs, ms)
-            val us = math.floorDiv(ms, 1000L) * 1000000L + ts.getNanos / 1000L
-            val ordKey = math.floorMod(us, 86400000000L) * 1048576L +
-              math.floorMod(id, 1048576L)
-            val dayKey = math.floorDiv(ms, dayMs) * dayMs
-            val c = math.floor(v * 100 + 0.5).toLong
-            val q = kOpt.getOrElse(0L)
-            val cur = s.open.get(dayKey) match {
-              case None => ObvDay(ordKey, c, q)
-              case Some(p) =>
-                val (mk, cl) =
-                  if (ordKey > p.maxKey) (ordKey, c) else (p.maxKey, p.cl)
-                ObvDay(mk, cl, p.qty + q)
-            }
-            s = s.copy(open = s.open + (dayKey -> cur))
-          }
-          val wm = state.getCurrentWatermarkMs()
-          val out = s.open.keys.toSeq.sorted
-            .takeWhile(k => k + dayMs <= wm)
-            .map { k =>
-              val a = s.open(k)
-              val sgn =
-                if (!s.hasPrev) 0L
-                else if (a.cl > s.prevClose) 1L
-                else if (a.cl < s.prevClose) -1L else 0L
-              val obv = s.obv + sgn * a.qty
-              s = ObvState(a.cl, hasPrev = true, obv, s.open - k)
-              ObvReport(key, java.time.Instant.ofEpochMilli(k)
-                .atOffset(java.time.ZoneOffset.UTC).toLocalDate.toString,
-                a.qty, obv)
-            }
-          // Idle-gap policy: prevClose + the cumulative OBV survive
-          state.update(s)
-          state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
-          out.iterator
-      }
+    val valueAndSize = struct(doubleValue.as("_1"),
+      get_json_object(col("props"), "$.k").cast("long").as("_2"))
+    closeOnWatermark[(Double, Option[Long]), ObvState, ObvDay, ObvReport](
+        events, valueAndSize, dayMs, watermark, idleTimeout,
+        ObvState(0L, hasPrev = false, 0L)) { (s, day, t) =>
+      val c = toCents(t.v._1)
+      val q = t.v._2.getOrElse(0L)
+      (s, day match {
+        case None => ObvDay(t.ordKey, c, q)
+        case Some(p) =>
+          val (mk, cl) =
+            if (t.ordKey > p.maxKey) (t.ordKey, c) else (p.maxKey, p.cl)
+          ObvDay(mk, cl, p.qty + q)
+      })
+    } { (key, k, s, a) =>
+      val sgn =
+        if (!s.hasPrev) 0L
+        else if (a.cl > s.prevClose) 1L
+        else if (a.cl < s.prevClose) -1L else 0L
+      val obv = s.obv + sgn * a.qty
+      (ObvState(a.cl, hasPrev = true, obv),
+        Some(ObvReport(key, utcDay(k), a.qty, obv)))
+    }
   }
 
-  final case class CalmarDay(maxKey: Long, close: Double)
   final case class CalmarState(nDays: Long, cf: Long, peak: Long,
-      maxDd: Option[Double], open: Map[Long, CalmarDay])
+      maxDd: Option[Double])
   final case class CalmarReport(event_type: String, day: String,
       n_days: Long, ann_ret: Double, max_dd: Option[Double],
       calmar: Option[Double])
@@ -1944,69 +1666,31 @@ object StreamAssembly {
     * cent closes by the packed (µs-in-day, id) order key, per-day
     * dd = round6((peak−c)/peak) with a NULL (skipped) dd on a zero
     * peak, linear annualization ((cl/cf − 1)·252/n) on the same IEEE
-    * tree, NULL calmar while the series is drawdown-free. Carry survives
-    * idle gaps ([[atrStream]]'s retention policy — a fund that pauses
-    * trading does not reset its peak). */
+    * tree, NULL calmar while the series is drawdown-free. */
   def calmarStream(events: DataFrame,
       watermark: String = "2 hours",
       idleTimeout: String = "60 days"): Dataset[CalmarReport] = {
     import events.sparkSession.implicits._
-    val dayMs = 86400000L
-    def round6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
-    val typed = events
-      .select(col("event_type"), col("event_id"), col("ts"),
-        col("value").cast("double"))
-      .withWatermark("ts", watermark)
-      .as[(String, Long, java.sql.Timestamp, Double)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[CalmarState, CalmarReport](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, rows, state) =>
-          var s = state.getOption.getOrElse(
-            CalmarState(0L, 0L, 0L, None, Map.empty))
-          var lastMs = 0L
-          rows.foreach { case (_, id, ts, v) =>
-            val ms = ts.getTime
-            lastMs = math.max(lastMs, ms)
-            val us = math.floorDiv(ms, 1000L) * 1000000L + ts.getNanos / 1000L
-            val ordKey = math.floorMod(us, 86400000000L) * 1048576L +
-              math.floorMod(id, 1048576L)
-            val dayKey = math.floorDiv(ms, dayMs) * dayMs
-            val cur = s.open.get(dayKey) match {
-              case Some(p) if p.maxKey >= ordKey => p
-              case _ => CalmarDay(ordKey, v)
-            }
-            s = s.copy(open = s.open + (dayKey -> cur))
-          }
-          val wm = state.getCurrentWatermarkMs()
-          val out = s.open.keys.toSeq.sorted
-            .takeWhile(k => k + dayMs <= wm)
-            .map { k =>
-              val c = math.floor(s.open(k).close * 100 + 0.5).toLong
-              val n = s.nDays + 1
-              val cf = if (s.nDays == 0L) c else s.cf
-              val peak = math.max(s.peak, c)
-              // batch: dd = round6((peak − c)/peak), NULL when peak = 0
-              // (max() then ignores it)
-              val maxDd =
-                if (peak == 0L) s.maxDd
-                else {
-                  val dd = round6((peak - c).toDouble / peak.toDouble)
-                  Some(s.maxDd.fold(dd)(math.max(_, dd)))
-                }
-              s = CalmarState(n, cf, peak, maxDd, s.open - k)
-              val ann = (c.toDouble / cf.toDouble - 1.0) * 252.0 / n.toDouble
-              CalmarReport(key, java.time.Instant.ofEpochMilli(k)
-                .atOffset(java.time.ZoneOffset.UTC).toLocalDate.toString,
-                n, round6(ann),
-                maxDd,
-                maxDd.filter(_ != 0.0).map(d => round6(ann / d)))
-            }
-          // Idle-gap policy: first close / peak / max-dd carry survives
-          state.update(s)
-          state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
-          out.iterator
-      }
+    closeOnWatermark[Double, CalmarState, DayClose, CalmarReport](events,
+        doubleValue, dayMs, watermark, idleTimeout,
+        CalmarState(0L, 0L, 0L, None))(lastClose) { (key, k, s, day) =>
+      val c = toCents(day.close)
+      val n = s.nDays + 1
+      val cf = if (s.nDays == 0L) c else s.cf
+      val peak = math.max(s.peak, c)
+      // batch: dd = round6((peak − c)/peak), NULL when peak = 0
+      // (max() then ignores it)
+      val maxDd =
+        if (peak == 0L) s.maxDd
+        else {
+          val dd = round6((peak - c).toDouble / peak.toDouble)
+          Some(s.maxDd.fold(dd)(math.max(_, dd)))
+        }
+      val ann = (c.toDouble / cf.toDouble - 1.0) * 252.0 / n.toDouble
+      (CalmarState(n, cf, peak, maxDd),
+        Some(CalmarReport(key, utcDay(k), n, round6(ann), maxDd,
+          maxDd.filter(_ != 0.0).map(d => round6(ann / d)))))
+    }
   }
 
   /** STREAMING WEEKLY ACTIVITY HEATMAP — the (day-of-week × hour) volume
@@ -2033,8 +1717,7 @@ object StreamAssembly {
         col("dow"), col("hour"), col("cnt"))
 
   final case class MonoHour(n: Long, inversions: Long)
-  final case class MonoState(runmax: Long, hasMax: Boolean,
-      open: Map[Long, MonoHour])
+  final case class MonoState(runmax: Long, hasMax: Boolean)
   final case class MonoReport(event_type: String, hour_ms: Long, n: Long,
       inversions: Long)
 
@@ -2047,54 +1730,29 @@ object StreamAssembly {
     * unbounded-preceding frame), counts bucket into the row's event-time
     * hour, and each hour emits exactly once at watermark close — so the
     * per-type sum over emitted hours equals the batch (n, inversions)
-    * row exactly (spec-asserted). Rows apply in full-µs (ts, id) order
-    * per micro-batch; cross-batch in-order feed, the [[cusumStream]]
-    * convention. State per key: one long + O(open hours). The idle-gap
-    * policy retains runmax — a post-gap replay must still be seen as an
-    * inversion, exactly as the batch frame sees it. */
+    * row exactly (spec-asserted). State per key: one long + O(open
+    * hours). */
   def monotonicStream(events: DataFrame,
       watermark: String = "2 hours",
       idleTimeout: String = "60 days"): Dataset[MonoReport] = {
     import events.sparkSession.implicits._
-    val hourMs = 3600000L
-    val typed = events
-      .select(col("event_type"), col("event_id"), col("ts"))
-      .withWatermark("ts", watermark)
-      .as[(String, Long, java.sql.Timestamp)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[MonoState, MonoReport](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, rows, state) =>
-          var s = state.getOption.getOrElse(
-            MonoState(Long.MinValue, hasMax = false, Map.empty))
-          var lastMs = 0L
-          rows.toSeq
-            .sortBy(r => (r._3.getTime, r._3.getNanos, r._2))
-            .foreach { case (_, id, ts) =>
-              val ms = ts.getTime
-              lastMs = math.max(lastMs, ms)
-              val h = math.floorDiv(ms, hourMs) * hourMs
-              val inv = if (s.hasMax && id < s.runmax) 1L else 0L
-              val c = s.open.getOrElse(h, MonoHour(0L, 0L))
-              s = MonoState(math.max(s.runmax, id), hasMax = true,
-                s.open + (h -> MonoHour(c.n + 1L, c.inversions + inv)))
-            }
-          val wm = state.getCurrentWatermarkMs()
-          val out = s.open.keys.toSeq.sorted
-            .takeWhile(h => h + hourMs <= wm)
-            .map { h =>
-              val c = s.open(h)
-              s = s.copy(open = s.open - h)
-              MonoReport(key, h, c.n, c.inversions)
-            }
-          // Idle-gap policy: runmax survives — post-gap replays must
-          // still read as inversions (the batch unbounded frame)
-          state.update(s)
-          state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
-          out.iterator
-      }
+    closeOnWatermark[Int, MonoState, MonoHour, MonoReport](events, lit(0),
+        3600000L, watermark, idleTimeout,
+        MonoState(Long.MinValue, hasMax = false)) { (s, hour, t) =>
+      val c = hour.getOrElse(MonoHour(0L, 0L))
+      val inv = if (s.hasMax && t.id < s.runmax) 1L else 0L
+      (MonoState(math.max(s.runmax, t.id), hasMax = true),
+        MonoHour(c.n + 1L, c.inversions + inv))
+    } { (key, h, s, c) => (s, Some(MonoReport(key, h, c.n, c.inversions))) }
   }
 
+  /** Shipped reference traffic profile for [[driftStream]] — the baseline
+    * distribution the live mix is compared against (production broadcasts
+    * yesterday's profile; a literal here, the model-artifact convention of
+    * [[graft.ops.TextOps.encPieces]]). Traffic outside the profile falls
+    * into an implicit `other` bucket whose baseline mass is zero — JSD
+    * stays finite by construction, so an unknown event type registers as
+    * drift instead of an error. */
   private[graft] val driftBaseline: Seq[(String, Double)] = Seq(
     "click" -> 0.25, "error" -> 0.05, "purchase" -> 0.20,
     "signup" -> 0.20, "view" -> 0.30)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import scala.jdk.CollectionConverters._
 
@@ -12,12 +13,18 @@ import scala.jdk.CollectionConverters._
   * 100 TB live in `RocksDBStateStoreProvider`, where state crosses a
   * JVM-heap ↔ serialized-bytes boundary every micro-batch — the exact
   * place an Encoder/serialization asymmetry would corrupt a Double or
-  * drop a ring slot. Each test replays the [[StreamIdleGapSpec]]
-  * idle-gap scenario (buffered days, a watermark pump past the 60-day
-  * horizon, a post-gap resume — so the state ALSO survives a timeout
-  * round-trip under RocksDB) and demands row-set equality with the
-  * oracle-checked batch twin, then asserts the state operator really ran
-  * on RocksDB via its custom metrics. */
+  * drop a ring slot. The tests:
+  *  - `rocksParity` (atr, bollinger, rsi, stoch, ewma, macd) and the OBV
+  *    case replay the [[StreamIdleGapSpec]] idle-gap scenario (buffered
+  *    days, a watermark pump past the 60-day horizon, a post-gap resume —
+  *    so the state ALSO survives a timeout round-trip under RocksDB),
+  *    demand row-set equality with the oracle-checked batch twin, then
+  *    assert the state operator really ran on RocksDB via its custom
+  *    metrics;
+  *  - the funnel case pins the lapsed-user carry on RocksDB;
+  *  - the restart case stops each fold twin that has a batch twin after
+  *    the pre-gap batch, with a day still open in state, and finishes the
+  *    scenario in a new query on the same checkpoint. */
 class RocksDbCarryStateSpec extends SparkSpec {
 
   private val base = 1700000000000L // 2023-11-14T22:13:20Z
@@ -98,6 +105,64 @@ class RocksDbCarryStateSpec extends SparkSpec {
     graft.ops.MarketOps.stochOf)
   rocksParity("ewma", StreamAssembly.ewmaStream(_),
     graft.ops.TimeWindows.ewmaOf)
+  rocksParity("macd", StreamAssembly.macdStream(_),
+    graft.ops.MarketOps.macdOf)
+
+  test("fold twins: a restart from checkpoint with a day open matches the batch twin") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val family: Seq[(String, DataFrame => Dataset[_], DataFrame => DataFrame)] =
+      Seq(
+        ("atr", StreamAssembly.atrStream(_), graft.ops.MarketOps.atrOf),
+        ("bollinger", StreamAssembly.bollingerStream(_),
+          graft.ops.MarketOps.bollingerOf),
+        ("rsi", StreamAssembly.rsiStream(_), graft.ops.MarketOps.rsiOf),
+        ("stoch", StreamAssembly.stochStream(_), graft.ops.MarketOps.stochOf),
+        ("macd", StreamAssembly.macdStream(_), graft.ops.MarketOps.macdOf),
+        ("ewma", StreamAssembly.ewmaStream(_), graft.ops.TimeWindows.ewmaOf),
+        ("smaCross", StreamAssembly.smaCrossStream(_),
+          graft.ops.MarketOps.smaCrossOf))
+    withRocksDb {
+      val (before, pump, after) = taRows
+      val sentinel = ("zz_sentinel", 0L, day(500), 0.0)
+      family.foreach { case (name, stream, batch) =>
+        val dir = java.nio.file.Files.createTempDirectory(s"restart_$name")
+        val out = dir.resolve("out").toString
+        val mem = MemoryStream[(String, Long, java.sql.Timestamp, Double)]
+        val events = mem.toDF().toDF("event_type", "event_id", "ts", "value")
+        val schema = stream(events).schema
+        def start() = stream(events).toDF().writeStream.format("parquet")
+          .option("path", out)
+          .option("checkpointLocation", dir.resolve("ckpt").toString)
+          .start()
+        def written = spark.read.schema(schema).parquet(out)
+          .filter($"event_type" === "k").collect().map(_.toSeq.toList).toSet
+        // the watermark after the pre-gap batch stops inside day 14, so
+        // that day is still open in state when the first query stops
+        val first = start()
+        try { mem.addData(before); first.processAllAvailable() }
+        finally first.stop()
+        val beforeStop = written
+        val second = start()
+        try {
+          mem.addData(pump); second.processAllAvailable()
+          mem.addData(after); second.processAllAvailable()
+          mem.addData(sentinel); second.processAllAvailable()
+        } finally second.stop()
+        val got = written
+        val want = batch((before ++ pump ++ after)
+          .toDF("event_type", "event_id", "ts", "value"))
+          .filter($"event_type" === "k").collect()
+          .map(_.toSeq.toList).toSet
+        assert(got == want, s"$name diverged across the restart:\n " +
+          s"stream-only: ${(got diff want).take(3)}\n " +
+          s"batch-only: ${(want diff got).take(3)}")
+        assert(got.nonEmpty, s"$name restart parity is vacuous")
+        assert(beforeStop.subsetOf(got) && beforeStop != got,
+          s"$name: the first query already wrote every row")
+      }
+    }
+  }
 
   test("obvStream: the cumulative OBV line round-trips RocksDB") {
     import spark.implicits._

@@ -2,19 +2,26 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import scala.jdk.CollectionConverters._
 
-/** Regression pins for the r14 idle-gap policy: an EventTimeTimeout only
-  * RE-ARMS — carry state (prevClose/rings/funnel progress) survives the
-  * idle horizon, so a key that resumes after a long-silent gap still
-  * matches its batch twin row for row. Each test drives the timeout for
-  * real: a second key advances the watermark past the 60-day horizon
-  * while the key under test is silent (hasTimedOut is only delivered to
-  * keys with no rows in the batch), then the silent key resumes. Under
-  * the pre-r14 remove-on-timeout behavior every one of these fails:
-  * ATR coalesces prev-close to the post-gap day's own close, Bollinger
-  * forgets the pre-gap closes in its ±2σ window, and the windowed
-  * funnel re-emits a duplicate step-1 row for a lapsed user. */
+/** Regression pins for the idle-gap retention rule of the streaming
+  * folds: when a key's EventTimeTimeout fires, its carry state
+  * (prevClose/rings/trail/funnel progress) survives the idle horizon, so
+  * a key that resumes after a long-silent gap still matches its batch
+  * twin row for row. Each test drives the timeout for real: a second key
+  * advances the watermark past the 60-day horizon while the key under
+  * test is silent (hasTimedOut is only delivered to keys with no rows in
+  * the batch), then the silent key resumes. The tests:
+  *  - ATR, Bollinger and EWMA against their batch twins. Under the
+  *    pre-r14 remove-on-timeout behavior these fail: ATR coalesces
+  *    prev-close to the post-gap day's own close, and Bollinger forgets
+  *    the pre-gap closes in its ±2σ window;
+  *  - the rate monitor's zero-count gap hours, the attribution carry and
+  *    the windowed funnel, which would re-emit a duplicate step-1 row for
+  *    a lapsed user;
+  *  - the other side of the rule: an rv key, which carries nothing
+  *    across days, is removed once its open days flush, and still
+  *    matches its batch twin after it resumes.
+  * The RocksDB runs of the same scenario live in [[RocksDbCarryStateSpec]]. */
 class StreamIdleGapSpec extends SparkSpec {
 
   private val base = 1700000000000L // 2023-11-14T22:13:20Z
@@ -153,46 +160,39 @@ class StreamIdleGapSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("macdStream: bit-exact parity holds unchanged on the RocksDB provider") {
+  test("rvStream: a timed-out key with nothing to carry is removed, then resumes exact") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = StreamAssembly.useRocksDbStateStore(spark)
+    // three ticks a minute apart each day, so every day has returns
+    def ticks(days: Range, v0: Double) = days.flatMap(i => (0 until 3).map(j =>
+      ("k", i * 3L + j, new java.sql.Timestamp(day(i).getTime + j * 60000L),
+        v0 + (i - days.head) + 0.25 * j)))
+    val before = ticks(0 to 4, 10.0)
+    val pump = Seq(("wm_pump", 1000L, day(80), 1.0))
+    val after = ticks(104 to 106, 20.0)
+    val mem = MemoryStream[(String, Long, java.sql.Timestamp, Double)]
+    val events = mem.toDF().toDF("event_type", "event_id", "ts", "value")
+    val q = StreamAssembly.rvStream(events).toDF().writeStream
+      .format("memory").queryName("idlegap_rv").outputMode("append").start()
     try {
-      // the newest flatMapGroupsWithState twin on the scale provider:
-      // the MacdState rings serialize through RocksDB instead of the
-      // executor-heap map, and the output must not move by one ULP
-      val (before, pump, after) = taRows
-      val mem = MemoryStream[(String, Long, java.sql.Timestamp, Double)]
-      val events = mem.toDF().toDF("event_type", "event_id", "ts", "value")
-      val q = StreamAssembly.macdStream(events).toDF()
-        .writeStream.format("memory").queryName("idlegap_macd_rocks")
-        .outputMode("append").start()
-      try {
-        mem.addData(before); q.processAllAvailable()
-        mem.addData(pump); q.processAllAvailable()
-        mem.addData(after); q.processAllAvailable()
-        mem.addData(("zz_sentinel", 0L, day(500), 0.0))
-        q.processAllAvailable()
-        val got = spark.sql("SELECT * FROM idlegap_macd_rocks " +
-          "WHERE event_type = 'k'").collect()
-          .map(r => r.toSeq.toList).toSet
-        val want = graft.ops.MarketOps
-          .macdOf((before ++ pump ++ after)
-            .toDF("event_type", "event_id", "ts", "value"))
-          .filter($"event_type" === "k").collect()
-          .map(r => r.toSeq.toList).toSet
-        assert(got == want, s"RocksDB run diverged:\n stream-only: " +
-          s"${(got diff want).take(3)}\n batch-only: ${(want diff got).take(3)}")
-        val sp = q.lastProgress.stateOperators
-        assert(sp.nonEmpty && sp.head.customMetrics.keySet
-          .asScala.exists(_.startsWith("rocksdb")),
-          "state did not run on RocksDB")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+      mem.addData(before); q.processAllAvailable()
+      mem.addData(pump); q.processAllAvailable()
+      // the timeout flushed days 0..4 and, with no open day and nothing
+      // carried, removed "k": only the pump key is left in state
+      assert(q.lastProgress.stateOperators.head.numRowsTotal == 1,
+        "the silent rv key kept its state across the timeout")
+      mem.addData(after); q.processAllAvailable()
+      mem.addData(("zz_sentinel", 0L, day(500), 0.0))
+      q.processAllAvailable()
+      val got = spark.sql("SELECT * FROM idlegap_rv WHERE event_type = 'k'")
+        .collect().map(_.toSeq.toList).toSet
+      val want = graft.ops.MarketOps.rvOf((before ++ pump ++ after)
+        .toDF("event_type", "event_id", "ts", "value"))
+        .filter($"event_type" === "k").collect().map(_.toSeq.toList).toSet
+      assert(got == want, s"rv diverged after the removal:\n stream-only: " +
+        s"${(got diff want).take(3)}\n batch-only: ${(want diff got).take(3)}")
+      assert(got.size == 8, s"expected 8 closed days, got ${got.size}")
+    } finally q.stop()
   }
 
   test("funnelWindowStream: a lapsed user's return does not re-emit step 1") {
