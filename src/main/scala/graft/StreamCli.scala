@@ -4,12 +4,13 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, date_format, lit, timestamp_millis}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.normalize.Normalizers
-import graft.streaming.{ConsoleSink, JdbcSink, StreamAssembly}
+import graft.streaming.{ConsoleSink, CsvSink, JdbcSink, StreamAssembly}
 
 /** CLI orchestrator — the Spark counterpart of the reference's entry point
   * (liq-stream `stream.py:15-44` argparse + `:90-122` `_resolve_streams` +
@@ -172,23 +173,57 @@ object StreamCli {
     * batch queries read; the reference instead exits — `stream.py:172` —
     * but this sandbox has no PG server to point a DSN at).
     *
-    * One collect feeds every sink: each micro-batch is computed by one
-    * Spark job that collects its rows together with their console lines.
-    * The lines print from those rows, and the same rows, as one local
-    * DataFrame, go to the CSV write and to the JDBC (or parquet) append.
+    * One Spark job per micro-batch: it collects the batch's rows together
+    * with their console lines. The lines print from those rows, and the
+    * same rows feed the CSV and JDBC sinks directly, with no further job
+    * (the parquet stand-in for a missing `--pg-url` is still a Spark
+    * write).
+    *  - CSV: one file per batch, `csv/day=<day>/part-<batchId>.csv`, where
+    *    `<day>` is the batch's `ts_ingest_ms` as a `yyyy-MM-dd` date in
+    *    the session time zone ([[graft.streaming.CsvSink]]). A replay of
+    *    the batch on the same day replaces that file. A replay after
+    *    midnight lands in the next day's directory beside the first
+    *    attempt's file, so the CSV sink stays at-least-once.
+    *  - JDBC: exactly-once per `batch_id`. The replay deletes that batch's
+    *    rows and inserts its own in one transaction.
     *
     * `ts_ingest_ms` is one value per micro-batch, the wall clock when the
     * sink receives the batch; it is not computed in the streaming plan. A
     * batch replayed from the checkpoint is stamped again, so its rows may
     * carry a later stamp than the failed attempt's (earlier the stamp was
-    * the batch timestamp in the offset log). The JDBC sink stays
-    * exactly-once per `batch_id`: the replay replaces that batch's rows.
+    * the batch timestamp in the offset log).
+    *
+    * Checkpoints: the queries started here write their checkpoint and
+    * state files through Hadoop's `FileSystem` rather than `FileContext`,
+    * whose local rename forks `readlink` processes; the session's
+    * previous choice is restored afterwards. The output root is created
+    * with `java.nio`, so it is local and a rename is one `rename(2)`.
     *
     * Returns (csv rows, pg-or-parquet rows) read back from the sinks. */
   def run(spark: SparkSession, args: CliArgs): (Long, Long) = {
     val pairs = resolveStreams(args)
     println(s"[cli] streams: ${pairs.map(p => s"${p._1}:${p._2}").mkString(", ")}")
-    if (args.dryRun) return (0L, 0L)
+    if (args.dryRun) (0L, 0L)
+    else withConf(spark, "spark.sql.streaming.checkpointFileManagerClass",
+      classOf[FileSystemBasedCheckpointFileManager].getName)(drain(spark, args, pairs))
+  }
+
+  /** Sets `key` to `value` on the session for `body`, then restores it. */
+  private def withConf[T](spark: SparkSession, key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally restoreConf(spark, key, prev)
+  }
+
+  /** Puts back a session conf's previous value, or unsets a key that had none. */
+  private def restoreConf(spark: SparkSession, key: String, prev: Option[String]): Unit =
+    prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
+
+  private def drain(spark: SparkSession, args: CliArgs,
+      pairs: Seq[(String, String)]): (Long, Long) = {
     // --outdir overrides the root in single-stream mode (stream.py:126-127)
     val root = args.outdir.filter(_ => pairs.size == 1).getOrElse(args.outdirRoot)
     val csvDir = s"$root/csv"; val pqDir = s"$root/parquet"
@@ -207,6 +242,7 @@ object StreamCli {
     else if (writePg)
       println(s"[cli] no --pg-url: PG sink modeled as parquet append at $pqDir")
     val lineCol = ConsoleSink.line(colors = !args.noColor)
+    val timeZone = spark.conf.get("spark.sql.session.timeZone")
     // ts_ingest_ms is stamped on the collected rows, not in the streaming
     // plan: Spark folds current_timestamp into a new literal every
     // micro-batch, which changes the generated class of every union
@@ -224,21 +260,22 @@ object StreamCli {
         // WriterShim order: print, then forward (stream.py:64-87)
         rows.foreach(r => println(r.getString(r.length - 1)))
         if ((writeCsv || writePg) && rows.nonEmpty) {
-          // a local relation: Spark projects it on the driver, so the
-          // stamp compiles no code
-          val batch = spark.createDataFrame(rows.toSeq.asJava, lines.schema)
-            .select(unified.columns.map(c =>
-              if (c == "ts_ingest_ms") lit(ingestMs).as(c) else col(c)).toSeq: _*)
-          if (writeCsv) batch
-            .withColumn("day",
-              date_format(timestamp_millis(col("ts_ingest_ms")), "yyyy-MM-dd"))
-            .write.mode("append").partitionBy("day")
-            .option("header", "true").csv(csvDir)
-          if (useJdbc)
-            // exactly-once: a checkpoint-replayed batch replaces its rows
-            JdbcSink.appendBatchExactlyOnce(batch, batchId, args.pgUrl,
-              args.pgTable, props, args.pgBatch, dialect = dialect)
-          else if (writePg) batch.write.mode("append").parquet(pqDir)
+          // the collected rows in the unified column order, stamped
+          val at = unified.columns.map(c =>
+            if (c == "ts_ingest_ms") -1 else lines.schema.fieldIndex(c))
+          val stamped = rows.toSeq.map(r =>
+            Row.fromSeq(at.toSeq.map(i => if (i < 0) ingestMs else r.get(i))))
+          if (writeCsv)
+            CsvSink.writeBatch(stamped, unified.schema, csvDir, batchId,
+              CsvSink.day(ingestMs, timeZone), timeZone)
+          if (writePg) {
+            // a local relation: collecting it runs no Spark job
+            val batch = spark.createDataFrame(stamped.asJava, unified.schema)
+            if (useJdbc)
+              JdbcSink.appendBatchExactlyOnce(batch, batchId, args.pgUrl,
+                args.pgTable, props, args.pgBatch, dialect = dialect)
+            else batch.write.mode("append").parquet(pqDir)
+          }
         }
       }
       .start()
@@ -282,13 +319,7 @@ object StreamCli {
           .trigger(Trigger.ProcessingTime(args.triggerMs))
           .start()
         try vq.processAllAvailable() finally vq.stop()
-      } finally {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        prev match {
-          case Some(p) => spark.conf.set(key, p)
-          case None => spark.conf.unset(key)
-        }
-      }
+      } finally restoreConf(spark, "spark.sql.streaming.stateStore.providerClass", prev)
       println(s"[cli] vwap rows=${spark.read.parquet(s"$root/vwap").count()} " +
         s"-> $root/vwap")
     }

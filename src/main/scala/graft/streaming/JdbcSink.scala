@@ -1,12 +1,14 @@
 package graft.streaming
 
-import java.sql.{DriverManager, SQLException}
+import java.sql.{DriverManager, SQLException, Types}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType}
 
 /** JDBC sink with DDL bootstrap — the Postgres writer's table/index
-  * bootstrap and batched append (liq-stream `writer_pg.py:23-57,95-137`)
-  * re-expressed on Spark's JDBC writer.
+  * bootstrap and batched append (liq-stream `writer_pg.py:23-57,95-137`):
+  * [[appendBatch]] on Spark's JDBC writer, [[appendBatchExactlyOnce]] as
+  * one transaction over rows the caller already holds.
   *
   * The DDL is dialect-parameterized: [[Postgres]] reproduces the reference's
   * exact types (`writer_pg.py:23-36` — string-locked by spec, unexecuted);
@@ -30,10 +32,13 @@ import org.apache.spark.sql.DataFrame
   * already-exists SQLStates — same observable behavior as the reference's
   * `CREATE TABLE IF NOT EXISTS` bootstrap (`writer_pg.py:123-137`).
   *
-  * Streaming callers wrap [[appendBatch]] in foreachBatch (see
-  * [[StreamAssembly.fanOutSinks]] for the parquet analog); on a cluster the
-  * append inherits per-partition batched inserts (`batchsize` ≈ the
-  * reference's --pg-batch=500) and the connection cap via coalesce.
+  * Streaming callers call either from foreachBatch (see
+  * [[StreamAssembly.fanOutSinks]] for the parquet analog).
+  * [[appendBatchExactlyOnce]] is the reference's flush
+  * (`writer_pg.py:187-215`): one connection, one INSERT batched every
+  * --pg-batch rows. [[appendBatch]] is Spark's per-partition writer
+  * (`batchsize` = --pg-batch, connections capped via coalesce) for batches
+  * too large to collect.
   */
 object JdbcSink {
 
@@ -186,26 +191,58 @@ object JdbcSink {
   /** Exactly-once micro-batch append: a retried batch REPLACES its own
     * rows instead of duplicating them. Structured Streaming re-runs a
     * foreachBatch with the same `batchId` after a failure; deleting that
-    * batch's rows first makes the append idempotent — the delete clears
-    * whatever a half-failed earlier attempt landed, and committed batches
+    * batch's rows first makes the append idempotent, and committed batches
     * are never re-executed, so their rows are never touched. This is the
     * standard rung above [[appendBatch]]'s at-least-once (the reference is
     * at-most-once: failed batches are logged and dropped,
-    * `writer_pg.py:211-215`). Requires the `withBatchId = true` schema;
-    * the delete is driver-side by the indexed batch_id, the insert the
-    * same per-partition batched write as appendBatch. */
+    * `writer_pg.py:211-215`). Requires the `withBatchId = true` schema.
+    *
+    * `df` is collected: pass a batch already held in memory (a local
+    * relation collects without a Spark job). One connection runs
+    * one transaction: `DELETE … WHERE batch_id = ?`, then one INSERT
+    * prepared once and flushed every `batchSize` rows, then commit. Any
+    * error rolls the whole batch back, the delete included, so a failed
+    * replay leaves the earlier attempt's rows in place. */
   def appendBatchExactlyOnce(df: DataFrame, batchId: Long, url: String,
       table: String, props: java.util.Properties, batchSize: Int = 500,
-      maxConnections: Int = 10, dialect: SqlDialect): Unit = {
+      dialect: SqlDialect): Unit = {
+    val fields = df.schema.fields
+    val rows = df.collect()
+    val cols = ("batch_id" +: fields.map(_.name).toSeq).map(dialect.col)
     val conn = DriverManager.getConnection(url, withDialectProps(props, dialect))
     try {
-      val st = conn.createStatement()
-      try st.executeUpdate(
-        s"DELETE FROM $table WHERE ${dialect.col("batch_id")} = $batchId")
-      finally st.close()
+      conn.setAutoCommit(false)
+      try {
+        val del = conn.prepareStatement(
+          s"DELETE FROM $table WHERE ${dialect.col("batch_id")} = ?")
+        try { del.setLong(1, batchId); del.executeUpdate() } finally del.close()
+        val ins = conn.prepareStatement(s"INSERT INTO $table (" +
+          cols.mkString(", ") + ") VALUES (" + cols.map(_ => "?").mkString(", ") + ")")
+        try rows.grouped(batchSize).foreach { chunk =>
+          chunk.foreach { r =>
+            ins.setLong(1, batchId)
+            fields.indices.foreach { i =>
+              if (r.isNullAt(i)) ins.setNull(i + 2, sqlType(fields(i).dataType))
+              else ins.setObject(i + 2, r.get(i))
+            }
+            ins.addBatch()
+          }
+          ins.executeBatch()
+        } finally ins.close()
+        conn.commit()
+      } catch {
+        case e: Throwable =>
+          try conn.rollback() catch { case r: SQLException => e.addSuppressed(r) }
+          throw e
+      }
     } finally conn.close()
-    appendBatch(
-      df.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId)),
-      url, table, props, batchSize, maxConnections, dialect)
+  }
+
+  /** JDBC type of a NULL bound for a unified-schema column. */
+  private def sqlType(dt: DataType): Int = dt match {
+    case StringType => Types.VARCHAR
+    case DoubleType => Types.DOUBLE
+    case LongType => Types.BIGINT
+    case other => throw new IllegalArgumentException(s"no JDBC binding for $other")
   }
 }

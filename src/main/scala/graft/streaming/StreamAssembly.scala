@@ -21,10 +21,11 @@ import graft.normalize.Normalizers
   *  - the size∨interval batched PG flush (`writer_pg.py:187-215`) is
   *    foreachBatch + Trigger.ProcessingTime — the micro-batch IS the batch;
   *  - the console+CSV+PG fan-out behind one queue (`stream.py:47-87`) is one
-  *    foreachBatch whose single collect feeds every sink
+  *    foreachBatch whose single collect is the batch's only Spark job
   *    ([[graft.StreamCli.run]]): the console prints the collected rows,
-  *    and the same rows, as one local DataFrame stamped with the batch's
-  *    `ts_ingest_ms`, go to the CSV and JDBC writes;
+  *    and the same rows, stamped with the batch's `ts_ingest_ms`, are
+  *    written directly as one CSV file ([[CsvSink]]) and one JDBC
+  *    transaction ([[JdbcSink.appendBatchExactlyOnce]]);
   *  - delivery: the reference drops failed batches (at-most-once,
   *    `writer_pg.py:211-215`); foreachBatch + checkpoint gives at-least-once
   *    into idempotent sinks — a deliberate upgrade, documented here.

@@ -36,6 +36,10 @@ class StreamCliSpec extends SparkSpec {
     framesRoot
   }
 
+  /** Rows as a multiset: each distinct row with its count. */
+  private def multiset(rows: Array[org.apache.spark.sql.Row]) =
+    rows.toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
+
   test("resolveStreams: --all roster, ex:mk list, single pair, market rewrites") {
     import StreamCli._
     assert(resolveStreams(CliArgs(all = true)) == allPairs)
@@ -167,9 +171,10 @@ class StreamCliSpec extends SparkSpec {
     val url = "jdbc:derby:memory:cli_mb;create=true"
     val console = new ByteArrayOutputStream()
     val t0 = System.currentTimeMillis()
-    val (csvRows, pgRows) = Console.withOut(new PrintStream(console, true, "UTF-8"))(
-      StreamCli.run(spark, StreamCli.CliArgs(all = true, framesRoot = framesRoot,
-        outdirRoot = out, triggerMs = 100L, noColor = true, pgUrl = url)))
+    val ((csvRows, pgRows), jobs) = MicroBatchPlans.jobsByBatch(spark)(
+      Console.withOut(new PrintStream(console, true, "UTF-8"))(
+        StreamCli.run(spark, StreamCli.CliArgs(all = true, framesRoot = framesRoot,
+          outdirRoot = out, triggerMs = 100L, noColor = true, pgUrl = url))))
     val t1 = System.currentTimeMillis()
     val jdbc = spark.read.jdbc(url, "liquidations", new java.util.Properties())
     val jdbcRows = jdbc.collect()
@@ -185,11 +190,12 @@ class StreamCliSpec extends SparkSpec {
     }
     assert(stamps.toSet.size == byBatch.size, s"batches share a stamp: $stamps")
     assert(stamps.forall(ts => ts >= t0 && ts <= t1), s"stamps $stamps outside the run")
+    // one Spark job per batch with rows: the collect; the CSV and JDBC
+    // sinks write the collected rows without another job
+    byBatch.keys.foreach(b => assert(jobs.get(b).contains(1), s"batch $b ran jobs $jobs"))
     // CSV holds the same rows as JDBC, ts_ingest_ms included, so each CSV
     // row carries its batch's stamp too
     val cols = Schemas.unified.fieldNames.map(col)
-    def multiset(rs: Array[org.apache.spark.sql.Row]) =
-      rs.toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
     val csv = spark.read.option("header", "true").schema(Schemas.unified)
       .csv(s"$out/csv")
     assert(multiset(csv.select(cols: _*).collect()) ==
@@ -206,6 +212,40 @@ class StreamCliSpec extends SparkSpec {
     val printed = console.toString("UTF-8").split("\n")
       .count(l => l.startsWith("[") && !l.startsWith("[cli]"))
     assert(printed == jdbcRows.length)
+  }
+
+  test("a replayed batch duplicates no sink rows: JDBC and CSV keep the first run's rows") {
+    val framesRoot = allFrames("cli_replay_frames", binanceFrames = 1200)
+    val out = tmp("cli_replay_out")
+    val url = "jdbc:derby:memory:cli_replay;create=true"
+    val args = StreamCli.CliArgs(all = true, framesRoot = framesRoot,
+      outdirRoot = out, triggerMs = 100L, noColor = true, pgUrl = url)
+    val quiet = new PrintStream(OutputStream.nullOutputStream())
+    val cols = Schemas.unified.fieldNames.filterNot(_ == "ts_ingest_ms").map(col)
+    def sinks() = (
+      multiset(spark.read.jdbc(url, "liquidations", new java.util.Properties())
+        .select(cols: _*).collect()),
+      multiset(spark.read.option("header", "true").schema(Schemas.unified)
+        .csv(s"$out/csv").select(cols: _*).collect()))
+    Console.withOut(quiet)(StreamCli.run(spark, args))
+    val first = sinks()
+    // the last batch reached both sinks, but its commit was lost: the
+    // restart runs it again with the same batch id and the same rows
+    val commits = Paths.get(s"$out/ckpt/commits")
+    val n = Files.list(commits).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.forall(_.isDigit)).map(_.toLong).max
+    val lastRows = spark.read.jdbc(url, "liquidations", new java.util.Properties())
+      .filter(col("batch_id") === n).count()
+    assert(lastRows > 0, s"batch $n wrote no rows, so its replay tests nothing")
+    Files.delete(commits.resolve(n.toString))
+    Files.delete(commits.resolve(s".$n.crc"))
+    Console.withOut(quiet)(StreamCli.run(spark, args))
+    val (jdbcSame, csvSame) = sinks() match { case (j, c) => (j == first._1, c == first._2) }
+    assert(jdbcSame, "the JDBC replay changed the table")
+    assert(csvSame, "the CSV replay changed the files")
+    val files = Files.walk(Paths.get(s"$out/csv")).iterator().asScala
+      .count(_.getFileName.toString == s"part-$n.csv")
+    assert(files == 1, s"batch $n has $files CSV files")
   }
 
   test("no per-batch value reaches the optimized plan of the main ingest query") {

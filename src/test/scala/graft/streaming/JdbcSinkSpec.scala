@@ -132,6 +132,28 @@ class JdbcSinkSpec extends SparkSpec {
     assert(back.filter(col("batch_id") === 2L).count() == 2 * n)
   }
 
+  test("derby: a failed replay rolls back its delete, the first attempt's rows stay") {
+    val tbl = "liq_eo_rollback"
+    JdbcSink.ensureSchema(url, tbl, props, JdbcSink.Derby, withBatchId = true)
+    import spark.implicits._
+    val unified = Normalizers.binance(
+      Fixtures.binance.toDF("raw"), "usdt",
+      ingestMs = org.apache.spark.sql.functions.lit(0L))
+    JdbcSink.appendBatchExactlyOnce(unified, 0L, url, tbl, props,
+      dialect = JdbcSink.Derby)
+    def rows() = spark.read.jdbc(url, tbl, props).collect().map(_.toSeq)
+      .groupBy(identity).map { case (k, v) => k -> v.size }
+    val first = rows()
+    // the replay carries the batch again, then one row that breaks the
+    // NOT NULL on symbol; with batchSize = 2 some inserts run before it
+    val bad = unified.limit(1)
+      .withColumn("symbol", org.apache.spark.sql.functions.lit(null).cast("string"))
+    intercept[Exception](JdbcSink.appendBatchExactlyOnce(
+      unified.unionByName(bad).coalesce(1), 0L, url, tbl, props, batchSize = 2,
+      dialect = JdbcSink.Derby))
+    assert(rows() == first, "the failed replay must leave batch 0 as committed")
+  }
+
   test("derby: raw frames longer than 4 KB insert (LONG VARCHAR payload column)") {
     // real WS frames (a full !forceOrder@arr array) routinely exceed 4 KB —
     // the payload column must not carry a VARCHAR(4096) bound

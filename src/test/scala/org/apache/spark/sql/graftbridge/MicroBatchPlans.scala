@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{CurrentBatchTimestamp, Expression, ExpressionWithRandomSeed}
 import org.apache.spark.sql.execution.streaming.runtime.IncrementalExecution
@@ -32,6 +32,26 @@ object MicroBatchPlans {
       val out = body
       sc.listenerBus.waitUntilEmpty()
       (out, seen.asScala.toSeq.sortBy(_.currentBatchId))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The Spark jobs each micro-batch started while `body` ran, keyed by
+    * the `streaming.sql.batchId` local property the engine sets on the
+    * thread that runs the batch. Jobs outside any micro-batch are not
+    * counted. */
+  def jobsByBatch[T](spark: SparkSession)(body: => T): (T, Map[Long, Int]) = {
+    val batches = new ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => batches.add(b.toLong): Unit)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.listenerBus.waitUntilEmpty()
+      (out, batches.asScala.toSeq.groupBy(identity).map { case (b, js) => b -> js.size })
     } finally sc.removeSparkListener(listener)
   }
 
