@@ -130,61 +130,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle files and sink temp dirs go to tmpfs: the sandbox's backing
-    // disk periodically degrades to single-digit MB/s under co-tenant load
-    // (measured 7.5 MB/s direct write while the host sat 99% CPU-idle),
-    // which inflates every shuffle-or-sink query 4-10x with zero plan
-    // change — exactly the noise the interleaved-min passes cannot remove
-    // because it is sustained, not a stall. A production cluster provisions
-    // local SSD for the shuffle/scratch role; tmpfs is that assumption at
-    // fixture scale (peak usage ~100 MB at sf0.1 vs the 64 GiB tmpfs).
-    // Fallback: on a host without a writable /dev/shm, keep the default
-    // tmpdir rather than pointing spark.local.dir at a nonexistent path.
-    val shm = new java.io.File("/dev/shm/graft-bench-tmp")
-    val scratch =
-      if (shm.mkdirs() || shm.isDirectory) shm
-      else new java.io.File(System.getProperty("java.io.tmpdir"))
-    System.setProperty("java.io.tmpdir", scratch.getPath) // sink tmp() dirs
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", scratch.getPath) // shuffle + spill
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing sized by BYTES, not padded to core count
-      // (spark_optimization_guide §2.2/§9): with the default
-      // parallelismFirst=true every post-shuffle stage keeps up to
-      // `cpus` ~1 MB partitions, paying ~5 ms of task scheduling per
-      // slot per stage across the whole 321-query surface (A/B on the
-      // 40 heaviest: exec 34.0 s -> 28.5 s). Partition count stays
-      // scale-adaptive — AQE derives it from measured stage output /
-      // advisoryPartitionSizeInBytes (default 64 MB here; a real
-      // cluster would raise the advisory to 256 MB per guide §9), so
-      // at 100 TB stages still fan out to thousands of partitions.
-      // SPARK_GRAFT_BENCH_CONF ("k=v;k=v") can override any session
-      // conf for A/B runs without editing the harness.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.caseSensitive", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // Fail LOUDLY on a malformed segment (a bare token or empty entry
-    // from 'a=b;;c=d' would otherwise die as a cryptic MatchError).
-    sys.env.get("SPARK_GRAFT_BENCH_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => spark.conf.set(k, v)
-        case _ => sys.error(s"bad SPARK_GRAFT_BENCH_CONF entry: '$kv'")
-      }
-    })
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm-up outside the timings: JVM/codegen/file-index startup is not
-    // query cost (first query otherwise absorbs ~6s of session bring-up).
-    Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
-      "region", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    }
+    val cpus = GraftSession.cpus
+    val spark = session(sfDir, cpus)
     // Timing is min-across-INTERLEAVED-passes: the whole query set runs as
     // three complete passes, and each query reports its min across passes.
     // Back-to-back min-of-N (round 2) does not defeat host-level stalls — a
@@ -196,10 +143,9 @@ object Bench {
     // (-1 time + a "failed" list), never as a plausible-looking duration.
     // SPARK_GRAFT_ONLY=q1,q2 narrows the set for focused local timing runs
     // (unset in driver runs — the full set benches).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val keep = GraftSession.only()
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .filter { case (n, _) => keep(n) }
     val passes = 3
     val loadStart = loadAvg()
     // each query's span is (construction, action) — the construction
@@ -233,9 +179,39 @@ object Bench {
       val full = java.nio.file.Paths.get("bench_full.json")
       java.nio.file.Files.write(full,
         (fullJson(results, failed, sfName, loadStart, loadEnd, passTimes,
-          cpus.toInt, constr) + "\n").getBytes("UTF-8"))
+          cpus, constr) + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () } // detail file is best-effort
-    println(report(results, failed, sfName, cpus = cpus.toInt))
+    println(report(results, failed, sfName, cpus = cpus))
     spark.stop()
+  }
+
+  /** Bench's session on `cpus` cores, warmed on `sfDir`'s tables.
+    * Shuffle files and sink temp dirs go to tmpfs: the sandbox's backing
+    * disk periodically degrades to single-digit MB/s under co-tenant load
+    * (measured 7.5 MB/s direct write while the host sat 99% CPU-idle),
+    * which inflates every shuffle-or-sink query 4-10x with zero plan
+    * change — exactly the noise the interleaved-min passes cannot remove
+    * because it is sustained, not a stall. A production cluster provisions
+    * local SSD for the shuffle/scratch role; tmpfs is that assumption at
+    * fixture scale (peak usage ~100 MB at sf0.1 vs the 64 GiB tmpfs).
+    * Fallback: on a host without a writable /dev/shm, keep the default
+    * tmpdir rather than pointing spark.local.dir at a nonexistent path. */
+  def session(sfDir: String, cpus: Int): SparkSession = {
+    val shm = new java.io.File("/dev/shm/graft-bench-tmp")
+    val scratch =
+      if (shm.mkdirs() || shm.isDirectory) shm
+      else new java.io.File(System.getProperty("java.io.tmpdir"))
+    System.setProperty("java.io.tmpdir", scratch.getPath) // sink tmp() dirs
+    val spark = GraftSession.local(cpus,
+      Seq("spark.local.dir" -> scratch.getPath)) // shuffle + spill
+    spark.sparkContext.setLogLevel("WARN")
+    // Warm-up outside the timings: JVM/codegen/file-index startup is not
+    // query cost (first query otherwise absorbs ~6s of session bring-up).
+    Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
+      "region", "events", "documents", "embeddings").foreach { t =>
+      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      catch { case _: Throwable => () }
+    }
+    spark
   }
 }

@@ -335,13 +335,9 @@ object StreamCli {
 
   def main(argv: Array[String]): Unit = {
     val args = parse(argv)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.caseSensitive", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // SPARK_GRAFT_MASTER is a deployment setting: it replaces local[cpus]
+    val spark = GraftSession.local(overrides =
+      sys.env.get("SPARK_GRAFT_MASTER").map("spark.master" -> _).toSeq)
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, args) finally spark.stop()
   }

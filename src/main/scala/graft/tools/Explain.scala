@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev plan-audit harness: prints the executed physical plan for each query
   * named in SPARK_GRAFT_ONLY (all queries when unset) so `.explain` review
   * is one command instead of a REPL session. Not part of the library
@@ -9,28 +7,14 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.caseSensitive", "true")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF ("k=v;k=v") — same A/B override hook as FixedCost,
-    // so a conf experiment's PLAN diff is inspectable, not just its time
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => b.config(k, v): Unit
-        case _ => sys.error(s"bad SPARK_GRAFT_CONF entry: '$kv'")
-      }
-    })
-    val spark = b.getOrCreate()
+    // SPARK_GRAFT_CONF applies here as in Bench, so a conf experiment's
+    // PLAN diff is inspectable, not just its time
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val keep = graft.GraftSession.only()
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .filter { case (n, _) => keep(n) }
       .foreach { case (name, fn) =>
         println(s"\n=== $name ===")
         // FormattedMode == df.explain("formatted"): numbered operator

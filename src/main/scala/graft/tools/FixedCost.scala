@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiling harness: splits each registered query's bench time into
   * driver-side PLANNING (analysis + optimization + physical planning,
   * forced via queryExecution.executedPlan) and EXECUTION (the count job),
@@ -11,37 +9,14 @@ import org.apache.spark.sql.SparkSession
   * those are different fixes (plan-shape / conf work vs job-count work).
   * Not part of the library surface.
   *
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
-  * SPARK_GRAFT_ONLY (comma list to narrow), SPARK_GRAFT_CONF
-  * ("k=v;k=v" extra session confs — for A/B runs).
+  * Runs on Bench's session ([[graft.Bench.session]]), so its numbers are
+  * comparable with Bench's. Env: SPARK_GRAFT_SF_DIR (default sf0.1), and
+  * GraftSession's SPARK_GRAFT_CPUS, SPARK_GRAFT_ONLY and SPARK_GRAFT_CONF.
   */
 object FixedCost {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shm = new java.io.File("/dev/shm/graft-bench-tmp")
-    val scratch =
-      if (shm.mkdirs() || shm.isDirectory) shm
-      else new java.io.File(System.getProperty("java.io.tmpdir"))
-    System.setProperty("java.io.tmpdir", scratch.getPath)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", scratch.getPath)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.caseSensitive", "true")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); b.config(k, v)
-    })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
-      "region", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    }
+    val spark = graft.Bench.session(sfDir, graft.GraftSession.cpus)
     val jobCount = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -49,10 +24,9 @@ object FixedCost {
             j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
           jobCount.incrementAndGet(): Unit
       })
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val keep = graft.GraftSession.only()
     val names = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .filter { case (n, _) => keep(n) }
     val passes = 3
     // per query: min plan time, min exec time, jobs (last pass)
     case class R(plan: Double, exec: Double, jobs: Long)

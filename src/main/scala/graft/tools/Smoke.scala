@@ -1,20 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke main mirroring the driver's t1 check: SparkEntry.entry must
   * return >0 rows on sf0.001. Also prints the physical plan so scan pruning /
   * join strategy can be eyeballed (`.explain("formatted")`). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.caseSensitive", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val df = graft.SparkEntry.entry(spark)
     df.explain("formatted")

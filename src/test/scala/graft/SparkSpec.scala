@@ -4,21 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for specs — same session flags as Verify/Bench
-  * (UTC, case-sensitive struct fields, nano-parquet as long). */
+/** Shared local SparkSession for specs — Bench's session confs through
+  * [[GraftSession.local]], pinned to 4 cores whatever SPARK_GRAFT_CPUS says,
+  * so streaming specs keep 4 state-store partitions on any host. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = { /* shared session: leave running */ }
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.caseSensitive", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession =
+    GraftSession.local(cpus = 4, overrides = Seq("spark.app.name" -> "graft-test"))
 }

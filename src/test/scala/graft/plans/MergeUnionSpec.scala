@@ -111,14 +111,8 @@ class MergeUnionSpec extends SparkSpec {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s2 = SparkSession.builder()
-        .master("local[4]")
-        .withExtensions(new GraftExtensions)
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.caseSensitive", "true")
-        .getOrCreate()
+      val s2 = graft.GraftSession.local(cpus = 4, overrides =
+        Seq("spark.sql.extensions" -> classOf[GraftExtensions].getName))
       val ev = table(s2, dir, "events")
       val u = ev.filter(col("event_type") === "click")
         .union(ev.filter(col("event_type") === "view"))

@@ -8,8 +8,8 @@ import graft.SparkSpec
 import graft.normalize.{Fixtures, Normalizers}
 
 /** Exercises the JDBC sink for real against embedded Derby (ships with
-  * Spark): DDL bootstrap idempotence, batched append through Spark's JDBC
-  * writer, and read-back — the executable twin of the Postgres path
+  * Spark): DDL bootstrap idempotence, the one-transaction batched append,
+  * and read-back — the executable twin of the Postgres path
   * (liq-stream `writer_pg.py:95-137`), which stays string-identical but
   * has no database to run against in this environment. */
 class JdbcSinkSpec extends SparkSpec {
@@ -71,12 +71,12 @@ class JdbcSinkSpec extends SparkSpec {
     assert(m2.getProperty("stringtype") == "unspecified")
   }
 
-  test("derby: ensureSchema bootstraps idempotently, appendBatch round-trips") {
+  test("derby: ensureSchema is idempotent, appendBatchExactlyOnce round-trips") {
     val tbl = "liq_events"
-    JdbcSink.ensureSchema(url, tbl, props, JdbcSink.Derby)
+    JdbcSink.ensureSchema(url, tbl, props, JdbcSink.Derby, withBatchId = true)
     // second bootstrap must be a no-op (IF NOT EXISTS semantics via
     // tolerated already-exists SQLStates)
-    JdbcSink.ensureSchema(url, tbl, props, JdbcSink.Derby)
+    JdbcSink.ensureSchema(url, tbl, props, JdbcSink.Derby, withBatchId = true)
 
     import spark.implicits._
     val unified = Normalizers.binance(
@@ -85,16 +85,17 @@ class JdbcSinkSpec extends SparkSpec {
     val expected = unified.count()
     assert(expected > 0)
 
-    JdbcSink.appendBatch(unified, url, tbl, props, batchSize = 2,
-      dialect = JdbcSink.Derby)
-    // second batch: append mode must not truncate
-    JdbcSink.appendBatch(unified, url, tbl, props, batchSize = 2,
-      dialect = JdbcSink.Derby)
+    JdbcSink.appendBatchExactlyOnce(unified, 0L, url, tbl, props,
+      batchSize = 2, dialect = JdbcSink.Derby)
+    // second batch: the append must not truncate
+    JdbcSink.appendBatchExactlyOnce(unified, 1L, url, tbl, props,
+      batchSize = 2, dialect = JdbcSink.Derby)
 
     val back = spark.read.jdbc(url, tbl, props)
     assert(back.count() == expected * 2)
-    assert(back.columns.toSeq == Seq("exchange", "market", "symbol", "side",
-      "qty", "price", "notional", "ts_exch_ms", "ts_ingest_ms", "raw"))
+    assert(back.columns.toSeq == Seq("batch_id", "exchange", "market",
+      "symbol", "side", "qty", "price", "notional", "ts_exch_ms",
+      "ts_ingest_ms", "raw"))
     assert(back.filter(col("exchange") === "binance").count() == expected * 2)
     // null pattern survives the round-trip (fixtures include a zero-qty
     // event whose notional is null by design)
@@ -122,14 +123,13 @@ class JdbcSinkSpec extends SparkSpec {
     val back = spark.read.jdbc(url, tbl, props)
     assert(back.count() == 2 * n)
     assert(back.filter(col("batch_id") === 0L).count() == n)
-    // the plain at-least-once path would have duplicated: same call twice
-    JdbcSink.appendBatch(unified.withColumn("batch_id",
-      org.apache.spark.sql.functions.lit(2L)), url, tbl, props,
-      dialect = JdbcSink.Derby)
-    JdbcSink.appendBatch(unified.withColumn("batch_id",
-      org.apache.spark.sql.functions.lit(2L)), url, tbl, props,
-      dialect = JdbcSink.Derby)
-    assert(back.filter(col("batch_id") === 2L).count() == 2 * n)
+    // where a plain append would have duplicated batch 2, its replay
+    // replaces only its own rows: batches 0 and 1 are untouched
+    eo(2L)
+    eo(2L)
+    assert(back.groupBy("batch_id").count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(0L -> n, 1L -> n, 2L -> n))
   }
 
   test("derby: a failed replay rolls back its delete, the first attempt's rows stay") {
@@ -158,14 +158,15 @@ class JdbcSinkSpec extends SparkSpec {
     // real WS frames (a full !forceOrder@arr array) routinely exceed 4 KB —
     // the payload column must not carry a VARCHAR(4096) bound
     val tbl = "liq_longraw"
-    JdbcSink.ensureSchema(url, tbl, props, JdbcSink.Derby)
+    JdbcSink.ensureSchema(url, tbl, props, JdbcSink.Derby, withBatchId = true)
     import spark.implicits._
     val bigRaw = "x" * 20000
     val row = Seq(("binance", "usdt", "BTCUSDT", "long", 1.0, 2.0, 2.0,
       1L, 0L, bigRaw))
       .toDF("exchange", "market", "symbol", "side", "qty", "price",
         "notional", "ts_exch_ms", "ts_ingest_ms", "raw")
-    JdbcSink.appendBatch(row, url, tbl, props, dialect = JdbcSink.Derby)
+    JdbcSink.appendBatchExactlyOnce(row, 0L, url, tbl, props,
+      dialect = JdbcSink.Derby)
     val back = spark.read.jdbc(url, tbl, props)
     assert(back.count() == 1)
     assert(back.select("raw").head.getString(0).length == 20000)
