@@ -61,7 +61,7 @@ object EventOps {
   }
 
   /** Conversion window for [[funnelWindow]] — 7 days, in microseconds
-    * (shared with [[graft.streaming.StreamAssembly.funnelStream]], its
+    * (shared with [[graft.streaming.StreamAssembly.funnelWindowStream]], its
     * live twin). */
   private[graft] val funnelWinUs = 7L * 86400000000L
 

@@ -33,9 +33,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType}
   * `CREATE TABLE IF NOT EXISTS` bootstrap (`writer_pg.py:123-137`).
   *
   * Streaming callers call it from foreachBatch (see
-  * [[StreamAssembly.fanOutSinks]] for the parquet analog). It is the
-  * reference's flush (`writer_pg.py:187-215`): one connection, one INSERT
-  * batched every --pg-batch rows.
+  * [[graft.StreamCli.run]]). It is the reference's flush
+  * (`writer_pg.py:187-215`): one connection, one INSERT batched every
+  * --pg-batch rows.
   */
 object JdbcSink {
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import scala.reflect.runtime.universe.TypeTag
 
 import graft.normalize.Normalizers
@@ -183,29 +183,6 @@ object StreamAssembly {
       }
       .start()
 
-  /** Fan-out sink: one micro-batch → daily-partitioned CSV (the rotating
-    * CSVWriter, `writer_csv.py:12-39`) + parquet append (the batched PG
-    * insert path, `writer_pg.py:174-215`; swap for .jdbc on a real cluster).
-    * The batch is persisted once so the two writes scan it once each from
-    * cache, mirroring the reference's single queue feeding both writers. */
-  def fanOutSinks(unified: DataFrame, csvDir: String, parquetDir: String,
-      checkpointDir: String, triggerMs: Long = 1000L): StreamingQuery =
-    unified.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val batch = df.persist()
-        try {
-          batch
-            .withColumn("day", date_format(timestamp_millis(col("ts_ingest_ms")), "yyyy-MM-dd"))
-            .write.mode("append").partitionBy("day")
-            .option("header", "true").csv(csvDir)
-          batch.write.mode("append").parquet(parquetDir)
-        } finally batch.unpersist()
-        ()
-      }
-      .start()
-
   /** Quality QUARANTINE split — the dead-letter pattern the reference
     * approximates with per-row try/except drops (liq-stream
     * `binance_adapter.py:93-94`, `hyperliquid_adapter.py:167-170`): rows
@@ -213,8 +190,8 @@ object StreamAssembly {
     * land in a quarantine sink WITH the machine-readable reason, while
     * valid rows flow to the main sink — so ingest failures are
     * re-driveable (fix the bug, replay the quarantine) instead of gone.
-    * One persisted micro-batch feeds both writes (the [[fanOutSinks]]
-    * move: the split costs one pass, not two source reads), and
+    * One persisted micro-batch feeds both writes (one source read for
+    * both sinks, as in [[graft.StreamCli.run]]), and
     * good ∪ quarantined = input exactly (asserted in StreamingSpec —
     * conservation is the whole point). */
   def quarantineSinks(unified: DataFrame, goodDir: String, badDir: String,
@@ -307,52 +284,29 @@ object StreamAssembly {
   final case class CascadeAlert(symbol: String, count: Long,
       sumNotional: Double, firstTsMs: Long, lastTsMs: Long)
 
-  /** Custom keyed state via flatMapGroupsWithState: per-symbol liquidation
-    * cascade detector — emit an alert once a symbol accumulates
+  /** Per-symbol liquidation cascade detector on keyed state
+    * ([[emitInOrder]]): emit an alert once a symbol accumulates
     * `threshold` liquidations, then reset its counter. This is the state
     * shape windowed aggregation can't express (emit-once-mid-window +
-    * reset). State lives per-key in the state store and expires via an
-    * EVENT-time timeout against the watermark, so it stays bounded and the
-    * query doesn't spin empty wall-clock micro-batches (ProcessingTime
-    * timeouts keep the engine re-triggering; event-time expiry only fires
-    * as the watermark advances with data). */
+    * reset). Rows apply in event-time order, ties broken by the
+    * content hash of the raw frame (the [[candlesOverUnified]] tie-break),
+    * so a reordered micro-batch yields the same alerts. A symbol's state
+    * is removed once the watermark passes its last row plus 30 minutes,
+    * so it stays bounded; event-time expiry only fires as the watermark
+    * advances with data, so the query never spins empty wall-clock
+    * micro-batches. */
   def cascadeAlerts(unified: DataFrame, threshold: Int = 3,
       watermark: String = "10 minutes"): Dataset[CascadeAlert] = {
     import unified.sparkSession.implicits._
-    // the watermarked TimestampType column must survive into the grouped
-    // input — event-time timeout is rejected otherwise
-    val events = unified
-      .select(col("symbol"), col("notional"),
-        timestamp_millis(col("ts_exch_ms")).as("ts_event"))
-      .withWatermark("ts_event", watermark)
-      .as[(String, Option[Double], java.sql.Timestamp)]
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[CascadeState, CascadeAlert](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (symbol, rows, state: GroupState[CascadeState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var s = state.getOption.getOrElse(CascadeState(0L, 0.0, Long.MaxValue))
-            val out = scala.collection.mutable.ArrayBuffer.empty[CascadeAlert]
-            var lastTs = 0L
-            rows.foreach { case (_, notional, tsEvent) =>
-              val ts = tsEvent.getTime
-              lastTs = math.max(lastTs, ts)
-              s = CascadeState(s.count + 1, s.sumNotional + notional.getOrElse(0.0),
-                math.min(s.firstTsMs, ts))
-              if (s.count >= threshold) {
-                out += CascadeAlert(symbol, s.count, s.sumNotional, s.firstTsMs, ts)
-                s = CascadeState(0L, 0.0, Long.MaxValue)
-              }
-            }
-            state.update(s)
-            // expire this key's state once the watermark passes its horizon
-            state.setTimeoutTimestamp(lastTs, "30 minutes")
-            out.iterator
-          }
-      }
+    val reset = CascadeState(0L, 0.0, Long.MaxValue)
+    emitInOrder[String, Option[Double], CascadeState, CascadeAlert](unified,
+        col("symbol"), xxhash64(col("raw")), timestamp_millis(col("ts_exch_ms")),
+        col("notional"), watermark, reset, Some("30 minutes")) { (symbol, s, t) =>
+      val n = CascadeState(s.count + 1, s.sumNotional + t.v.getOrElse(0.0),
+        math.min(s.firstTsMs, t.ms))
+      if (n.count < threshold) (n, None)
+      else (reset, Some(CascadeAlert(symbol, n.count, n.sumNotional, n.firstTsMs, t.ms)))
+    }
   }
 
   /** Stream–static ENRICHMENT join: decorate the live feed with a
@@ -399,11 +353,9 @@ object StreamAssembly {
   final case class CandleAgg(open: Double, openOrd: Long, high: Double,
       low: Double, close: Double, closeOrd: Long, cnt: Long, volCents: Long)
 
-  /** Per-key fill state: candles still open (hour → agg, bounded by the
-    * watermark horizon in hours), the last emitted hour, and its close
-    * (the LOCF value for gap candles). */
-  final case class CandleFillState(openHours: Map[Long, CandleAgg],
-      emittedUpTo: Long, lastClose: Double)
+  /** Per-key fill carry: the last emitted hour (-1 = none yet) and its
+    * close (the LOCF value for gap candles). */
+  final case class CandleFillState(emittedUpTo: Long, lastClose: Double)
 
   /** One emitted hourly candle; `gap = 1` rows are synthesized for silent
     * hours (OHLC pinned to the previous close, zero cnt/volume). */
@@ -417,97 +369,55 @@ object StreamAssembly {
     * including SILENT hours (dashboards and downstream joins break on
     * missing rows; a plain windowed aggregate simply never emits them).
     *
-    * Emission is WATERMARK-driven, not frontier-driven: candles buffer in
-    * keyed state (hour → order-independent [[CandleAgg]]) and an hour
-    * emits only once the watermark passes its end — so a late-but-in-
-    * watermark row still folds into its buffered hour and the emitted
-    * candle equals the batch aggregate regardless of batch cuts or
-    * arrival order (a frontier-driven fold would have emitted the hour
-    * at the first later-hour event and silently lost the late row's
-    * volume). Rows older than an already-emitted hour are beyond the
-    * watermark contract and are dropped — the same rule as every
-    * windowed streaming aggregate. State is bounded by the watermark
-    * horizon in hours per key; emits are bounded by hours elapsed, not
-    * event volume. An event-time timeout flushes whatever the final
-    * watermark already closed and then removes the key's state. */
+    * Emission is WATERMARK-driven, not frontier-driven: a
+    * [[closeOnWatermark]] fold at hour grain buffers each open hour as an
+    * order-independent [[CandleAgg]] and emits it only once the watermark
+    * passes its end — so a late-but-in-watermark row still folds into its
+    * buffered hour and the emitted candle equals the batch aggregate
+    * regardless of batch cuts or arrival order (a frontier-driven fold
+    * would have emitted the hour at the first later-hour event and
+    * silently lost the late row's volume). Closing an hour first emits the
+    * LOCF gap candles since the last emitted hour. Rows older than the
+    * watermark are dropped — the same rule as every windowed streaming
+    * aggregate. State is bounded by the watermark horizon in hours per
+    * key; emits are bounded by hours elapsed, not event volume. */
   def candlesFilledStream(events: DataFrame,
       watermark: String = "2 hours",
       idleTimeout: String = "60 days"): Dataset[FilledCandle] = {
     import events.sparkSession.implicits._
-    val typed = events
-      .select(col("event_type"), col("event_id").cast("long"),
-        col("ts").cast("timestamp").as("ts_event"),
-        unix_micros(col("ts").cast("timestamp")).as("ts_us"),
-        col("value").cast("double"))
-      .withWatermark("ts_event", watermark)
-      .as[(String, Long, java.sql.Timestamp, Long, Double)]
-    val hourUs = 3600L * 1000000L
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[CandleFillState, FilledCandle](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, rows, state: GroupState[CandleFillState]) =>
-          var s = state.getOption.getOrElse(
-            CandleFillState(Map.empty, -1L, 0.0))
-          var lastMs = 0L
-          // fold this batch's rows into their buffered hours (order-free:
-          // open/close resolve by the packed key, sums commute)
-          rows.foreach { case (_, id, tsEvent, tUs, v) =>
-            lastMs = math.max(lastMs, tsEvent.getTime)
-            val hourMs = (tUs / hourUs) * 3600000L
-            if (s.emittedUpTo < 0L || hourMs > s.emittedUpTo) {
-              val ord = (tUs % hourUs) * 2147483648L + (id % 2147483648L)
-              // cents via the DECIMAL string path, not math.round(v*100):
-              // the binary double 0.615*100 is 61.4999… (rounds to 61)
-              // while Spark's double→DECIMAL(18,2) cast goes through the
-              // shortest decimal string ("0.615" → 62) — mirroring that
-              // keeps stream/batch volume parity beyond 2-dp inputs
-              val cents = new java.math.BigDecimal(java.lang.Double.toString(v))
-                .setScale(2, java.math.RoundingMode.HALF_UP)
-                .unscaledValue().longValueExact()
-              val next = s.openHours.get(hourMs) match {
-                case None =>
-                  CandleAgg(v, ord, v, v, v, ord, 1L, cents)
-                case Some(a) => CandleAgg(
-                  if (ord < a.openOrd) v else a.open,
-                  math.min(ord, a.openOrd),
-                  math.max(a.high, v), math.min(a.low, v),
-                  if (ord > a.closeOrd) v else a.close,
-                  math.max(ord, a.closeOrd),
-                  a.cnt + 1L, a.volCents + cents)
-              }
-              s = s.copy(openHours = s.openHours + (hourMs -> next))
-            } // else: older than an emitted hour = beyond watermark, drop
-          }
-          // emit every buffered hour the watermark has closed, oldest
-          // first, with LOCF gap candles between real ones
-          val wm = state.getCurrentWatermarkMs()
-          val out = scala.collection.mutable.ArrayBuffer.empty[FilledCandle]
-          s.openHours.keys.toSeq.sorted
-            .takeWhile(h => h + 3600000L <= wm)
-            .foreach { h =>
-              val a = s.openHours(h)
-              if (s.emittedUpTo >= 0L) {
-                var gh = s.emittedUpTo + 3600000L
-                val c = s.lastClose
-                while (gh < h) {
-                  out += FilledCandle(key, gh, c, c, c, c, 0L, 0.0, 1)
-                  gh += 3600000L
-                }
-              }
-              out += FilledCandle(key, h, a.open, a.high, a.low, a.close,
-                a.cnt, a.volCents / 100.0, 0)
-              s = CandleFillState(s.openHours - h, h, a.close)
-            }
-          // Idle-gap policy (uniform across every carry-state twin here):
-          // the timeout FLUSHES watermark-closed hours but RETAINS the
-          // carry (emittedUpTo + lastClose) and re-arms — dropping it
-          // would skip the LOCF gap candles the batch twin emits when a
-          // long-silent key resumes. Key set is the event-type alphabet,
-          // so retention is O(|types|) state, not O(traffic).
-          state.update(s)
-          state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
-          out.iterator
-      }
+    val hourUs = hourMs * 1000L
+    closeOnWatermark[Double, CandleFillState, CandleAgg, FilledCandle](events,
+        doubleValue, hourMs, watermark, idleTimeout,
+        CandleFillState(-1L, 0.0)) { (carry, hour, t) =>
+      val v = t.v
+      val ord = (t.us % hourUs) * 2147483648L + (t.id % 2147483648L)
+      // cents via the DECIMAL string path, not math.round(v*100): the
+      // binary double 0.615*100 is 61.4999… (rounds to 61) while Spark's
+      // double→DECIMAL(18,2) cast goes through the shortest decimal string
+      // ("0.615" → 62) — mirroring that keeps stream/batch volume parity
+      // beyond 2-dp inputs
+      val cents = new java.math.BigDecimal(java.lang.Double.toString(v))
+        .setScale(2, java.math.RoundingMode.HALF_UP)
+        .unscaledValue().longValueExact()
+      (carry, hour match {
+        case None => CandleAgg(v, ord, v, v, v, ord, 1L, cents)
+        case Some(a) => CandleAgg(
+          if (ord < a.openOrd) v else a.open,
+          math.min(ord, a.openOrd),
+          math.max(a.high, v), math.min(a.low, v),
+          if (ord > a.closeOrd) v else a.close,
+          math.max(ord, a.closeOrd),
+          a.cnt + 1L, a.volCents + cents)
+      })
+    } { (key, h, s, a) =>
+      val c = s.lastClose
+      val gaps =
+        if (s.emittedUpTo < 0L) Nil
+        else (s.emittedUpTo + hourMs until h by hourMs)
+          .map(g => FilledCandle(key, g, c, c, c, c, 0L, 0.0, 1))
+      (CandleFillState(h, a.close), gaps :+ FilledCandle(key, h, a.open,
+        a.high, a.low, a.close, a.cnt, a.volCents / 100.0, 0))
+    }
   }
 
   /** Streaming windowed PERCENTILES — the live-dashboard quantile
@@ -540,60 +450,6 @@ object StreamAssembly {
         element_at(QuantileSketch.values(col("sk"), ps), 2).as("p99"))
   }
 
-  /** Per-user last seen view (-1 = none yet): id + event-time MICROS
-    * (micros, not millis — the batch query's gap is a µs-exact integer
-    * division, and a ms truncation here would round a 999.8 ms gap the
-    * other way). */
-  final case class AttrState(viewId: Long, viewUs: Long)
-
-  /** One attributed purchase (attrId/gapS = -1 for organic conversions —
-    * the streaming row is non-nullable where the batch query used NULL). */
-  final case class AttrTouch(user_id: Long, purchase_id: Long,
-      attr_id: Long, gap_s: Long)
-
-  /** Streaming last-touch attribution —
-    * [[graft.ops.EventOps.attrLastTouch]]'s running-window semantics as
-    * keyed state, emitting the credited view the moment a purchase
-    * arrives (live campaign dashboards want the credit in seconds, not
-    * after the nightly batch). Per-user state is ONE (view id, ts) pair —
-    * the same O(1) the batch plan carries through its window frame — and
-    * idles out via event-time timeout. Rows are applied in event-time
-    * order within each micro-batch, and the view fold is GUARDED on
-    * (ts_us, event_id) monotonicity — a late-but-in-watermark view from a
-    * later micro-batch can never regress the state to a temporally older
-    * touch (flatMapGroupsWithState does not drop late rows itself).
-    *
-    * Contract: purchases emit the moment they arrive, credited to the
-    * latest qualifying view SEEN SO FAR — append mode cannot retract, so a
-    * view that arrives in a later micro-batch than a purchase it precedes
-    * in event time is credit that batch replay would assign and the live
-    * path already missed. ROW-EXACT batch parity therefore requires
-    * event-time-ordered delivery ACROSS micro-batches (what StreamingSpec
-    * feeds); under arbitrary in-watermark reordering the guarantee is the
-    * weaker monotone one above. Exact parity under reordering needs the
-    * [[candlesFilledStream]] buffer-until-watermark shape, at the price of
-    * per-key event buffering and watermark-delayed emission — the wrong
-    * trade for a seconds-latency campaign dashboard.
-    *
-    * Same-instant view/purchase pairs resolve by event_id order via the
-    * (ts, id) sort: the view is credited iff its id sorts before the
-    * purchase's — identical to the batch frame, whose ROWS `1 PRECEDING`
-    * bound over the same (ts, id) ordering includes a same-timestamp view
-    * with a smaller event_id. */
-  /** Streaming WINDOWED TOP-K — the live leaderboard: per (hour, type),
-    * the 3 largest events by value, via the same bounded-heap
-    * [[graft.functions.TopKStructs]] aggregate the batch `topk` query
-    * runs. The heap IS the state-store entry: O(k) per open (window,
-    * type) group, merged across micro-batches exactly like map-side
-    * partials in batch (TypedImperativeAggregate serialize/merge), so a
-    * window that sees a million events still holds 3 rows of state — the
-    * window-function formulation (rank over the window's rows) is not
-    * even expressible in append-mode streaming without buffering the
-    * whole window. Watermark closes windows for append emission;
-    * StreamingSpec asserts row-exact parity against the identical batch
-    * aggregation across a checkpointed multi-batch feed. Descending
-    * value is encoded by negating the cents field (TopKStructs keeps the
-    * lexicographically smallest). */
   /** Running per-key moment state for [[anomalyStream]] — exact integer
     * cents: (n, Σv, Σv²). */
   final case class MomentState(n: Long, s: Long, q: Long)
@@ -607,48 +463,28 @@ object StreamAssembly {
     * exact integer cents, and the 3σ test cross-multiplied so no float
     * enters — (v·n − Σv)² > 9·(n·Σv² − Σv²₀) over BigInts, the dq_drift
     * convention in streaming form. Each event is judged against the
-    * PRE-UPDATE state (a spike never vouches for itself), after a
-    * per-batch (ts, id) sort; like [[attrStream]], cross-batch causality
-    * assumes an in-order feed per key — the watermark bounds lateness
-    * and StreamingSpec drives ordered batches. The batch twin
+    * PRE-UPDATE state (a spike never vouches for itself), in
+    * [[emitInOrder]]'s order: a per-batch (ts, id) sort, rows older than
+    * the watermark dropped, and an in-order feed per key assumed across
+    * batches (StreamingSpec drives ordered batches). The batch twin
     * [[anomalyAgg]] is the identical test over cumulative window sums;
     * parity is row-exact. */
   def anomalyStream(events: DataFrame,
       watermark: String = "10 minutes", minN: Long = 30L): DataFrame = {
     import events.sparkSession.implicits._
-    val typed = events
-      .select(col("event_type"), col("event_id"), col("ts"),
-        (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) *
-          lit(100)).cast("long").as("vc"))
-      .withWatermark("ts", watermark)
-      .as[(String, Long, java.sql.Timestamp, Long)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[MomentState, AnomalyHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, rows, state) =>
-          var st = state.getOption.getOrElse(MomentState(0L, 0L, 0L))
-          // (ms, sub-second nanos, id): getTime alone is millisecond
-          // grain, but the batch twins and their DuckDB oracles apply
-          // rows in full-microsecond (ts_us, event_id) order — two
-          // same-key events inside one millisecond must still apply in
-          // µs order or the accumulator path diverges from the
-          // oracle-verified twin on realistic high-rate feeds.
-          val out = rows.toSeq
-            .sortBy(r => (r._3.getTime, r._3.getNanos, r._2)).flatMap {
-            case (_, id, _, vc) =>
-              val hit =
-                if (st.n >= minN) {
-                  val n = BigInt(st.n); val sm = BigInt(st.s)
-                  val lhs = (BigInt(vc) * n - sm).pow(2)
-                  val rhs = BigInt(9) * (n * BigInt(st.q) - sm.pow(2))
-                  if (lhs > rhs) Some(AnomalyHit(key, id, vc, st.n)) else None
-                } else None
-              st = MomentState(st.n + 1, st.s + vc, st.q + vc * vc)
-              hit
-          }
-          state.update(st)
-          out.iterator
-      }.toDF()
+    emitInOrder[String, Long, MomentState, AnomalyHit](events,
+        col("event_type"), col("event_id"), col("ts"), valueCents, watermark,
+        MomentState(0L, 0L, 0L)) { (key, st, t) =>
+      val vc = t.v
+      val hit =
+        if (st.n >= minN) {
+          val n = BigInt(st.n); val sm = BigInt(st.s)
+          val lhs = (BigInt(vc) * n - sm).pow(2)
+          val rhs = BigInt(9) * (n * BigInt(st.q) - sm.pow(2))
+          if (lhs > rhs) Some(AnomalyHit(key, t.id, vc, st.n)) else None
+        } else None
+      (MomentState(st.n + 1, st.s + vc, st.q + vc * vc), hit)
+    }.toDF()
   }
 
   /** The batch twin: the same integer 3σ test over cumulative window sums
@@ -753,54 +589,32 @@ object StreamAssembly {
     * increments), which the oracle-checked `ts_cusum` query replays in
     * DuckDB — so the oracle verifies this detector's arithmetic. Rows
     * are applied in (ts, id) order within each micro-batch; cross-batch
-    * causality assumes an in-order feed per key (the [[anomalyStream]]
+    * causality assumes an in-order feed per key (the [[emitInOrder]]
     * convention — StreamingSpec drives ordered batches). */
   def cusumStream(events: DataFrame,
       watermark: String = "10 minutes"): DataFrame = {
     import events.sparkSession.implicits._
-    val typed = events
-      .select(col("event_type"), col("event_id"), col("ts"),
-        (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) *
-          lit(100)).cast("long").as("vc"))
-      .withWatermark("ts", watermark)
-      .as[(String, Long, java.sql.Timestamp, Long)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[CusumState, CusumAlarm](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, rows, state) =>
-          var st = state.getOption.getOrElse(CusumState(0L, 0L, 0L, 0L))
-          // (ms, sub-second nanos, id): getTime alone is millisecond
-          // grain, but the batch twins and their DuckDB oracles apply
-          // rows in full-microsecond (ts_us, event_id) order — two
-          // same-key events inside one millisecond must still apply in
-          // µs order or the accumulator path diverges from the
-          // oracle-verified twin on realistic high-rate feeds.
-          val out = rows.toSeq
-            .sortBy(r => (r._3.getTime, r._3.getNanos, r._2)).flatMap {
-            case (_, id, _, vc) =>
-              if (st.n < cusumTrainN) {
-                st = st.copy(n = st.n + 1, sref = st.sref + vc)
-                Nil
-              } else {
-                val kp = cusumSlackPm * st.sref / 1000L
-                val h = cusumThreshX * st.sref
-                val xp = cusumTrainN * vc - st.sref
-                val sp = math.max(0L, st.sp + xp - kp)
-                val sm = math.max(0L, st.sm - xp - kp)
-                val (pp, pm) = (st.sp, st.sm) // pre-update = onset memory
-                st = st.copy(sp = sp, sm = sm)
-                // non-negative operands only: Long / == SQL div here
-                (if (h > 0L && sp > h && pp <= h)
-                  Seq(CusumAlarm(key, id, "up", (sp - h) * 1000L / h))
-                else Nil) ++
-                (if (h > 0L && sm > h && pm <= h)
-                  Seq(CusumAlarm(key, id, "down", (sm - h) * 1000L / h))
-                else Nil)
-              }
-          }
-          state.update(st)
-          out.iterator
-      }.toDF()
+    emitInOrder[String, Long, CusumState, CusumAlarm](events,
+        col("event_type"), col("event_id"), col("ts"), valueCents, watermark,
+        CusumState(0L, 0L, 0L, 0L)) { (key, st, t) =>
+      if (st.n < cusumTrainN) (st.copy(n = st.n + 1, sref = st.sref + t.v), Nil)
+      else {
+        val kp = cusumSlackPm * st.sref / 1000L
+        val h = cusumThreshX * st.sref
+        val xp = cusumTrainN * t.v - st.sref
+        val sp = math.max(0L, st.sp + xp - kp)
+        val sm = math.max(0L, st.sm - xp - kp)
+        // the pre-update accumulators (st.sp, st.sm) are the onset memory;
+        // non-negative operands only: Long / == SQL div here
+        (st.copy(sp = sp, sm = sm),
+          (if (h > 0L && sp > h && st.sp <= h)
+            Seq(CusumAlarm(key, t.id, "up", (sp - h) * 1000L / h))
+          else Nil) ++
+          (if (h > 0L && sm > h && st.sm <= h)
+            Seq(CusumAlarm(key, t.id, "down", (sm - h) * 1000L / h))
+          else Nil))
+      }
+    }.toDF()
   }
 
   /** The batch twin: the identical detector over window functions. The
@@ -872,112 +686,63 @@ object StreamAssembly {
   def hampelStream(events: DataFrame,
       watermark: String = "10 minutes"): DataFrame = {
     import events.sparkSession.implicits._
-    val typed = events
-      .filter(col("value").isNotNull)
-      .select(col("event_type"), col("event_id"), col("ts"),
-        (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) *
-          lit(100)).cast("long").as("vc"))
-      .withWatermark("ts", watermark)
-      .as[(String, Long, java.sql.Timestamp, Long)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[HampelState, HampelHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, rows, state) =>
-          var buf = state.getOption.map(_.buf).getOrElse(Vector.empty)
-          // (ms, sub-second nanos, id): getTime alone is millisecond
-          // grain, but the batch twins and their DuckDB oracles apply
-          // rows in full-microsecond (ts_us, event_id) order — two
-          // same-key events inside one millisecond must still apply in
-          // µs order or the accumulator path diverges from the
-          // oracle-verified twin on realistic high-rate feeds.
-          val out = rows.toSeq
-            .sortBy(r => (r._3.getTime, r._3.getNanos, r._2)).flatMap {
-            case (_, id, _, vc) =>
-              buf = buf :+ ((id, vc))
-              if (buf.size == 5) {
-                val cents = buf.map(_._2)
-                val med = cents.sorted.apply(2)
-                val mad = cents.map(c => math.abs(c - med)).sorted.apply(2)
-                val (cid, cvc) = buf(2)
-                val dev = math.abs(cvc - med)
-                buf = buf.drop(1)
-                if (dev > 3 * mad) Some(HampelHit(key, cid, cvc, med, dev))
-                else None
-              } else None
-          }
-          state.update(HampelState(buf))
-          out.iterator
-      }.toDF()
+    emitInOrder[String, Long, HampelState, HampelHit](
+        events.filter(col("value").isNotNull), col("event_type"),
+        col("event_id"), col("ts"), valueCents, watermark,
+        HampelState(Vector.empty)) { (key, st, t) =>
+      val buf = st.buf :+ ((t.id, t.v))
+      if (buf.size < 5) (HampelState(buf), None)
+      else {
+        val cents = buf.map(_._2)
+        val med = cents.sorted.apply(2)
+        val mad = cents.map(c => math.abs(c - med)).sorted.apply(2)
+        val (cid, cvc) = buf(2)
+        val dev = math.abs(cvc - med)
+        (HampelState(buf.drop(1)),
+          if (dev > 3 * mad) Some(HampelHit(key, cid, cvc, med, dev)) else None)
+      }
+    }.toDF()
   }
 
-  final case class RateState(open: Map[Long, Long], emittedUpTo: Long,
-      trail: Vector[Long])
+  /** Per-key rate carry: the last finalized hour (-1 = none yet) and the
+    * counts of the trailing 7 finalized hours. */
+  final case class RateState(emittedUpTo: Long, trail: Vector[Long])
   final case class RateAlert(event_type: String, hour_ms: Long, cnt: Long,
       trail_sum: Long, n_trail: Long, dropped: Boolean)
 
   /** STREAMING INGEST-RATE MONITOR — [[graft.ops.DataQuality.dqVolume]]'s
     * volume-drop detector run LIVE at hour grain per type: when the
-    * watermark closes an hour, its count is judged against the trailing
-    * 7 finalized hours (drop = 2·cnt·n_trail < Σ_trail, the same exact
-    * integer cross-multiplication), emitted exactly once, and pushed
-    * into the trail. The load-bearing move is GAP EMISSION — the
-    * "feed silently died" hour has NO rows, so no windowed aggregate can
-    * ever flag it; like [[candlesFilledStream]], an event for a later
-    * hour (or the idle timeout advancing past it) finalizes every silent
-    * hour in between at count 0, which is precisely the hour the monitor
-    * exists to page on. State per key is O(open hours + 7) counters —
-    * independent of event volume. Batch twin [[rateAgg]] (grid +
-    * trailing window) is row-exact, spec-asserted. */
+    * watermark closes an hour ([[closeOnWatermark]]), its count is judged
+    * against the trailing 7 finalized hours (drop = 2·cnt·n_trail <
+    * Σ_trail, the same exact integer cross-multiplication), emitted
+    * exactly once, and pushed into the trail. The load-bearing move is GAP
+    * EMISSION — the "feed silently died" hour has NO rows, so no windowed
+    * aggregate can ever flag it; like [[candlesFilledStream]], closing a
+    * later hour (on an event or on the idle timeout) finalizes every
+    * silent hour in between at count 0, which is precisely the hour the
+    * monitor exists to page on. State per key is O(open hours + 7)
+    * counters — independent of event volume. Batch twin [[rateAgg]] (grid
+    * + trailing window) is row-exact, spec-asserted. */
   def rateStream(events: DataFrame,
       watermark: String = "2 hours",
       idleTimeout: String = "60 days"): Dataset[RateAlert] = {
     import events.sparkSession.implicits._
-    val hourMs = 3600000L
-    val typed = events
-      .select(col("event_type"), col("ts").cast("timestamp").as("ts_event"))
-      .withWatermark("ts_event", watermark)
-      .as[(String, java.sql.Timestamp)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[RateState, RateAlert](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, rows, state: GroupState[RateState]) =>
-          var s = state.getOption.getOrElse(
-            RateState(Map.empty, -1L, Vector.empty))
-          var lastMs = 0L
-          rows.foreach { case (_, tsEvent) =>
-            lastMs = math.max(lastMs, tsEvent.getTime)
-            val h = (tsEvent.getTime / hourMs) * hourMs
-            if (s.emittedUpTo < 0L || h > s.emittedUpTo)
-              s = s.copy(open = s.open + (h -> (s.open.getOrElse(h, 0L) + 1L)))
-            // else: older than a finalized hour = beyond watermark, drop
-          }
-          val wm = state.getCurrentWatermarkMs()
-          val out = scala.collection.mutable.ArrayBuffer.empty[RateAlert]
-          def close(h: Long, c: Long): Unit = {
-            val ts = s.trail.sum
-            val nt = s.trail.length.toLong
-            out += RateAlert(key, h, c, ts, nt, nt > 0 && 2L * c * nt < ts)
-            s = s.copy(trail = (s.trail :+ c).takeRight(7), emittedUpTo = h)
-          }
-          s.open.keys.toSeq.sorted
-            .takeWhile(h => h + hourMs <= wm)
-            .foreach { h =>
-              if (s.emittedUpTo >= 0L) {
-                var g = s.emittedUpTo + hourMs
-                while (g < h) { close(g, 0L); g += hourMs }
-              }
-              val c = s.open(h)
-              s = s.copy(open = s.open - h)
-              close(h, c)
-            }
-          // Idle-gap policy: retain emittedUpTo + the 7-hour trail across
-          // the timeout and re-arm — removal would silence the zero-count
-          // gap hours this monitor exists to page on and restart the
-          // trailing baseline, diverging from the batch grid twin.
-          state.update(s)
-          state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
-          out.iterator
+    closeOnWatermark[Int, RateState, Long, RateAlert](events, lit(0), hourMs,
+        watermark, idleTimeout, RateState(-1L, Vector.empty), id = lit(0L)) {
+      (s, n, _) => (s, n.getOrElse(0L) + 1L)
+    } { (key, h, s, cnt) =>
+      val hours =
+        if (s.emittedUpTo < 0L) Seq(h) else s.emittedUpTo + hourMs to h by hourMs
+      var trail = s.trail
+      val out = hours.map { g =>
+        val c = if (g == h) cnt else 0L
+        val ts = trail.sum
+        val nt = trail.length.toLong
+        trail = (trail :+ c).takeRight(7)
+        RateAlert(key, g, c, ts, nt, nt > 0 && 2L * c * nt < ts)
       }
+      (RateState(h, trail), out)
+    }
   }
 
   /** The batch twin: zero-filled hourly grid per type, trailing-7 window
@@ -1015,13 +780,18 @@ object StreamAssembly {
   /** The carry of a fold whose buckets share nothing. */
   private[streaming] final case class NoCarry()
 
-  /** One row as a fold step sees it: event id, event-time ms, the packed
-    * (µs-in-day, id mod 2²⁰) order key by which the batch twins' max_by
-    * picks a day's close, and the projected value. */
-  private[streaming] final case class Tick[V](id: Long, ms: Long,
-      ordKey: Long, v: V)
+  /** One row as a fold step sees it: event id, event-time µs and the
+    * projected value. */
+  private[streaming] final case class Tick[V](id: Long, us: Long, v: V) {
+    def ms: Long = math.floorDiv(us, 1000L)
+    /** The packed (µs-in-day, id mod 2²⁰) order key by which the batch
+      * twins' max_by picks a day's close. */
+    def ordKey: Long =
+      math.floorMod(us, 86400000000L) * 1048576L + math.floorMod(id, 1048576L)
+  }
 
   private val dayMs = 86400000L
+  private val hourMs = 3600000L
 
   private def utcDay(ms: Long): String = java.time.Instant.ofEpochMilli(ms)
     .atOffset(java.time.ZoneOffset.UTC).toLocalDate.toString
@@ -1034,6 +804,34 @@ object StreamAssembly {
 
   private def doubleValue: Column = col("value").cast("double")
 
+  /** `value` as exact integer cents through DECIMAL(18,2), as the batch
+    * twins compute it. */
+  private def valueCents: Column =
+    (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) *
+      lit(100)).cast("long")
+
+  /** The input both folds run on: (key, id, ts, value) rows under the
+    * watermark on ts, grouped by key. The watermarked ts column survives
+    * into the grouped input, which event-time timeouts require. */
+  private def keyed[K: TypeTag: Encoder, V: TypeTag](events: DataFrame,
+      key: Column, id: Column, ts: Column, value: Column, watermark: String) = {
+    import events.sparkSession.implicits._
+    events.select(key, id.cast("long"), ts.cast("timestamp").as("ts"), value)
+      .withWatermark("ts", watermark)
+      .as[(K, Long, java.sql.Timestamp, V)]
+      .groupByKey(_._1)
+  }
+
+  /** A micro-batch's rows as ticks in full-µs (ts, id) order: the order in
+    * which the batch twins and their DuckDB oracles apply rows (ms grain
+    * alone would let two same-key events inside one millisecond apply out
+    * of µs order). */
+  private def inOrder[K, V](rows: Iterator[(K, Long, java.sql.Timestamp, V)])
+      : Seq[Tick[V]] =
+    rows.map { case (_, id, ts, v) =>
+      Tick(id, math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L, v)
+    }.toSeq.sortBy(t => (t.us, t.id))
+
   /** CLOSE-ON-WATERMARK FOLD — the one keyed-state loop behind the
     * bucket-close streaming twins (ONE definition of the scaffolding; each
     * twin keeps its projection, its row step and its close step). Per
@@ -1043,11 +841,14 @@ object StreamAssembly {
     *  - `step(carry, open bucket, tick)` applies one row. Within a
     *    micro-batch rows apply in full-µs (ts, id) order; across
     *    micro-batches the feed is assumed in order per key (the
-    *    [[anomalyStream]] convention). Together these replay the batch
-    *    twins' window order.
+    *    [[emitInOrder]] convention). Together these replay the batch
+    *    twins' window order. Spark drops rows older than the previous
+    *    batch's watermark, so no row reaches an already-closed bucket.
     *  - `close(key, bucket start, carry, bucket)` runs for every open
     *    bucket whose end is at or before the watermark, in start order,
-    *    and returns the next carry and at most one report row.
+    *    and returns the next carry and the bucket's report rows (at most
+    *    one, except where the close also emits the silent buckets before
+    *    it).
     *  - Retention: when a key's idle timeout fires, the key is removed only
     *    if it has no open bucket and its carry equals `init`. Otherwise
     *    the state stays and the timeout re-arms, so a carry (rings,
@@ -1055,37 +856,29 @@ object StreamAssembly {
     *    the batch twins' frames lag across calendar gaps.
     *
     * `value` is the one column `step` reads besides id and time (`lit(0)`
-    * when it reads none). State per key is the carry plus O(open
-    * buckets), independent of event volume. */
+    * when it reads none); `id` defaults to `event_id`. State per key is
+    * the carry plus O(open buckets), independent of event volume. */
   private def closeOnWatermark[V: TypeTag, C, B, R](events: DataFrame,
       value: Column, bucketMs: Long, watermark: String, idleTimeout: String,
-      init: C)(step: (C, Option[B], Tick[V]) => (C, B))(
-      close: (String, Long, C, B) => (C, Option[R]))(
+      init: C, id: Column = col("event_id"))(
+      step: (C, Option[B], Tick[V]) => (C, B))(
+      close: (String, Long, C, B) => (C, IterableOnce[R]))(
       implicit stateEnc: Encoder[FoldState[C, B]],
       outEnc: Encoder[R]): Dataset[R] = {
     import events.sparkSession.implicits._
-    events.select(col("event_type"), col("event_id"), col("ts"), value)
-      .withWatermark("ts", watermark)
-      .as[(String, Long, java.sql.Timestamp, V)]
-      .groupByKey(_._1)
+    keyed[String, V](events, col("event_type"), id, col("ts"), value, watermark)
       .flatMapGroupsWithState[FoldState[C, B], R](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         case (key, rows, state) =>
           var carry = state.getOption.fold(init)(_.carry)
           var open = state.getOption.fold(Map.empty[Long, B])(_.open)
-          var lastMs = 0L
-          rows.toSeq.sortBy(r => (r._3.getTime, r._3.getNanos, r._2))
-            .foreach { case (_, id, ts, v) =>
-              val ms = ts.getTime
-              lastMs = math.max(lastMs, ms)
-              val us = math.floorDiv(ms, 1000L) * 1000000L + ts.getNanos / 1000L
-              val ordKey = math.floorMod(us, 86400000000L) * 1048576L +
-                math.floorMod(id, 1048576L)
-              val k = math.floorDiv(ms, bucketMs) * bucketMs
-              val (c, b) = step(carry, open.get(k), Tick(id, ms, ordKey, v))
-              carry = c
-              open += k -> b
-            }
+          val ticks = inOrder(rows)
+          ticks.foreach { t =>
+            val k = math.floorDiv(t.ms, bucketMs) * bucketMs
+            val (c, b) = step(carry, open.get(k), t)
+            carry = c
+            open += k -> b
+          }
           val wm = state.getCurrentWatermarkMs()
           // an earlier open bucket always ends first, so takeWhile is exact
           val out = open.keys.toSeq.sorted.takeWhile(_ + bucketMs <= wm)
@@ -1099,11 +892,57 @@ object StreamAssembly {
             state.remove()
           else {
             state.update(FoldState(carry, open))
-            state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
+            state.setTimeoutTimestamp(
+              math.max(ticks.lastOption.fold(0L)(_.ms), wm), idleTimeout)
           }
           out.iterator
       }
   }
+
+  /** IN-ORDER EMIT FOLD — the one keyed-state loop behind the per-event
+    * streaming twins (detectors, funnels, attribution, cascades): per
+    * `key`, `step(key, carry, tick)` applies each row and returns the next
+    * carry and the rows it emits, immediately (no watermark wait).
+    *
+    *  - Order: within a micro-batch rows apply in full-µs (ts, id) order;
+    *    across micro-batches the feed is assumed in order per key — the
+    *    watermark bounds lateness and the parity specs drive ordered
+    *    batches. Together these replay the batch twins' window order.
+    *  - Lateness: the fold runs under an event-time timeout, so Spark
+    *    drops rows older than the previous batch's watermark before they
+    *    reach the step; such a row neither emits nor moves the carry.
+    *  - Retention: the carry lives for the life of the query, exactly as
+    *    the batch twins' frames span a key's whole history. A member that
+    *    passes an `idleHorizon` instead has its key removed once the
+    *    watermark passes the key's last row (the batch's max ts for that
+    *    key) plus the horizon.
+    *
+    * State per key is the carry alone, independent of event volume. */
+  private def emitInOrder[K: TypeTag: Encoder, V: TypeTag, C, R](
+      events: DataFrame, key: Column, id: Column, ts: Column, value: Column,
+      watermark: String, init: C, idleHorizon: Option[String] = None)(
+      step: (K, C, Tick[V]) => (C, IterableOnce[R]))(
+      implicit stateEnc: Encoder[C], outEnc: Encoder[R]): Dataset[R] =
+    keyed[K, V](events, key, id, ts, value, watermark)
+      .flatMapGroupsWithState[C, R](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        case (k, rows, state) =>
+          if (state.hasTimedOut) {
+            state.remove()
+            Iterator.empty
+          } else {
+            var carry = state.getOption.getOrElse(init)
+            val ticks = inOrder(rows)
+            val out = ticks.flatMap { t =>
+              val (c, r) = step(k, carry, t)
+              carry = c
+              r
+            }
+            state.update(carry)
+            idleHorizon.foreach(state.setTimeoutTimestamp(ticks.last.ms, _))
+            out.iterator
+          }
+      }
 
   final case class GapDayState(lastMs: Long, maxGap: Long, n: Long)
   final case class GapReport(event_type: String, day: String,
@@ -1246,66 +1085,32 @@ object StreamAssembly {
     * event strictly after the previous step's time and within its 7-day
     * conversion window ([[graft.ops.EventOps.funnelWinUs]] — ONE shared
     * constant, two runtimes). Under the in-order feed convention
-    * (per-batch full-µs sort, the [[ewmaStream]] class) the forward pass
-    * IS min-after-min: the first qualifying event in time order is the
+    * (per-batch full-µs sort, [[emitInOrder]]) the forward pass IS
+    * min-after-min: the first qualifying event in time order is the
     * min, so the emitted set equals the batch frame row for row.
     * Step completions are monotone — never retracted — so hits emit
-    * immediately, no watermark wait; state per user is three longs. */
+    * immediately, no watermark wait. State per user is three longs, kept
+    * for the life of the query: a lapsed user's return never re-emits
+    * step 1. */
   def funnelWindowStream(events: DataFrame,
-      watermark: String = "2 hours",
-      idleTimeout: String = "60 days"): Dataset[FunnelWinHit] = {
+      watermark: String = "2 hours"): Dataset[FunnelWinHit] = {
     import events.sparkSession.implicits._
     val winUs = graft.ops.EventOps.funnelWinUs
-    val typed = events
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      .withWatermark("ts", watermark)
-      .as[(Long, Long, java.sql.Timestamp, String)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[FunnelWinState, FunnelWinHit](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (uid, rows, state) =>
-          var s = state.getOption.getOrElse(FunnelWinState(-1L, -1L, -1L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[FunnelWinHit]
-          var lastMs = 0L
-          rows.toSeq.sortBy(r => (r._3.getTime, r._3.getNanos, r._2))
-            .foreach { case (_, _, ts, et) =>
-              val ms = ts.getTime
-              lastMs = math.max(lastMs, ms)
-              val us = math.floorDiv(ms, 1000L) * 1000000L +
-                ts.getNanos / 1000L
-              et match {
-                case "signup" if s.t1 < 0 =>
-                  s = s.copy(t1 = us)
-                  out += FunnelWinHit(uid, 1, "signup", us)
-                case "view" if s.t1 >= 0 && s.t2 < 0 &&
-                    us > s.t1 && us <= s.t1 + winUs =>
-                  s = s.copy(t2 = us)
-                  out += FunnelWinHit(uid, 2, "view", us)
-                case "purchase" if s.t2 >= 0 && s.t3 < 0 &&
-                    us > s.t2 && us <= s.t2 + winUs =>
-                  s = s.copy(t3 = us)
-                  out += FunnelWinHit(uid, 3, "purchase", us)
-                case _ =>
-              }
-            }
-          val wm = state.getCurrentWatermarkMs()
-          // Idle-gap policy: FunnelWinState (three longs) survives the
-          // timeout — removal would re-emit a duplicate step-1 row when a
-          // lapsed user signs up again, breaking the batch twin's
-          // min-per-user semantics. BOUNDED MECHANISM (r14 advice): this
-          // is a USER-keyed stream, so re-arming on the timeout itself
-          // would fire a 60-day timer per retired user forever — instead
-          // the carry parks timer-less once the timeout fires (the state
-          // is pure carry, nothing left to flush) and the user's next
-          // row re-arms it. State-store cardinality remains the lifetime
-          // user population by design (what the batch twin's full-history
-          // scan also pays); it is observable per batch via the built-in
-          // stateOperators.numRowsTotal progress metric.
-          state.update(s)
-          if (!state.hasTimedOut)
-            state.setTimeoutTimestamp(math.max(lastMs, wm), idleTimeout)
-          out.iterator
+    emitInOrder[Long, String, FunnelWinState, FunnelWinHit](events,
+        col("user_id"), col("event_id"), col("ts"), col("event_type"),
+        watermark, FunnelWinState(-1L, -1L, -1L)) { (uid, s, t) =>
+      t.v match {
+        case "signup" if s.t1 < 0 =>
+          (s.copy(t1 = t.us), Some(FunnelWinHit(uid, 1, "signup", t.us)))
+        case "view" if s.t1 >= 0 && s.t2 < 0 &&
+            t.us > s.t1 && t.us <= s.t1 + winUs =>
+          (s.copy(t2 = t.us), Some(FunnelWinHit(uid, 2, "view", t.us)))
+        case "purchase" if s.t2 >= 0 && s.t3 < 0 &&
+            t.us > s.t2 && t.us <= s.t2 + winUs =>
+          (s.copy(t3 = t.us), Some(FunnelWinHit(uid, 3, "purchase", t.us)))
+        case _ => (s, None)
       }
+    }
   }
 
   /** A day's close candidate: the value at the largest packed order key. */
@@ -1894,6 +1699,20 @@ object StreamAssembly {
           (nD * 1e6), 6).as("entropy_bits"))
   }
 
+  /** Streaming WINDOWED TOP-K — the live leaderboard: per (hour, type),
+    * the 3 largest events by value, via the same bounded-heap
+    * [[graft.functions.TopKStructs]] aggregate the batch `topk` query
+    * runs. The heap IS the state-store entry: O(k) per open (window,
+    * type) group, merged across micro-batches exactly like map-side
+    * partials in batch (TypedImperativeAggregate serialize/merge), so a
+    * window that sees a million events still holds 3 rows of state — the
+    * window-function formulation (rank over the window's rows) is not
+    * even expressible in append-mode streaming without buffering the
+    * whole window. Watermark closes windows for append emission;
+    * StreamingSpec asserts row-exact parity against the identical batch
+    * aggregation across a checkpointed multi-batch feed. Descending
+    * value is encoded by negating the cents field (TopKStructs keeps the
+    * lexicographically smallest). */
   def topkStream(events: DataFrame,
       watermark: String = "10 minutes"): DataFrame =
     topkAgg(events.withWatermark("ts", watermark))
@@ -1913,55 +1732,66 @@ object StreamAssembly {
         expr("transform(top, t -> -t.nvc)").as("top_cents"))
   }
 
-  def attrStream(events: DataFrame, watermark: String = "10 minutes",
-      idleTimeout: String = "60 days"): Dataset[AttrTouch] = {
+  /** Per-user last seen view (-1 = none yet): id + event-time MICROS
+    * (micros, not millis — the batch query's gap is a µs-exact integer
+    * division, and a ms truncation here would round a 999.8 ms gap the
+    * other way). */
+  final case class AttrState(viewId: Long, viewUs: Long)
+
+  /** One attributed purchase (attrId/gapS = -1 for organic conversions —
+    * the streaming row is non-nullable where the batch query used NULL). */
+  final case class AttrTouch(user_id: Long, purchase_id: Long,
+      attr_id: Long, gap_s: Long)
+
+  /** Streaming last-touch attribution —
+    * [[graft.ops.EventOps.attrLastTouch]]'s running-window semantics as
+    * keyed state, emitting the credited view the moment a purchase
+    * arrives (live campaign dashboards want the credit in seconds, not
+    * after the nightly batch). Per-user state is ONE (view id, ts) pair —
+    * the same O(1) the batch plan carries through its window frame — and
+    * lives for the life of the query, since the batch twin attributes a
+    * purchase to the last view at ANY lag. Rows are applied in event-time
+    * order within each micro-batch ([[emitInOrder]]), and the view fold
+    * is GUARDED on (ts_us, event_id) monotonicity — a late-but-in-
+    * watermark view from a later micro-batch can never regress the state
+    * to a temporally older touch (Spark drops only rows older than the
+    * watermark).
+    *
+    * Contract: purchases emit the moment they arrive, credited to the
+    * latest qualifying view SEEN SO FAR — append mode cannot retract, so a
+    * view that arrives in a later micro-batch than a purchase it precedes
+    * in event time is credit that batch replay would assign and the live
+    * path already missed. ROW-EXACT batch parity therefore requires
+    * event-time-ordered delivery ACROSS micro-batches (what StreamingSpec
+    * feeds); under arbitrary in-watermark reordering the guarantee is the
+    * weaker monotone one above. Exact parity under reordering needs the
+    * [[candlesFilledStream]] buffer-until-watermark shape, at the price of
+    * per-key event buffering and watermark-delayed emission — the wrong
+    * trade for a seconds-latency campaign dashboard.
+    *
+    * Same-instant view/purchase pairs resolve by event_id order via the
+    * (ts, id) sort: the view is credited iff its id sorts before the
+    * purchase's — identical to the batch frame, whose ROWS `1 PRECEDING`
+    * bound over the same (ts, id) ordering includes a same-timestamp view
+    * with a smaller event_id. */
+  def attrStream(events: DataFrame,
+      watermark: String = "10 minutes"): Dataset[AttrTouch] = {
     import events.sparkSession.implicits._
-    val typed = events
-      .select(col("user_id").cast("long"), col("event_id").cast("long"),
-        col("event_type"), col("ts").cast("timestamp").as("ts_event"),
-        unix_micros(col("ts").cast("timestamp")).as("ts_us"))
-      .withWatermark("ts_event", watermark)
-      .as[(Long, Long, String, java.sql.Timestamp, Long)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[AttrState, AttrTouch](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (uid, rows, state: GroupState[AttrState]) =>
-          var s = state.getOption.getOrElse(AttrState(-1L, -1L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[AttrTouch]
-          var lastMs = 0L
-          // event-time order within the batch; (ts, id) breaks ties the
-          // same way the batch window's orderBy does
-          rows.toSeq.sortBy(r => (r._5, r._2)).foreach {
-            case (_, eid, typ, tsEvent, tUs) =>
-              lastMs = math.max(lastMs, tsEvent.getTime)
-              typ match {
-                // monotone fold: an out-of-order view arriving after a
-                // newer one (cross-batch) must not regress the state
-                case "view" if tUs > s.viewUs ||
-                  (tUs == s.viewUs && eid > s.viewId) =>
-                  s = AttrState(eid, tUs)
-                case "view" => ()
-                case "purchase" =>
-                  out += (if (s.viewId >= 0L)
-                    AttrTouch(uid, eid, s.viewId, (tUs - s.viewUs) / 1000000L)
-                  else AttrTouch(uid, eid, -1L, -1L))
-                case _ => ()
-              }
-          }
-          // Idle-gap policy: the last-view carry (two longs) survives the
-          // timeout — the batch twin attributes a purchase to the last
-          // view at ANY lag, so forgetting it after 60 idle days would
-          // turn a late conversion organic. Bounded mechanism (r14
-          // advice, the [[funnelWindowStream]] convention): user-keyed,
-          // so the carry parks timer-less after its timeout fires and the
-          // user's next row re-arms — no per-retired-user timer churn;
-          // cardinality observable via stateOperators.numRowsTotal.
-          state.update(s)
-          if (!state.hasTimedOut)
-            state.setTimeoutTimestamp(
-              math.max(lastMs, state.getCurrentWatermarkMs()), idleTimeout)
-          out.iterator
+    emitInOrder[Long, String, AttrState, AttrTouch](events,
+        col("user_id").cast("long"), col("event_id"), col("ts"),
+        col("event_type"), watermark, AttrState(-1L, -1L)) { (uid, s, t) =>
+      t.v match {
+        // monotone fold: an out-of-order view arriving after a newer one
+        // (cross-batch) must not regress the state
+        case "view" if t.us > s.viewUs || (t.us == s.viewUs && t.id > s.viewId) =>
+          (AttrState(t.id, t.us), None)
+        case "purchase" =>
+          (s, Some(if (s.viewId >= 0L)
+            AttrTouch(uid, t.id, s.viewId, (t.us - s.viewUs) / 1000000L)
+          else AttrTouch(uid, t.id, -1L, -1L)))
+        case _ => (s, None)
       }
+    }
   }
 
   /** Per-user funnel progress (epoch-millis per stage; -1 = not reached). */
@@ -1976,58 +1806,32 @@ object StreamAssembly {
     * conversion report: live activation dashboards, drop-off alerting).
     * Per-user state is three epoch-millis — O(1) per user regardless of
     * event volume, sharded by the state store like every keyed state here
-    * (RocksDB for the 100 TB key counts — [[useRocksDbStateStore]]); the
-    * event-time timeout only RE-ARMS — state is retained across idle gaps
-    * so a lapsed user's return cannot re-emit a duplicate stage row
-    * (min-per-user parity with the batch twin). Rows are applied in
-    * event-time order
-    * WITHIN each micro-batch (the sort below); across batches the machine
+    * (RocksDB for the 100 TB key counts — [[useRocksDbStateStore]]);
+    * state lives for the life of the query, so a lapsed user's return
+    * cannot re-emit a duplicate stage row (min-per-user parity with the
+    * batch twin). Rows are applied in event-time order WITHIN each
+    * micro-batch ([[emitInOrder]]); across batches the machine
     * is monotone, so parity with the batch funnel holds when delivery is
     * watermark-ordered — StreamingSpec feeds the real events table in ts
     * order and asserts stage counts match the batch query exactly. The
     * strict `>` comparisons mirror the batch min-after-min semantics
     * (same-instant events never advance two stages). */
-  def funnelStages(events: DataFrame, watermark: String = "10 minutes",
-      idleTimeout: String = "30 minutes"): Dataset[FunnelUpdate] = {
+  def funnelStages(events: DataFrame,
+      watermark: String = "10 minutes"): Dataset[FunnelUpdate] = {
     import events.sparkSession.implicits._
-    val typed = events
-      .select(col("user_id").cast("long"), col("event_type"),
-        col("ts").cast("timestamp").as("ts_event"))
-      .withWatermark("ts_event", watermark)
-      .as[(Long, String, java.sql.Timestamp)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[FunnelState, FunnelUpdate](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (uid, rows, state: GroupState[FunnelState]) =>
-          var s = state.getOption.getOrElse(FunnelState(-1L, -1L, -1L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[FunnelUpdate]
-          var lastTs = 0L
-          rows.toSeq.sortBy(_._3.getTime).foreach { case (_, typ, tsEvent) =>
-            val t = tsEvent.getTime
-            lastTs = math.max(lastTs, t)
-            typ match {
-              case "signup" if s.t1 < 0 =>
-                s = s.copy(t1 = t); out += FunnelUpdate(uid, 1, t)
-              case "view" if s.t1 >= 0 && s.t2 < 0 && t > s.t1 =>
-                s = s.copy(t2 = t); out += FunnelUpdate(uid, 2, t)
-              case "purchase" if s.t2 >= 0 && s.t3 < 0 && t > s.t2 =>
-                s = s.copy(t3 = t); out += FunnelUpdate(uid, 3, t)
-              case _ => ()
-            }
-          }
-          // Idle-gap policy (shared with funnelWindowStream): the
-          // three-long FunnelState survives the timeout — removal would
-          // re-emit duplicate stage rows when a lapsed user returns,
-          // breaking min-per-user parity with the batch funnel. Bounded
-          // mechanism ([[funnelWindowStream]]): user-keyed, so the carry
-          // parks timer-less after its timeout fires; the user's next
-          // row re-arms.
-          state.update(s)
-          if (!state.hasTimedOut)
-            state.setTimeoutTimestamp(
-              math.max(lastTs, state.getCurrentWatermarkMs()), idleTimeout)
-          out.iterator
+    emitInOrder[Long, String, FunnelState, FunnelUpdate](events,
+        col("user_id").cast("long"), lit(0L), col("ts"), col("event_type"),
+        watermark, FunnelState(-1L, -1L, -1L)) { (uid, s, t) =>
+      t.v match {
+        case "signup" if s.t1 < 0 =>
+          (s.copy(t1 = t.ms), Some(FunnelUpdate(uid, 1, t.ms)))
+        case "view" if s.t1 >= 0 && s.t2 < 0 && t.ms > s.t1 =>
+          (s.copy(t2 = t.ms), Some(FunnelUpdate(uid, 2, t.ms)))
+        case "purchase" if s.t2 >= 0 && s.t3 < 0 && t.ms > s.t2 =>
+          (s.copy(t3 = t.ms), Some(FunnelUpdate(uid, 3, t.ms)))
+        case _ => (s, None)
       }
+    }
   }
 
   /** Switch the session's streaming state store to RocksDB and return the
@@ -2060,7 +1864,7 @@ object StreamAssembly {
   final case class VwapUpdate(symbol: String, n: Long, vwap: Double)
 
   /** Per-symbol running VWAP on the transformWithState API (Spark 4's
-    * successor to flatMapGroupsWithState, cf. [[cascadeAlerts]]): typed
+    * successor to flatMapGroupsWithState, cf. [[emitInOrder]]): typed
     * state variables come from the handle instead of one opaque blob, and
     * state TTL is DECLARED (TTLConfig) rather than hand-rolled with
     * timeout callbacks — the store evicts idle symbols by itself, which is

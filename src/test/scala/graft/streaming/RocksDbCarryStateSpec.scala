@@ -22,9 +22,11 @@ import scala.jdk.CollectionConverters._
   *    assert the state operator really ran on RocksDB via its custom
   *    metrics;
   *  - the funnel case pins the lapsed-user carry on RocksDB;
-  *  - the restart case stops each fold twin that has a batch twin after
-  *    the pre-gap batch, with a day still open in state, and finishes the
-  *    scenario in a new query on the same checkpoint. */
+  *  - the restart cases stop each twin mid-feed — the day-grain folds
+  *    after the pre-gap batch with a day still open in state; hampel,
+  *    cusum and the rate monitor inside cusum's training prefix with open
+  *    hours — and finish the feed in a new query on the same checkpoint,
+  *    against the batch twin. */
 class RocksDbCarryStateSpec extends SparkSpec {
 
   private val base = 1700000000000L // 2023-11-14T22:13:20Z
@@ -108,9 +110,48 @@ class RocksDbCarryStateSpec extends SparkSpec {
   rocksParity("macd", StreamAssembly.macdStream(_),
     graft.ops.MarketOps.macdOf)
 
-  test("fold twins: a restart from checkpoint with a day open matches the batch twin") {
+  private type Row4 = (String, Long, java.sql.Timestamp, Double)
+
+  /** Run `stream` over `first` in one query, stop it, feed each of `rest`
+    * to a new query on the same checkpoint, and compare key "k"'s written
+    * rows with `batch` over the whole feed. */
+  private def restartParity(name: String, stream: DataFrame => Dataset[_],
+      batch: DataFrame => DataFrame, first: Seq[Row4],
+      rest: Seq[Seq[Row4]]): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory(s"restart_$name")
+    val out = dir.resolve("out").toString
+    val mem = MemoryStream[Row4]
+    val events = mem.toDF().toDF("event_type", "event_id", "ts", "value")
+    val schema = stream(events).schema
+    def start() = stream(events).toDF().writeStream.format("parquet")
+      .option("path", out)
+      .option("checkpointLocation", dir.resolve("ckpt").toString)
+      .start()
+    def written = spark.read.schema(schema).parquet(out)
+      .filter($"event_type" === "k").collect().map(_.toSeq.toList).toSet
+    val q1 = start()
+    try { mem.addData(first); q1.processAllAvailable() }
+    finally q1.stop()
+    val beforeStop = written
+    val q2 = start()
+    try rest.foreach { rows => mem.addData(rows); q2.processAllAvailable() }
+    finally q2.stop()
+    val got = written
+    val want = batch((first ++ rest.flatten)
+      .toDF("event_type", "event_id", "ts", "value"))
+      .filter($"event_type" === "k").collect()
+      .map(_.toSeq.toList).toSet
+    assert(got == want, s"$name diverged across the restart:\n " +
+      s"stream-only: ${(got diff want).take(3)}\n " +
+      s"batch-only: ${(want diff got).take(3)}")
+    assert(got.nonEmpty, s"$name restart parity is vacuous")
+    assert(beforeStop.subsetOf(got) && beforeStop != got,
+      s"$name: the first query already wrote every row")
+  }
+
+  test("fold twins: a restart from checkpoint with a day open matches the batch twin") {
     val family: Seq[(String, DataFrame => Dataset[_], DataFrame => DataFrame)] =
       Seq(
         ("atr", StreamAssembly.atrStream(_), graft.ops.MarketOps.atrOf),
@@ -125,41 +166,37 @@ class RocksDbCarryStateSpec extends SparkSpec {
     withRocksDb {
       val (before, pump, after) = taRows
       val sentinel = ("zz_sentinel", 0L, day(500), 0.0)
+      // the watermark after the pre-gap batch stops inside day 14, so
+      // that day is still open in state when the first query stops
       family.foreach { case (name, stream, batch) =>
-        val dir = java.nio.file.Files.createTempDirectory(s"restart_$name")
-        val out = dir.resolve("out").toString
-        val mem = MemoryStream[(String, Long, java.sql.Timestamp, Double)]
-        val events = mem.toDF().toDF("event_type", "event_id", "ts", "value")
-        val schema = stream(events).schema
-        def start() = stream(events).toDF().writeStream.format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .start()
-        def written = spark.read.schema(schema).parquet(out)
-          .filter($"event_type" === "k").collect().map(_.toSeq.toList).toSet
-        // the watermark after the pre-gap batch stops inside day 14, so
-        // that day is still open in state when the first query stops
-        val first = start()
-        try { mem.addData(before); first.processAllAvailable() }
-        finally first.stop()
-        val beforeStop = written
-        val second = start()
-        try {
-          mem.addData(pump); second.processAllAvailable()
-          mem.addData(after); second.processAllAvailable()
-          mem.addData(sentinel); second.processAllAvailable()
-        } finally second.stop()
-        val got = written
-        val want = batch((before ++ pump ++ after)
-          .toDF("event_type", "event_id", "ts", "value"))
-          .filter($"event_type" === "k").collect()
-          .map(_.toSeq.toList).toSet
-        assert(got == want, s"$name diverged across the restart:\n " +
-          s"stream-only: ${(got diff want).take(3)}\n " +
-          s"batch-only: ${(want diff got).take(3)}")
-        assert(got.nonEmpty, s"$name restart parity is vacuous")
-        assert(beforeStop.subsetOf(got) && beforeStop != got,
-          s"$name: the first query already wrote every row")
+        restartParity(name, stream, batch, before,
+          Seq(pump, after, Seq(sentinel)))
+      }
+    }
+  }
+
+  test("per-event and hour-grain twins: a restart from checkpoint mid-feed matches the batch twin") {
+    // 148 rows ten minutes apart (six an hour) around 100.00, spikes at
+    // rows 20, 50 and 120, a level shift to 200.00 from row 90, and rows
+    // 100..111 missing, so the rate monitor zero-fills two silent hours.
+    // The restart after row 40 lands inside cusum's 64-row training
+    // prefix, with a hampel ring and open rate hours in state.
+    def row(i: Int): Row4 = ("k", i.toLong,
+      new java.sql.Timestamp(base + i * 600000L),
+      if (i == 20 || i == 50 || i == 120) 500.0
+      else (if (i < 90) 100.0 else 200.0) + (i % 5) * 0.25)
+    val (first, rest) = (1 to 160).filterNot(i => i >= 100 && i < 112)
+      .map(row).splitAt(40)
+    val sentinel = ("zz_sentinel", 0L, day(500), 0.0)
+    val family: Seq[(String, DataFrame => Dataset[_], DataFrame => DataFrame)] =
+      Seq(
+        ("hampel", StreamAssembly.hampelStream(_),
+          graft.ops.TimeWindows.hampelFlags),
+        ("cusum", StreamAssembly.cusumStream(_), StreamAssembly.cusumAgg),
+        ("rate", StreamAssembly.rateStream(_), StreamAssembly.rateAgg))
+    withRocksDb {
+      family.foreach { case (name, stream, batch) =>
+        restartParity(name, stream, batch, first, Seq(rest, Seq(sentinel)))
       }
     }
   }

@@ -3,14 +3,18 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-/** Regression pins for the idle-gap retention rule of the streaming
-  * folds: when a key's EventTimeTimeout fires, its carry state
-  * (prevClose/rings/trail/funnel progress) survives the idle horizon, so
-  * a key that resumes after a long-silent gap still matches its batch
-  * twin row for row. Each test drives the timeout for real: a second key
-  * advances the watermark past the 60-day horizon while the key under
-  * test is silent (hasTimedOut is only delivered to keys with no rows in
-  * the batch), then the silent key resumes. The tests:
+/** Regression pins for the idle-gap retention rules of the streaming
+  * folds, so a key that resumes after a long-silent gap still matches its
+  * batch twin row for row:
+  *  - a close-on-watermark fold (day or hour buckets) keeps its carry
+  *    (prevClose/rings/trail) when the key's idle timeout fires, and
+  *    removes the key only when nothing is open and nothing is carried;
+  *  - an in-order emit fold (attribution, windowed funnel) keeps its
+  *    carry for the life of the query.
+  * Each test drives the silence for real: a second key advances the
+  * watermark past the 60-day horizon while the key under test is silent
+  * (hasTimedOut is only delivered to keys with no rows in the batch),
+  * then the silent key resumes. The tests:
   *  - ATR, Bollinger and EWMA against their batch twins. Under the
   *    pre-r14 remove-on-timeout behavior these fail: ATR coalesces
   *    prev-close to the post-gap day's own close, and Bollinger forgets
@@ -145,7 +149,7 @@ class StreamIdleGapSpec extends SparkSpec {
     try {
       mem.addData(Seq((7L, 1L, "view", day(0))))
       q.processAllAvailable()
-      // watermark pumped 80 days out by another user -> timeout for 7
+      // watermark pumped 80 days out by another user while 7 is silent
       mem.addData(Seq((8L, 2L, "view", day(80))))
       q.processAllAvailable()
       // user 7 converts 100 days after the view: the batch twin
@@ -207,7 +211,7 @@ class StreamIdleGapSpec extends SparkSpec {
       // user 7 signs up on day 0, goes silent
       mem.addData(Seq((7L, 1L, day(0), "signup")))
       q.processAllAvailable()
-      // another user pushes the watermark past day 0 + 60d -> timeout
+      // another user pushes the watermark 80 days out
       mem.addData(Seq((8L, 2L, day(80), "view")))
       q.processAllAvailable()
       // the lapsed user returns: signs up AGAIN, then converts in-window

@@ -13,7 +13,7 @@ import graft.normalize.{Fixtures, Normalizers}
 
 /** End-to-end Structured Streaming specs: file-tail ingest (the Hyperliquid
   * adapter's backfill+tail), watermark-bounded dedup across micro-batches,
-  * fan-out sinks, and the streaming dashboard aggregate. */
+  * the quarantine split, and the streaming twins of the batch queries. */
 class StreamingSpec extends SparkSpec {
 
   private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
@@ -54,22 +54,6 @@ class StreamingSpec extends SparkSpec {
     assert(out.count() == 3)
     assert(out.select("symbol").collect().map(_.getString(0)).sorted.toSeq ==
       Seq("DOGEUSDC", "ETHUSDC", "SOLUSDC"))
-  }
-
-  test("fan-out sink: one micro-batch lands in CSV (daily-partitioned) and parquet") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val csvDir = tmp("fan_csv"); val pqDir = tmp("fan_pq"); val ckpt = tmp("fan_ckpt")
-    val mem = MemoryStream[String]
-    mem.addData(Fixtures.binance: _*)
-    val unified = Normalizers.binance(mem.toDF().withColumnRenamed("value", "raw"), "usdt")
-    val q = StreamAssembly.fanOutSinks(unified, csvDir, pqDir, ckpt, triggerMs = 100L)
-    try q.processAllAvailable() finally q.stop()
-    val pq = spark.read.parquet(pqDir)
-    assert(pq.count() == 4)
-    val csv = spark.read.option("header", "true").csv(csvDir)
-    assert(csv.count() == 4)
-    assert(csv.columns.contains("day"))   // partition column = daily rotation
   }
 
   test("quarantine split: invalid rows carry a reason, nothing is ever dropped") {
@@ -232,6 +216,103 @@ class StreamingSpec extends SparkSpec {
       assert(rows.forall(_.getLong(1) == 3))
       assert(!rows.exists(_.getString(0) == "ETHUSDT"))
     } finally q.stop()
+  }
+
+  test("cascade detector: a reversed micro-batch gives the in-order alerts") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val t0 = 1710000000000L
+    // prices differ per event, so an arrival-order fold would move the
+    // alert sums as well as firstTsMs/lastTsMs
+    def ev(i: Int) =
+      s"""{"e":"forceOrder","E":${t0 + i * 1000},"o":{"s":"BTCUSDT","S":"SELL","q":"1","p":"${100 + i}","l":"1","T":${t0 + i * 1000}}}"""
+    def alerts(name: String, feed: Seq[String]) = {
+      val mem = MemoryStream[String]
+      val unified = Normalizers.binance(mem.toDF().withColumnRenamed("value", "raw"), "usdt")
+      val q = StreamAssembly.cascadeAlerts(unified, threshold = 3).toDF()
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      try {
+        mem.addData(feed: _*); q.processAllAvailable()
+        spark.sql(s"SELECT * FROM $name").collect().map(_.toSeq.toList).toSet
+      } finally q.stop()
+    }
+    val events = (1 to 7).map(ev)
+    val inOrder = alerts("cascades_in_order", events)
+    assert(inOrder == Set(
+      List("BTCUSDT", 3L, 306.0, t0 + 1000L, t0 + 3000L),
+      List("BTCUSDT", 3L, 315.0, t0 + 4000L, t0 + 6000L)), inOrder)
+    val reversed = alerts("cascades_reversed", events.reverse)
+    assert(reversed == inOrder, s"arrival order moved the alerts: $reversed")
+  }
+
+  test("cascade detector: a symbol idle past its 30-minute horizon starts over") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val t0 = 1710000000000L
+    def ev(sym: String, ms: Long) =
+      s"""{"e":"forceOrder","E":$ms,"o":{"s":"$sym","S":"SELL","q":"1","p":"100","l":"1","T":$ms}}"""
+    val mem = MemoryStream[String]
+    val unified = Normalizers.binance(mem.toDF().withColumnRenamed("value", "raw"), "usdt")
+    val q = StreamAssembly.cascadeAlerts(unified, threshold = 3).toDF()
+      .writeStream.format("memory").queryName("cascade_expiry")
+      .outputMode("append").start()
+    def stateRows = q.lastProgress.stateOperators.head.numRowsTotal
+    try {
+      mem.addData(ev("BTCUSDT", t0), ev("BTCUSDT", t0 + 1000L))
+      q.processAllAvailable()
+      assert(stateRows == 1)
+      // another symbol moves the watermark (10-minute delay) to 35 minutes
+      // past BTC's last event: BTC's 30-minute horizon has passed
+      mem.addData(ev("ETHUSDT", t0 + 1000L + 45L * 60000L))
+      q.processAllAvailable()
+      assert(stateRows == 1, "the idle BTC key outlived its horizon")
+      // a third BTC event inside the watermark counts from one again
+      mem.addData(ev("BTCUSDT", t0 + 1000L + 40L * 60000L))
+      q.processAllAvailable()
+      assert(stateRows == 2)
+      val fired = spark.sql("SELECT * FROM cascade_expiry").collect()
+      assert(fired.isEmpty, s"an expired count carried over: ${fired.toSeq}")
+    } finally q.stop()
+  }
+
+  test("per-event detectors: a row older than the watermark neither emits nor moves later verdicts") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val t0 = 1710000000000L
+    // one row a minute around 100.00, a spike at 40 and 100, and a level
+    // shift to 200.00 from row 81: every detector has verdicts to move
+    def row(i: Int) = ("k", i.toLong, new java.sql.Timestamp(t0 + i * 60000L),
+      if (i == 40 || i == 100) 500.0
+      else if (i <= 80) 100.0 + (i % 5) * 0.25 else 200.0 + (i % 5) * 0.25)
+    // by the late row's batch the watermark is past t0 + 50 min; the late
+    // row at t0 (huge, so any detector that applied it would react) sits
+    // below it
+    val late = ("k", 999L, new java.sql.Timestamp(t0), 5000.0)
+    val phases = Seq((1 to 60).map(row), (61 to 62).map(row), Seq(late),
+      (63 to 120).map(row))
+    val clean = (1 to 120).map(row).toDF("event_type", "event_id", "ts", "value")
+    val family: Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)] = Seq(
+      ("anomaly", StreamAssembly.anomalyStream(_), StreamAssembly.anomalyAgg(_)),
+      ("cusum", StreamAssembly.cusumStream(_), StreamAssembly.cusumAgg(_)),
+      ("hampel", StreamAssembly.hampelStream(_),
+        graft.ops.TimeWindows.hampelFlags(_)))
+    family.foreach { case (name, stream, batch) =>
+      val mem = MemoryStream[(String, Long, java.sql.Timestamp, Double)]
+      val events = mem.toDF().toDF("event_type", "event_id", "ts", "value")
+      val q = stream(events).writeStream.format("memory")
+        .queryName(s"late_$name").outputMode("append").start()
+      try {
+        phases.foreach { p => mem.addData(p); q.processAllAvailable() }
+        val got = spark.sql(s"SELECT * FROM late_$name").collect()
+          .map(_.toSeq.toList).toSet
+        val want = batch(clean).collect().map(_.toSeq.toList).toSet
+        assert(want.nonEmpty, s"$name: the clean feed raises nothing")
+        assert(got == want, s"$name: the late row moved the verdicts:\n " +
+          s"stream-only: ${got diff want}\n batch-only: ${want diff got}")
+      } finally q.stop()
+    }
   }
 
   test("transformWithState: VWAP state survives across batches AND restarts") {
@@ -1081,8 +1162,7 @@ class StreamingSpec extends SparkSpec {
     val t0 = 1700000000000L
     val mem = MemoryStream[(Long, Long, String, java.sql.Timestamp)]
     val events = mem.toDF().toDF("user_id", "event_id", "event_type", "ts")
-    val q = StreamAssembly.attrStream(events, watermark = "10 minutes",
-      idleTimeout = "60 days")
+    val q = StreamAssembly.attrStream(events, watermark = "10 minutes")
       .toDF().writeStream.format("memory").queryName("attr_ooo")
       .outputMode("append").start()
     try {
@@ -1115,7 +1195,7 @@ class StreamingSpec extends SparkSpec {
     assert(src.length > 100)
     val mem = MemoryStream[(Long, Long, String, java.sql.Timestamp)]
     val events = mem.toDF().toDF("user_id", "event_id", "event_type", "ts")
-    val q = StreamAssembly.attrStream(events, idleTimeout = "60 days")
+    val q = StreamAssembly.attrStream(events)
       .toDF().writeStream.format("memory").queryName("attr_stream")
       .outputMode("append").start()
     try {
@@ -1145,7 +1225,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
     // the SAME rows the batch funnel reads, delivered in event-time order
-    // across two micro-batches (mid-stream cut), timeout far past the span
+    // across two micro-batches (mid-stream cut)
     val rows = graft.ops.table(spark, dir, "events")
       .select("user_id", "event_type", "ts")
       .as[(Long, String, java.sql.Timestamp)]
@@ -1154,7 +1234,7 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
     val events = mem.toDF().toDF("user_id", "event_type", "ts")
     val q = StreamAssembly
-      .funnelStages(events, watermark = "10 minutes", idleTimeout = "60 days")
+      .funnelStages(events, watermark = "10 minutes")
       .toDF().writeStream.format("memory").queryName("funnel_stream")
       .outputMode("append").start()
     try {
