@@ -201,7 +201,7 @@ object Bench {
     val scratch =
       if (shm.mkdirs() || shm.isDirectory) shm
       else new java.io.File(System.getProperty("java.io.tmpdir"))
-    System.setProperty("java.io.tmpdir", scratch.getPath) // sink tmp() dirs
+    System.setProperty("java.io.tmpdir", scratch.getPath) // ops.tempDir dirs
     val spark = GraftSession.local(cpus,
       Seq("spark.local.dir" -> scratch.getPath)) // shuffle + spill
     spark.sparkContext.setLogLevel("WARN")

@@ -62,10 +62,10 @@ object Bucketing {
     * read time (BucketingSpec asserts the zero-Exchange plan). */
   def joinBucketed(spark: SparkSession, dir: String): DataFrame = {
     // dir created only on first need — IF NOT EXISTS ignores LOCATION on
-    // later calls, so creating unconditionally would leak a temp dir per
-    // invocation (the dedupIncremental rationale)
+    // later calls, so creating unconditionally would leave an unused temp
+    // dir per invocation (the dedupIncremental rationale)
     if (!spark.catalog.databaseExists("graft_bktq")) {
-      val wh = java.nio.file.Files.createTempDirectory("graft_bktq").toString
+      val wh = tempDir("graft_bktq")
       spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_bktq LOCATION '$wh'")
     }
     ensureBucketed(spark, dir, "graft_bktq.orders_by_cust") {
@@ -125,7 +125,7 @@ object Bucketing {
   private[graft] def joinBucketedSortedPlan(spark: SparkSession,
       dir: String): DataFrame = {
     if (!spark.catalog.databaseExists("graft_bkts")) {
-      val wh = java.nio.file.Files.createTempDirectory("graft_bkts").toString
+      val wh = tempDir("graft_bkts")
       spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_bkts LOCATION '$wh'")
     }
     ensureBucketed(spark, dir, "graft_bkts.lineitem_by_order") {

@@ -207,10 +207,10 @@ object DedupOps {
     // concentrate a quarter of the corpus per reducer).
     // The warehouse dir is created only when the database doesn't exist
     // yet: CREATE DATABASE IF NOT EXISTS ignores LOCATION on later calls,
-    // so an unconditional createTempDirectory would leak one dir per
+    // so an unconditional tempDir would leave one unused dir per
     // invocation while the data kept landing in the first one.
     if (!spark.catalog.databaseExists("graft_incr")) {
-      val wh = java.nio.file.Files.createTempDirectory("graft_incr_wh").toString
+      val wh = tempDir("graft_incr_wh")
       spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_incr LOCATION '$wh'")
     }
     // Build the stored index ONCE per (JVM, dir) — the

@@ -17,50 +17,6 @@ import org.apache.spark.sql.types._
   */
 object Formats {
 
-  /** Every temp layout registers for deletion at JVM exit, so repeated
-    * verify/bench passes across processes never accumulate snapshot copies
-    * in /tmp (the sink ops legitimately write fresh dirs per call — the
-    * write IS the op; the hook bounds their lifetime to the run). */
-  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      tmpDirs.forEach(rm(_))
-    }))
-  }
-
-  private def tmp(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    tmpDirs.add(d.toFile)
-    d.toString
-  }
-
-  /** Path-only layout cache for the read-only multi-generation scans
-    * ([[scanFederated]], [[scanPartitionEvolve]]) — same weak-session-key
-    * discipline as [[travelCache]]: the physical generation build runs once
-    * per (session, dir); every later call re-plans lazy reads over the same
-    * directories. Values are strings, never Datasets (a cached Dataset pins
-    * its session and defeats the WeakHashMap). */
-  private val layoutCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, AnyRef]]()
-
-  private def cachedLayout[T <: AnyRef](spark: SparkSession, key: String)(
-      build: => T): T = {
-    val m = layoutCache.synchronized {
-      var mm = layoutCache.get(spark)
-      if (mm == null) {
-        mm = scala.collection.mutable.Map.empty[String, AnyRef]
-        layoutCache.put(spark, mm)
-      }
-      mm
-    }
-    m.synchronized { m.getOrElseUpdate(key, build).asInstanceOf[T] }
-  }
-
   /** Day-partitioned parquet sink + partition-pruned readback: events are
     * written `partitionBy(day)` and read back for one week only — the scan
     * must touch 7 of 30 partitions (PlanSpec asserts the PartitionFilters).
@@ -71,7 +27,7 @@ object Formats {
     * classic metadata-death layout. One shuffle keyed on the partition
     * column makes each day land as a handful of large files. */
   def sinkParquetPartitioned(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmp("graft_pq_daily")
+    val out = tempDir("graft_pq_daily")
     table(spark, dir, "events")
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
       .repartition(col("day"))
@@ -89,7 +45,7 @@ object Formats {
     * parquet). The readback filter prunes row groups by the returnflag
     * statistics, never decoding dropped stripes. */
   def sinkOrcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmp("graft_orc")
+    val out = tempDir("graft_orc")
     table(spark, dir, "lineitem")
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
         "l_returnflag", "l_linestatus")
@@ -111,7 +67,7 @@ object Formats {
     * instead of failing the job. Doubles survive the text round-trip
     * bit-exactly (Jackson emits the shortest round-trippable decimal). */
   def jsonlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmp("graft_jsonl")
+    val out = tempDir("graft_jsonl")
     table(spark, dir, "events")
       .select("event_id", "user_id", "event_type", "value")
       .write.mode("overwrite").json(out)
@@ -137,8 +93,8 @@ object Formats {
     * is the plain whole-table aggregate — the migration must be invisible
     * in the result. */
   def scanFederated(spark: SparkSession, dir: String): DataFrame = {
-    val out = cachedLayout(spark, s"fed:$dir") {
-      val o = tmp("graft_fed")
+    // the generations are a stored layout, built once per (JVM, dir)
+    val out = stagedFixture("federated", dir) { o =>
       val ev = table(spark, dir, "events")
         .select(col("event_type"), col("value"),
           date_format(col("ts"), "yyyy-MM-dd").as("day"))
@@ -149,7 +105,6 @@ object Formats {
       ev.filter(col("day") >= d1 && col("day") < d2)
         .write.mode("overwrite").orc(s"$o/gen2")
       ev.filter(col("day") >= d2).write.mode("overwrite").json(s"$o/gen3")
-      o
     }
     val schema = StructType(Seq(
       StructField("event_type", StringType), StructField("value", DoubleType),
@@ -178,14 +133,15 @@ object Formats {
   private[graft] final case class PartitionEvolvePlan(
       flatFiles: Long, totalDays: Int, partSide: DataFrame, result: DataFrame)
 
-  /** Cached layout value: generation root + the distinct day list the
-    * window bounds derive from. */
+  /** Stored layout value (a [[memo]] entry owned by [[Jvm]], built once
+    * per (JVM, dir)): generation root + the distinct day list the window
+    * bounds derive from. */
   private[graft] final case class PevolveLayout(out: String, days: Seq[String])
 
   private[graft] def partitionEvolvePlan(spark: SparkSession,
       dir: String): PartitionEvolvePlan = {
-    val layout = cachedLayout(spark, s"pevolve:$dir") {
-      val o = tmp("graft_pevolve")
+    val layout = memo(Jvm, s"pevolve|$dir") {
+      val o = tempDir("graft_pevolve")
       val ev = table(spark, dir, "events")
         .select(col("event_type"), col("value"),
           date_format(col("ts"), "yyyy-MM-dd").as("day"))
@@ -233,7 +189,7 @@ object Formats {
     * catalog/table format and why the DEFAULT read trusts one footer. The
     * null back-fill itself is free at scan time. */
   def scanEvolve(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmp("graft_evolve")
+    val out = tempDir("graft_evolve")
     val ord = table(spark, dir, "orders")
     // neutral dir names: a key=value name (batch=1) would be inferred as
     // an implicit partition COLUMN by directory discovery — a different
@@ -414,7 +370,7 @@ object Formats {
     * compacted layout reads back row-identical to the tombstone-masked
     * one. */
   private[graft] def deleteMorPlan(spark: SparkSession, dir: String): MorPlan = {
-    val out = tmp("graft_mor")
+    val out = tempDir("graft_mor")
     val data = eventsByUser8(spark, dir)
     def mtimes(): Map[String, Long] =
       new java.io.File(data).listFiles().toSeq
@@ -651,47 +607,29 @@ object Formats {
     * ALL the correction. The spec drives the v1 readback and asserts it
     * matches the source exactly, and that v2 CARRIES (not copies) most of
     * v1's files. */
-  /** The on-disk half of a commit log build: pure FILE LISTS, no
-    * DataFrames — cacheable under weak session keys without the
-    * value→key strong reference a cached Dataset would create (a Dataset
-    * pins its SparkSession via QueryExecution, which would defeat
-    * WeakHashMap collection entirely). */
-  private[graft] final case class TravelLayout(
+  /** The on-disk half of a commit log build: the layout's root dir and
+    * its pure FILE LISTS, no DataFrames — a stored artifact of the
+    * [[memo]] store (a cached Dataset would pin the session that built
+    * it). */
+  private[graft] final case class TravelLayout(root: String,
       v1Files: Seq[String], v2Files: Seq[String], carried: Seq[String],
       hitFiles: Seq[String], rewriteFiles: Seq[String],
       appendFiles: Seq[String])
 
-  /** The commit-log layout is METADATA — built once per (session, dir)
-    * and shared by every read-only consumer ([[scanTimeTravel]],
-    * [[scanCdf]], their specs): rebuilding the physical snapshot per
-    * query would model a lake that rewrites itself before every read.
-    * Only the [[TravelLayout]] (strings) is cached; the DataFrames are
-    * rebuilt per call from the lists (lazy reads — free), so the weak
-    * session keys actually collect. The multi-job physical build runs
-    * under the per-SESSION map's lock, not the global one — one session's
-    * build never blocks another session. [[vacuumPlan]] deliberately
-    * bypasses the cache (a private [[cloneTravelLayout]] copy) because it DELETES
-    * its layout's files — each vacuum run gets a private layout, and
-    * cached read-only layouts stay intact. */
-  private val travelCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, TravelLayout]]()
+  /** The commit-log layout is METADATA — built once per (JVM, dir) and
+    * shared by every consumer ([[scanTimeTravel]], [[scanCdf]], the
+    * template of [[vacuumPlan]], their specs): rebuilding the physical
+    * snapshot per query would model a lake that rewrites itself before
+    * every read. Only the [[TravelLayout]] (strings) is stored; the
+    * DataFrames are rebuilt per call from the lists (lazy reads — free).
+    * The layout is read-only: [[vacuumPlan]] DELETES files, so it works on
+    * a private [[cloneTravelLayout]] copy. */
+  private def travelLayout(spark: SparkSession, dir: String): TravelLayout =
+    memo(Jvm, s"travel|$dir")(buildTravelLayout(spark, dir, tempDir("graft_travel")))
 
   private[graft] def timeTravelPlan(spark: SparkSession,
-      dir: String): TimeTravelPlan = {
-    val m = travelCache.synchronized {
-      var mm = travelCache.get(spark)
-      if (mm == null) {
-        mm = scala.collection.mutable.Map.empty[String, TravelLayout]
-        travelCache.put(spark, mm)
-      }
-      mm
-    }
-    val layout = m.synchronized {
-      m.getOrElseUpdate(dir, buildTravelLayout(spark, dir))
-    }
-    planOf(spark, layout)
-  }
+      dir: String): TimeTravelPlan =
+    planOf(spark, travelLayout(spark, dir))
 
   /** Assemble the (cheap, lazy) read frames over a layout's file lists. */
   private def planOf(spark: SparkSession, l: TravelLayout): TimeTravelPlan = {
@@ -705,10 +643,7 @@ object Formats {
       l.hitFiles, l.rewriteFiles, l.appendFiles)
   }
 
-  private def buildTravelLayout(spark: SparkSession, dir: String): TravelLayout =
-    buildTravelLayoutAt(spark, dir, tmp("graft_travel"))
-
-  private def buildTravelLayoutAt(spark: SparkSession, dir: String,
+  private def buildTravelLayout(spark: SparkSession, dir: String,
       out: String): TravelLayout = {
     table(spark, dir, "events")
       .repartitionByRange(8, col("user_id"))
@@ -734,50 +669,43 @@ object Formats {
     val carried = v1.filterNot(hit.contains)
     val v2 = carried.toSeq ++ parts(s"$out/rewrite") ++ parts(s"$out/append")
     // the "commit log": one manifest per version, file lists only
-    TravelLayout(v1.toIndexedSeq, v2, carried.toIndexedSeq,
+    TravelLayout(out, v1.toIndexedSeq, v2, carried.toIndexedSeq,
       hit.toIndexedSeq, parts(s"$out/rewrite"), parts(s"$out/append"))
   }
 
   /** Private clone of the travel layout for the ONE consumer that mutates
-    * it: [[vacuumPlan]] deletes files, so it can never share the cached
+    * it: [[vacuumPlan]] deletes files, so it can never share the stored
     * read-only layout — but rebuilding the physical snapshots per run
     * would charge vacuum for a bootstrap the lake paid long before the
-    * maintenance job ran. ONE template layout stages per (JVM, dir)
-    * ([[graft.ops.stagedFixture]]) with its file lists persisted as
-    * relative paths; each vacuum run then clones the tree with plain NIO
-    * copies (no Spark jobs) into a private dir and rebinds the lists. */
+    * maintenance job ran. Each vacuum run clones the shared
+    * [[travelLayout]]'s tree with plain NIO copies (no Spark jobs) into a
+    * private dir and rebinds the in-memory file lists onto the copy. */
   private def cloneTravelLayout(spark: SparkSession, dir: String): TravelLayout = {
     import java.nio.file.{Files, Paths}
-    def localPath(p: String): String =
-      if (p.startsWith("file:")) new java.net.URI(p).getPath else p
-    val tpl = stagedFixture("travel_template", dir) { p =>
-      val l = buildTravelLayoutAt(spark, dir, p)
-      val root = Paths.get(p).toRealPath().toString
-      def rel(s: Seq[String]): String = s.map { f =>
-        val lp = Paths.get(localPath(f)).toRealPath().toString
-        require(lp.startsWith(root + "/"), s"layout file outside template: $f")
-        lp.stripPrefix(root + "/")
-      }.mkString("\t")
-      Files.writeString(Paths.get(s"$p/layout.txt"), Seq(
-        l.v1Files, l.v2Files, l.carried,
-        l.hitFiles, l.rewriteFiles, l.appendFiles).map(rel).mkString("\n")): Unit
-    }
-    val fresh = tmp("graft_travel")
-    val tplPath = Paths.get(tpl)
-    Files.walk(tplPath).forEach { src =>
-      val dst = Paths.get(fresh).resolve(tplPath.relativize(src).toString)
+    val l = travelLayout(spark, dir)
+    val root = Paths.get(l.root).toRealPath()
+    val fresh = Paths.get(tempDir("graft_travel"))
+    Files.walk(root).forEach { src =>
+      val dst = fresh.resolve(root.relativize(src))
       if (Files.isDirectory(src)) Files.createDirectories(dst)
       else Files.copy(src, dst,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
       ()
     }
-    val lists = Files.readString(Paths.get(s"$tpl/layout.txt"))
-      .split("\n", -1).toSeq.map { line =>
-        if (line.isEmpty) Seq.empty[String]
-        else line.split("\t").toSeq.map(r => s"$fresh/$r")
-      }
-    TravelLayout(lists(0), lists(1), lists(2), lists(3), lists(4), lists(5))
+    def rebind(files: Seq[String]): Seq[String] = files.map { f =>
+      val p = Paths.get(localPath(f)).toRealPath()
+      require(p.startsWith(root), s"layout file outside its root: $f")
+      fresh.resolve(root.relativize(p)).toString
+    }
+    TravelLayout(fresh.toString, rebind(l.v1Files), rebind(l.v2Files),
+      rebind(l.carried), rebind(l.hitFiles), rebind(l.rewriteFiles),
+      rebind(l.appendFiles))
   }
+
+  /** Local filesystem path of a file list entry (`input_file_name` yields
+    * `file:` URIs, the directory listings plain paths). */
+  private def localPath(p: String): String =
+    if (p.startsWith("file:")) new java.net.URI(p).getPath else p
 
   def scanTimeTravel(spark: SparkSession, dir: String): DataFrame =
     timeTravelPlan(spark, dir).result
@@ -832,14 +760,12 @@ object Formats {
   private[graft] def vacuumPlan(spark: SparkSession, dir: String,
       retentionMs: Long = 0L): VacuumPlan = {
     import java.nio.file.{Files, Paths}
-    def localPath(p: String): String =
-      if (p.startsWith("file:")) new java.net.URI(p).getPath else p
-    // fresh PRIVATE layout — this op deletes files; the shared cached
+    // fresh PRIVATE layout — this op deletes files; the shared stored
     // layout must stay readable for the time-travel/CDF consumers. The
-    // private copy is CLONED from a staged template byte-for-byte (plain
-    // NIO file copies, no Spark jobs): what vacuum measures is the
-    // retention arithmetic and the deletion itself, not a table bootstrap
-    // the lake built long before the maintenance job ran.
+    // private copy is CLONED from it byte-for-byte (plain NIO file copies,
+    // no Spark jobs): what vacuum measures is the retention arithmetic and
+    // the deletion itself, not a table bootstrap the lake built long
+    // before the maintenance job ran.
     val tt = planOf(spark, cloneTravelLayout(spark, dir))
     // v1 = carried ∪ hit, v2 = carried ∪ rewrite ∪ append ⇒ v1 ∖ v2 = hit
     val expired = tt.hitFiles
@@ -886,7 +812,7 @@ object Formats {
     * rejected path and v1 immutability. */
   private[graft] def publishPlan(spark: SparkSession, dir: String): PublishPlan = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val out = tmp("graft_publish")
+    val out = tempDir("graft_publish")
     val ev = table(spark, dir, "events")
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
     def agg(df: DataFrame): DataFrame = df.groupBy("event_type")
@@ -1006,7 +932,7 @@ object Formats {
   private[graft] def commitConflictPlan(spark: SparkSession,
       dir: String): ConflictPlan = {
     import java.nio.file.{Files, Paths}
-    val out = tmp("graft_conflict")
+    val out = tempDir("graft_conflict")
     val ev = table(spark, dir, "events")
       .select(col("event_type"), col("value"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
@@ -1109,7 +1035,7 @@ object Formats {
     * branch work, and the rejected merge publishes nothing. */
   private[graft] def scanBranchPlan(spark: SparkSession,
       dir: String): BranchPlan = {
-    val out = tmp("graft_branch")
+    val out = tempDir("graft_branch")
     val ev = table(spark, dir, "events")
       .select(col("event_type"), col("value"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))

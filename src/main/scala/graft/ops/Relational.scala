@@ -964,8 +964,8 @@ object Relational {
     * plan-locked (PlanSpec asserts `might_contain` on the probe side).
     * Semantics are conf-independent: the oracle is the plain join.
     *
-    * The child session comes from the shared weak-keyed
-    * [[graft.ops.childSession]] cache (a SessionState is not free —
+    * The child session comes from the memoized
+    * [[graft.ops.childSession]] (a SessionState is not free —
     * building one per invocation would grow unbounded with bench
     * passes). */
   def joinBloom(spark: SparkSession, dir: String): DataFrame = {

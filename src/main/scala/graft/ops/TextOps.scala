@@ -1013,7 +1013,7 @@ object TextOps {
         !col("a").isin(stopwords: _*) && !col("b").isin(stopwords: _*))
     // Built PER CONSTRUCTION — NOT memoized across constructions (r15
     // verdict item 3): the co-occurrence graph is single-consumer — the
-    // "repeated subframes" rationale behind [[cachedFrame]] doesn't
+    // "repeated subframes" rationale behind the [[memo]] store doesn't
     // apply, and a cross-pass memo would let bench passes 2-3 skip the
     // corpus tokenize that is this query's real recurring work. The
     // tokenize pays ONE distinct on the canonical (lo, hi) pair set

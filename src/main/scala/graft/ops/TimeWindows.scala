@@ -215,8 +215,7 @@ object TimeWindows {
     * partitionBy write path + partition-pruned read (dynamic partition
     * discovery); the count-per-day must match a direct aggregation. */
   def sinkCsvDaily(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_csv_daily").toString
+    val out = tempDir("graft_csv_daily")
     table(spark, dir, "events")
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
       .write.mode("overwrite").partitionBy("day")

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -29,33 +31,15 @@ package object ops {
     * microsecond TIMESTAMP so every downstream consumer (unix_micros,
     * window(), date_format) sees ONE type. The NTZ→LTZ cast is
     * value-identical under the pinned UTC session timezone, and matches what
-    * DuckDB yields reading the same file. */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val m = tableCache.synchronized {
-      var mm = tableCache.get(spark)
-      if (mm == null) {
-        mm = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        tableCache.put(spark, mm)
-      }
-      mm
-    }
-    m.computeIfAbsent(s"$dir/$name", _ => tableFresh(spark, dir, name))
-  }
-
-  /** Resolved-relation cache behind [[table]] — the catalog role. Each
-    * `spark.read.parquet` call pays ~60-80 ms of DRIVER-side work (file
-    * listing, footer read, relation construction) before any job runs;
-    * re-resolving the same immutable testdata table for every query is
-    * pure fixed overhead — a production engine resolves a table through a
-    * metastore that caches exactly this. Cached per (session, dir, name):
-    * the analyzed plan is immutable and session-bound, so reuse is
-    * side-effect-free; the testdata is read-only for the JVM's lifetime
-    * (mutating ops stage PRIVATE copies via [[stagedFixture]], never
-    * through this path). WEAK on the session so stopped test sessions
-    * collect together with their entries. */
-  private val tableCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+    * DuckDB yields reading the same file.
+    *
+    * A lazy relation in the [[memo]] store — the catalog role: each
+    * `spark.read.parquet` pays ~60-80 ms of DRIVER-side work (file listing,
+    * footer read, relation construction) before any job runs, and the
+    * testdata is read-only for the JVM's lifetime (mutating ops stage
+    * PRIVATE copies via [[stagedFixture]], never through this path). */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    memo(spark, s"table|$dir|$name")(tableFresh(spark, dir, name))
 
   private def tableFresh(
       spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -106,8 +90,8 @@ package object ops {
     * unchanged: there is no lineage left to truncate, and
     * re-checkpointing would only copy the same rows into a second set of
     * blocks — one wasted job per call. This is what lets the
-    * [[cachedFrame]] layer hand pre-materialized frames to the loop ops'
-    * unconditional `materialize(input)` entry guards for free.
+    * [[memo]]'s loop subframes reach the loop ops' unconditional
+    * `materialize(input)` entry guards for free.
     *
     * Storage is conf-selected: when `spark.graft.checkpointDir` is set the
     * blocks go to RELIABLE storage via `checkpoint()` (HDFS/S3 on a real
@@ -151,156 +135,54 @@ package object ops {
     }
   }
 
-  /** Per-(session, key) memo of MATERIALIZED derived frames — the
-    * [[table]] relation-cache discipline extended to the loop ops'
-    * repeated subframes (the trade / co-purchase edge lists, the TextRank
-    * co-occurrence graph): each is a deterministic pure function of the
-    * read-only testdata, so the first consumer pays the one build job and
-    * every later consumer — across queries, bench passes, and specs in
-    * the same JVM — reuses the lineage-truncated frame. This is a FIXED
-    * planning-cost shave, not a result cache: every algorithm loop still
-    * runs live on top of the cached inputs. Holding the DataFrame (not a
-    * path) is safe here because the value is session-bound by the cache
-    * key itself (WEAK on the session, so a stopped test session collects
-    * together with its entries) — the [[graft.ops.Formats]] travel-cache
-    * concern (a cached Dataset pinning a FOREIGN session) cannot arise.
-    * The lock is one reentrant monitor around get/build/put: a build MAY
-    * itself resolve another cached frame (same thread reenters), and
-    * concurrent first callers of different keys serialize — builds are
-    * single small jobs, so contention is bounded. */
-  private val frameCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]()
-
-  private[graft] def cachedFrame(spark: SparkSession, key: String)(
-      build: => DataFrame): DataFrame = frameCache.synchronized {
-    var m = frameCache.get(spark)
-    if (m == null) {
-      m = scala.collection.mutable.Map.empty[String, DataFrame]
-      frameCache.put(spark, m)
-    }
-    m.get(key) match {
-      case Some(df) => df
-      case None =>
-        val df = materialize(build)
-        m.put(key, df): Unit
-        df
-    }
-  }
-
-  /** LAZY sibling of [[cachedFrame]] for the staged-store reads whose
-    * consumer plans are PLAN-LOCKED to the stored artifact's FileScan
-    * (StagedFixtureSpec: `ccincr_stars`, `trade_pairs`, `lane_walks`):
-    * a [[materialize]] here would truncate the lineage to a LogicalRDD
-    * and hide the staged path from every downstream `explain`, which is
-    * exactly the evidence those locks exist to keep honest — the 100 TB
-    * contract is "the query SCANS the store", not "the query replays a
-    * JVM-resident copy". So this memo caches only the driver-side
-    * relation resolution (the [[table]] discipline: file listing +
-    * footer read + analysis, ~60-80 ms per construction), returning a
-    * stable LAZY instance; execution still scans the store each action.
-    * Consumers that need a materialized copy for loop hubs memoize it on
-    * this instance via [[derivedFrame]], keeping both properties: the
-    * public frame plans as a store scan, the loop pays one build per
-    * JVM. Shares [[frameCache]] under a distinct key prefix. */
-  private[graft] def cachedRelation(spark: SparkSession, key: String)(
-      build: => DataFrame): DataFrame = frameCache.synchronized {
-    var m = frameCache.get(spark)
-    if (m == null) {
-      m = scala.collection.mutable.Map.empty[String, DataFrame]
-      frameCache.put(spark, m)
-    }
-    m.getOrElseUpdate(s"lazy|$key", build)
-  }
-
-  /** Memo of frames DERIVED from a specific (usually cached) frame
+  /** Memo of frames DERIVED from a specific (usually memoized) frame
     * instance — vertex sets, degree-joined edge lists, symmetric views,
-    * loop-session transplants. Keyed by the SOURCE frame's identity (a
-    * DataFrame does not override equals), so two spec-built inputs never
-    * collide, while the stable instances [[cachedFrame]] returns hit the
-    * memo on every later construction. The derived value is materialized,
-    * which truncates its lineage (LogicalRDD), so the value holds no
-    * reference back to the key's plan; entries collect when the source
-    * frame does. */
-  private val derivedCache =
-    new java.util.WeakHashMap[DataFrame,
-      scala.collection.mutable.Map[String, DataFrame]]()
-
+    * loop-session transplants: a loop subframe owned by the SOURCE frame
+    * (a DataFrame does not override equals, so two spec-built inputs never
+    * collide, while the stable instances of [[memo]] hit on every later
+    * construction). The derived value is materialized, which truncates its
+    * lineage (LogicalRDD), so the value holds no reference back to its
+    * owner and the entry collects with the source frame. */
   private[graft] def derivedFrame(src: DataFrame, tag: String)(
-      build: => DataFrame): DataFrame = derivedCache.synchronized {
-    var m = derivedCache.get(src)
-    if (m == null) {
-      m = scala.collection.mutable.Map.empty[String, DataFrame]
-      derivedCache.put(src, m)
-    }
-    m.get(tag) match {
-      case Some(df) => df
-      case None =>
-        val df = materialize(build)
-        // an already-materialized build returns src itself ([[materialize]]
-        // is idempotent); caching it would make the WeakHashMap value
-        // strongly reference its own key and pin the entry (and its
-        // blocks) forever — skip the memo, the value IS the key
-        if (!(df eq src)) m.put(tag, df): Unit
-        df
-    }
-  }
+      build: => DataFrame): DataFrame =
+    memo(src, tag) {
+      val df = materialize(build)
+      // an already-materialized build returns src itself ([[materialize]]
+      // is idempotent); storing it would make the weak entry strongly
+      // reference its own owner and pin it forever — store its absence
+      Option.when(!(df eq src))(df)
+    }.getOrElse(src)
 
   /** Memoized row count of a (materialized) frame — the loop-session
-    * sizing probe. Identity-keyed like [[derivedFrame]]: the count of an
-    * immutable checkpointed frame cannot change, so each instance pays
+    * sizing probe, owned by the frame like [[derivedFrame]]: the count of
+    * an immutable checkpointed frame cannot change, so each instance pays
     * its count job once per JVM instead of once per construction. */
-  private val rowCounts = new java.util.WeakHashMap[DataFrame, java.lang.Long]()
-
-  private[graft] def rowsOf(df: DataFrame): Long = rowCounts.synchronized {
-    val c = rowCounts.get(df)
-    if (c != null) c.longValue()
-    else { val n = df.count(); rowCounts.put(df, n): Unit; n }
-  }
+  private[graft] def rowsOf(df: DataFrame): Long = memo(df, "rows")(df.count())
 
   /** Chainable form of [[materialize]]. */
   implicit class MaterializeSyntax(private val df: DataFrame) {
     def materialized: DataFrame = materialize(df)
   }
 
-  /** Conf-pinned CHILD session, cached per (parent, overrides) — the
+  /** Conf-pinned CHILD session, memoized per (parent, overrides) — the
     * shared helper behind [[Relational.joinBloom]] and
     * [[Bucketing.joinBucketedSorted]]: some confs are read at PLANNING
     * time, so a set/restore around construction is undone before the
     * lazy plan materializes — the conf must live in a session that keeps
     * it set. The child copies the parent's runtime confs at creation
     * (static/non-modifiable entries skipped), then applies the overrides.
-    * Cache keys are WEAK on the parent and the child holds no reference
-    * back to it (only to the shared SparkContext/SharedState), so a
-    * stopped parent and its children collect together; the cache is
-    * keyed by override-set too, so two ops' children never collide. */
-  private val childSessions =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[Map[String, String], SparkSession]]()
-
+    * The override set is the key, so two ops' children never collide. */
   private[graft] def childSession(parent: SparkSession,
-      overrides: Map[String, String]): SparkSession = {
-    val m = childSessions.synchronized {
-      var mm = childSessions.get(parent)
-      if (mm == null) {
-        mm = scala.collection.mutable
-          .Map.empty[Map[String, String], SparkSession]
-        childSessions.put(parent, mm)
+      overrides: Map[String, String]): SparkSession =
+    memo(parent, overrides) {
+      val ns = parent.newSession()
+      parent.conf.getAll.foreach { case (k, v) =>
+        try ns.conf.set(k, v)
+        catch { case _: org.apache.spark.sql.AnalysisException => () }
       }
-      mm
+      overrides.foreach { case (k, v) => ns.conf.set(k, v) }
+      ns
     }
-    m.synchronized {
-      m.getOrElseUpdate(overrides, {
-        val ns = parent.newSession()
-        parent.conf.getAll.foreach { case (k, v) =>
-          try ns.conf.set(k, v)
-          catch { case _: org.apache.spark.sql.AnalysisException => () }
-        }
-        overrides.foreach { case (k, v) => ns.conf.set(k, v) }
-        ns
-      })
-    }
-  }
 
   /** Session for an ITERATIVE LOOP over a frame whose size was just
     * measured: shuffle partitions sized by the row count (capped at the
@@ -375,89 +257,119 @@ package object ops {
     * it builds them ONCE (offline / by the previous run) and every query
     * reads the stored artifact. This helper is that contract at fixture
     * scale: the first caller pays the physical build (a parquet write into
-    * a fresh temp dir), every later caller — across queries, bench passes,
-    * and specs in the same JVM — re-plans lazy reads over the same staged
-    * path. Only the PATH is cached (never a Dataset — a cached Dataset
-    * would pin its SparkSession, the [[graft.ops.Formats]] travel-cache
-    * discipline), so the content must be deterministic in `dir` and, once
-    * built, read-only (mutating ops stage PRIVATE copies instead).
+    * a fresh [[tempDir]]), every later caller — across queries, bench
+    * passes, and specs in the same JVM — re-plans lazy reads over the same
+    * staged path. Only the PATH is stored (a stored artifact of the
+    * [[memo]] store, owned by [[Jvm]]), so the content must be
+    * deterministic in `dir` and, once built, read-only (mutating ops stage
+    * PRIVATE copies instead). A build MAY stage another fixture — the
+    * fixture DAG is real (verified pairs → dup_labels; kmeans → semantic
+    * dedup; pq model → codes/ADC tables; see SURVEY §8) and must stay
+    * acyclic. */
+  private[graft] def stagedFixture(name: String, dir: String)(
+      build: String => Unit): String =
+    memo(Jvm, s"$name|$dir") {
+      val p = tempDir(s"graft_stage_$name")
+      build(p)
+      p
+    }
+
+  /** The strong owner of the JVM-scope entries of [[memo]]. */
+  private[ops] object Jvm
+
+  /** The MEMO STORE behind every cached value of the operator library:
+    * `memo(owner, key)(build)` returns the value `build` produced for
+    * (owner, key), building it on first use. Values are inputs of queries —
+    * deterministic functions of a read-only dataset dir — never query
+    * results: every query still runs live on top of them. Three policy
+    * classes use it, told apart by owner and by whether the build
+    * materializes:
+    *   - LAZY RELATION — owner the session, build does not materialize
+    *     ([[table]], `tradeEdges`, `ccincrStars`, `laneWalks*`): only the
+    *     driver-side relation resolution is saved, and every action still
+    *     scans the stored files, so plan locks see the store;
+    *   - STORED ARTIFACT — owner [[Jvm]], build writes under a [[tempDir]]
+    *     and returns its path or a layout of paths ([[stagedFixture]], the
+    *     [[Formats]] layouts): built once per JVM, read-only afterwards;
+    *     a consumer that mutates one works on a private copy;
+    *   - LOOP SUBFRAME — build materializes, owner the session for named
+    *     frames (`copurchaseEdges`, `principalLanes`) or the source frame
+    *     ([[derivedFrame]], [[rowsOf]]): the lineage-truncated inputs the
+    *     iterative loops would otherwise rebuild on every construction.
+    * [[childSession]]'s conf-pinned sessions are session-owned as well.
     *
-    * Concurrency + REENTRANCY contract: the map holds per-key memo CELLS
-    * installed by a pure-allocation computeIfAbsent; the build itself runs
-    * under the cell's own monitor, never inside a CHM bin lock. So a build
-    * closure MAY itself call stagedFixture for another key — the fixture
-    * DAG is real (verified pairs → dup_labels; kmeans → semantic dedup;
-    * pq model → codes/ADC tables; see SURVEY §8) and composed fixtures
-    * must resolve their upstream artifacts on a cold JVM regardless of
-    * which consumer runs first. A naive build-inside-computeIfAbsent would
-    * throw IllegalStateException("Recursive update") exactly on that
-    * first-consumer path. Only a dependency CYCLE can deadlock (two cells
-    * building each other); the DAG has none and new fixtures must keep it
-    * acyclic. Concurrent first callers of the same key still serialize on
-    * the cell; a failed build kills AND evicts its cell — threads already
+    * Lifetime: owners are held WEAKLY, but an entry whose value references
+    * its owner never collects. Every DataFrame pins its SparkSession
+    * (`Dataset.sparkSession`, through its QueryExecution), so the
+    * session-owned entries live as long as the JVM, and a stopped session
+    * that owns DataFrame entries is never collected. Each main and the
+    * shared spec session run one session per JVM, so nothing accumulates.
+    * Frame-owned values never hold their owner: they are materialized
+    * (lineage truncated) or scalars, and [[derivedFrame]] stores no value
+    * that IS its owner — so those entries collect with the source frame.
+    *
+    * Concurrency + REENTRANCY: the owner's map holds one CELL per key,
+    * installed by a pure-allocation computeIfAbsent; the build runs under
+    * the cell's own monitor, never inside a map lock. So a build MAY
+    * resolve other entries (a composed fixture staging its upstream on a
+    * cold JVM; a build-inside-computeIfAbsent would throw
+    * IllegalStateException("Recursive update") there); only a dependency
+    * CYCLE can deadlock. Concurrent first callers of one key serialize on
+    * its cell. A failed build kills AND evicts its cell: callers already
     * parked on the dead cell's monitor re-resolve through the map instead
     * of retrying in place, so the retry serializes on the single live
-    * replacement cell (never two concurrent builds of one key) — and the
-    * next caller retries with its own closure; every temp dir ever created
-    * (including those of failed builds) is removed by one JVM-exit hook. */
-  private final class StagedCell(name: String) {
-    private var built: String = null
+    * replacement cell (never two concurrent builds of one key). */
+  private[graft] def memo[V](owner: AnyRef, key: Any)(build: => V): V = {
+    val cells = memos.synchronized {
+      memos.computeIfAbsent(owner, _ => new ConcurrentHashMap[Any, MemoCell]())
+    }
+    var out: Option[Any] = None
+    while (out.isEmpty) {
+      // None: the fetched cell went STALE (another thread's build failed
+      // and evicted it) — re-resolve so the retry uses the live cell
+      out = cells.computeIfAbsent(key, _ => new MemoCell).resolve(cells, key, build)
+    }
+    out.get.asInstanceOf[V]
+  }
+
+  private val memos =
+    new java.util.WeakHashMap[AnyRef, ConcurrentHashMap[Any, MemoCell]]()
+
+  private final class MemoCell {
+    private var value: Option[Any] = None
     private var dead = false
-    /** Returns the staged path, or null when this cell is STALE: its build
-      * failed (under another thread) after the caller fetched it from the
-      * map. A stale cell must NOT be retried in place — the map no longer
-      * owns it, so a fresh caller may have installed a replacement cell and
-      * retrying here would run two concurrent builds of the same key. The
-      * caller loops back through `stagedCells` instead, so exactly one
-      * live cell serializes the rebuild. */
-    def resolve(key: String, build: String => Unit): String = synchronized {
-      if (dead) return null
-      if (built == null) {
-        val p = java.nio.file.Files.createTempDirectory(s"graft_stage_$name")
-        stagedDirs.add(p.toString): Unit
-        try {
-          build(p.toString)
-          built = p.toString
-        } catch {
+    /** The built value, or None when this cell is STALE: its build failed
+      * (under another thread) after the caller fetched it from the map. */
+    def resolve(cells: ConcurrentHashMap[Any, MemoCell], key: Any,
+        build: => Any): Option[Any] = synchronized {
+      if (!dead && value.isEmpty) {
+        try value = Some(build)
+        catch {
           case e: Throwable =>
-            // kill this cell and evict it so the next caller retries with
-            // ITS closure in a FRESH cell (threads already blocked on this
-            // monitor see dead=true and re-resolve through the map); the
-            // failed dir is still on the exit-hook list
             dead = true
-            stagedCells.remove(key, this): Unit
+            cells.remove(key, this): Unit
             throw e
         }
       }
-      built
+      value
     }
-  }
-  private val stagedCells =
-    new java.util.concurrent.ConcurrentHashMap[String, StagedCell]()
-  private val stagedDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      stagedDirs.forEach(p => rm(new java.io.File(p)))
-    }))
   }
 
-  private[graft] def stagedFixture(name: String, dir: String)(
-      build: String => Unit): String = {
-    val key = s"$name|$dir"
-    var out: String = null
-    while (out == null) {
-      // loop: a null resolve means the fetched cell went STALE (another
-      // thread's build failed and evicted it) — re-resolve through the map
-      // so the retry serializes on the one live replacement cell
-      out = stagedCells.computeIfAbsent(key, _ => new StagedCell(name))
-        .resolve(key, build)
-    }
-    out
+  /** A fresh directory under `java.io.tmpdir`, deleted with its contents
+    * at JVM exit — the one place the operator library creates temp dirs:
+    * stored artifacts (including those of failed builds), the sink ops'
+    * per-call outputs (the write IS the op) and the catalog warehouses all
+    * live exactly as long as the run. */
+  private[graft] def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(d): Unit
+    d.getPath
+  }
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  locally {
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d): Unit)))
   }
 
   /** Round to n decimals in pure double arithmetic: floor(x*10^n + 0.5)/10^n.

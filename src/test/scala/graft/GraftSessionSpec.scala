@@ -1,9 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 /** The session factory's env parsers, and the guard that keeps it the only
   * session builder: every main and spec session must come from
   * [[GraftSession.local]], and specs must run under the confs Bench times. */
@@ -34,22 +30,7 @@ class GraftSessionSpec extends SparkSpec {
 
   test("GraftSession holds the only SparkSession builder call under src/") {
     val needle = "SparkSession" + ".builder("
-    // the repo root is the working directory of `sbt test`
-    val root = Paths.get(sys.props("user.dir"))
-    val dirs = Seq("src/main/scala", "src/test/scala").map(root.resolve)
-    dirs.foreach(d => assert(Files.isDirectory(d), s"missing $d"))
-    def isComment(line: String): Boolean = {
-      val t = line.trim
-      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
-    }
-    val hits = dirs.flatMap { d =>
-      val files = Files.walk(d)
-      try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally files.close()
-    }.flatMap { (f: Path) =>
-      Files.readAllLines(f).asScala.filter(l => !isComment(l) && l.contains(needle))
-        .map(_ => root.relativize(f).toString)
-    }
+    val hits = SourceScan.hits(needle, Seq("src/main/scala", "src/test/scala")).map(_._1)
     assert(hits == Seq("src/main/scala/graft/GraftSession.scala"), hits)
   }
 

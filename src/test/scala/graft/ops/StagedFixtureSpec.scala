@@ -14,109 +14,129 @@ import graft.SparkSpec
   * results without rebuilding anything. */
 class StagedFixtureSpec extends SparkSpec {
 
-  test("stagedFixture: builds once per (name, dir), caches the path, keys by dir") {
-    val n = new AtomicInteger(0)
-    def build(dir: String): String = stagedFixture("sfspec_probe", dir) { p =>
-      n.incrementAndGet()
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$p/marker.txt"), dir): Unit
-    }
-    val p1 = build("dirA")
-    val p2 = build("dirA")
-    assert(p1 == p2, "same key must return the same staged path")
-    assert(n.get() == 1, "the build must run exactly once per key")
-    val p3 = build("dirB")
-    assert(p3 != p1, "a different dataset dir is a different fixture")
-    assert(n.get() == 2)
-    // the staged content is what the first build wrote
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$p1/marker.txt")) == "dirA")
-  }
+  /** A stored fixture at one owner scope of the [[memo]] store: the
+    * (name, dir) → staged path contract below holds at every scope. */
+  private type Fixture = (String, String) => (String => Unit) => String
 
-  test("stagedFixture: a failed build caches nothing; the retry builds fresh") {
-    val n = new AtomicInteger(0)
-    def attempt(fail: Boolean): String =
-      stagedFixture("sfspec_fail", "dirF") { p =>
+  private def stagedAt(owner: => AnyRef): Fixture = (name, dir) => build =>
+    memo(owner, s"$name|$dir") {
+      val p = tempDir(s"graft_sfspec_$name")
+      build(p)
+      p
+    }
+
+  private lazy val frameOwner = spark.range(1).toDF()
+
+  private val scopes = Seq[(String, Fixture)](
+    "stagedFixture" -> ((name, dir) => build => stagedFixture(name, dir)(build)),
+    "memo(session)" -> stagedAt(spark),
+    "memo(frame)" -> stagedAt(frameOwner))
+
+  scopes.foreach { case (scope, staged) =>
+    test(s"$scope: builds once per (name, dir), caches the path, keys by dir") {
+      val n = new AtomicInteger(0)
+      def build(dir: String): String = staged("sfspec_probe", dir) { p =>
         n.incrementAndGet()
-        if (fail) sys.error("staged build failed")
         java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$p/ok.txt"), "ok"): Unit
+          java.nio.file.Paths.get(s"$p/marker.txt"), dir): Unit
       }
-    intercept[RuntimeException](attempt(fail = true))
-    val p = attempt(fail = false)
-    assert(n.get() == 2, "the failure must not have been cached")
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$p/ok.txt")))
-  }
+      val p1 = build("dirA")
+      val p2 = build("dirA")
+      assert(p1 == p2, "same key must return the same staged path")
+      assert(n.get() == 1, "the build must run exactly once per key")
+      val p3 = build("dirB")
+      assert(p3 != p1, "a different dataset dir is a different fixture")
+      assert(n.get() == 2)
+      // the staged content is what the first build wrote
+      assert(java.nio.file.Files.readString(
+        java.nio.file.Paths.get(s"$p1/marker.txt")) == "dirA")
+    }
 
-  test("stagedFixture: a caller parked behind a FAILING build re-resolves, never double-builds") {
-    // the stale-cell race: A starts the build (holds the cell monitor), B
-    // fetches the SAME cell from the map and parks on its monitor, then
-    // A's build fails — the cell dies and is evicted. B must NOT retry
-    // inside the dead cell (a fresh caller may have installed a
-    // replacement: two concurrent builds of one key); it re-resolves
-    // through the map and serializes on the single live cell.
-    val builds = new AtomicInteger(0)
-    val aBuilding = new java.util.concurrent.CountDownLatch(1)
-    def fixture(fail: Boolean): String =
-      stagedFixture("sfspec_stale", "dirS") { p =>
-        builds.incrementAndGet()
-        if (fail) {
-          aBuilding.countDown()
-          Thread.sleep(150) // give B time to park on this cell's monitor
-          sys.error("staged build failed under a parked waiter")
+    test(s"$scope: a failed build caches nothing; the retry builds fresh") {
+      val n = new AtomicInteger(0)
+      def attempt(fail: Boolean): String =
+        staged("sfspec_fail", "dirF") { p =>
+          n.incrementAndGet()
+          if (fail) sys.error("staged build failed")
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(s"$p/ok.txt"), "ok"): Unit
         }
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$p/ok.txt"), "ok"): Unit
-      }
-    val bPath = new java.util.concurrent.atomic.AtomicReference[String]()
-    val bErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val b = new Thread(() => {
-      try { aBuilding.await(); bPath.set(fixture(fail = false)) }
-      catch { case t: Throwable => bErr.set(t) }
-    })
-    b.start()
-    intercept[RuntimeException](fixture(fail = true))
-    b.join(20000)
-    assert(!b.isAlive && bErr.get() == null, s"B must succeed: ${bErr.get()}")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"${bPath.get()}/ok.txt")))
-    assert(builds.get() == 2, "exactly A's failed build + B's rebuild")
-    // and later callers get B's path straight from the live cell
-    assert(fixture(fail = true) == bPath.get(), "no third build runs")
-    assert(builds.get() == 2)
-  }
+      intercept[RuntimeException](attempt(fail = true))
+      val p = attempt(fail = false)
+      assert(n.get() == 2, "the failure must not have been cached")
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$p/ok.txt")))
+    }
 
-  test("stagedFixture: a build may stage its upstream fixture (nested builds)") {
-    // the fixture DAG is real (verified pairs → dup_labels, pq model →
-    // codes): a composed fixture's build closure resolves its upstream
-    // fixture INSIDE the outer build. Round 10 shipped this exact shape
-    // and it threw IllegalStateException("Recursive update") on any
-    // fresh JVM where the consumer ran before its producer — builds ran
-    // inside ConcurrentHashMap.computeIfAbsent, whose mapping function
-    // must not insert other keys. This pins the reentrancy contract.
-    val inner = new AtomicInteger(0)
-    val outer = new AtomicInteger(0)
-    def innerFixture(): String = stagedFixture("sfspec_nest_in", "dirN") { q =>
-      inner.incrementAndGet()
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$q/in.txt"), "upstream"): Unit
+    test(s"$scope: a caller parked behind a FAILING build re-resolves, never double-builds") {
+      // the stale-cell race: A starts the build (holds the cell monitor), B
+      // fetches the SAME cell from the map and parks on its monitor, then
+      // A's build fails — the cell dies and is evicted. B must NOT retry
+      // inside the dead cell (a fresh caller may have installed a
+      // replacement: two concurrent builds of one key); it re-resolves
+      // through the map and serializes on the single live cell.
+      val builds = new AtomicInteger(0)
+      val aBuilding = new java.util.concurrent.CountDownLatch(1)
+      def fixture(fail: Boolean): String =
+        staged("sfspec_stale", "dirS") { p =>
+          builds.incrementAndGet()
+          if (fail) {
+            aBuilding.countDown()
+            Thread.sleep(150) // give B time to park on this cell's monitor
+            sys.error("staged build failed under a parked waiter")
+          }
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(s"$p/ok.txt"), "ok"): Unit
+        }
+      val bPath = new java.util.concurrent.atomic.AtomicReference[String]()
+      val bErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val b = new Thread(() => {
+        try { aBuilding.await(); bPath.set(fixture(fail = false)) }
+        catch { case t: Throwable => bErr.set(t) }
+      })
+      b.start()
+      intercept[RuntimeException](fixture(fail = true))
+      b.join(20000)
+      assert(!b.isAlive && bErr.get() == null, s"B must succeed: ${bErr.get()}")
+      assert(java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"${bPath.get()}/ok.txt")))
+      assert(builds.get() == 2, "exactly A's failed build + B's rebuild")
+      // and later callers get B's path straight from the live cell
+      assert(fixture(fail = true) == bPath.get(), "no third build runs")
+      assert(builds.get() == 2)
     }
-    val p = stagedFixture("sfspec_nest_out", "dirN") { po =>
-      outer.incrementAndGet()
-      val pi = innerFixture() // nested: builds the upstream fixture
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$po/out.txt"),
-        java.nio.file.Files.readString(
-          java.nio.file.Paths.get(s"$pi/in.txt"))): Unit
+
+    test(s"$scope: a build may stage its upstream fixture (nested builds)") {
+      // the fixture DAG is real (verified pairs → dup_labels, pq model →
+      // codes): a composed fixture's build closure resolves its upstream
+      // fixture INSIDE the outer build. Round 10 shipped this exact shape
+      // and it threw IllegalStateException("Recursive update") on any
+      // fresh JVM where the consumer ran before its producer — builds ran
+      // inside ConcurrentHashMap.computeIfAbsent, whose mapping function
+      // must not insert other keys. This pins the reentrancy contract.
+      val inner = new AtomicInteger(0)
+      val outer = new AtomicInteger(0)
+      def innerFixture(): String = staged("sfspec_nest_in", "dirN") { q =>
+        inner.incrementAndGet()
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(s"$q/in.txt"), "upstream"): Unit
+      }
+      val p = staged("sfspec_nest_out", "dirN") { po =>
+        outer.incrementAndGet()
+        val pi = innerFixture() // nested: builds the upstream fixture
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(s"$po/out.txt"),
+          java.nio.file.Files.readString(
+            java.nio.file.Paths.get(s"$pi/in.txt"))): Unit
+      }
+      assert(outer.get() == 1 && inner.get() == 1,
+        "each fixture must build exactly once")
+      assert(java.nio.file.Files.readString(
+        java.nio.file.Paths.get(s"$p/out.txt")) == "upstream")
+      // the upstream fixture staged from inside the build is now shared:
+      // a direct caller gets a cache hit, never a rebuild
+      innerFixture(): Unit
+      assert(inner.get() == 1, "the nested build must have been cached")
     }
-    assert(outer.get() == 1 && inner.get() == 1,
-      "each fixture must build exactly once")
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$p/out.txt")) == "upstream")
-    // the upstream fixture staged from inside the build is now shared:
-    // a direct caller gets a cache hit, never a rebuild
-    innerFixture(): Unit
-    assert(inner.get() == 1, "the nested build must have been cached")
   }
 
   /** A cold dataset dir: symlinks to every sf0.001 table under a fresh
@@ -153,6 +173,24 @@ class StagedFixtureSpec extends SparkSpec {
       assert(cold == rows(fn(spark, canon)),
         s"$name diverges between cold-dir-first and warmed runs")
     }
+  }
+
+  test("time travel and vacuum share one physical layout build on a cold dir") {
+    // the commit-log layout is a stored artifact: vacuum clones the layout
+    // time travel built (plain file copies) instead of building its own.
+    // Every layout build writes its base snapshot once, to `<layout>/data`.
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.graftbridge.MicroBatchPlans
+    val dir = freshDir("cold_travel")
+    val (_, executions) = MicroBatchPlans.executions(spark) {
+      Formats.timeTravelPlan(spark, dir)
+      Formats.vacuumPlan(spark, dir, 0L)
+    }
+    val baseWrites = executions.flatMap(_.logical.collect {
+      case w: InsertIntoHadoopFsRelationCommand if w.outputPath.getName == "data" =>
+        w.outputPath.toString
+    }).distinct
+    assert(baseWrites.size == 1, s"layout builds: $baseWrites")
   }
 
   test("every registered query constructs in seeded-SHUFFLED order on a cold dir") {

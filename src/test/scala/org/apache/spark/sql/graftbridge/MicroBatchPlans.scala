@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{CurrentBatchTimestamp, Expression, ExpressionWithRandomSeed}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.streaming.runtime.IncrementalExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
@@ -16,13 +17,17 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
   * `SparkListenerSQLExecutionEnd.qe` is private[sql], hence this package. */
 object MicroBatchPlans {
   def during[T](spark: SparkSession)(body: => T): (T, Seq[IncrementalExecution]) = {
-    val seen = new ConcurrentLinkedQueue[IncrementalExecution]()
+    val (out, seen) = executions(spark)(body)
+    (out, seen.collect { case ie: IncrementalExecution => ie }.sortBy(_.currentBatchId))
+  }
+
+  /** The QueryExecution of every SQL execution that ended while `body`
+    * ran, batch or streaming, in the order they ended. */
+  def executions[T](spark: SparkSession)(body: => T): (T, Seq[QueryExecution]) = {
+    val seen = new ConcurrentLinkedQueue[QueryExecution]()
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case end: SparkListenerSQLExecutionEnd => end.qe match {
-          case ie: IncrementalExecution => seen.add(ie): Unit
-          case _ =>
-        }
+        case end: SparkListenerSQLExecutionEnd => Option(end.qe).foreach(seen.add(_): Unit)
         case _ =>
       }
     }
@@ -31,7 +36,7 @@ object MicroBatchPlans {
     try {
       val out = body
       sc.listenerBus.waitUntilEmpty()
-      (out, seen.asScala.toSeq.sortBy(_.currentBatchId))
+      (out, seen.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 
