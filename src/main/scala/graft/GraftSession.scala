@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
+
+import graft.functions.GraftExtensions
 
 /** The one place a SparkSession is built. Every main (Bench, Verify,
   * StreamCli, the tools mains) and every spec session goes through
@@ -36,23 +38,15 @@ object GraftSession {
     "spark.ui.enabled" -> "false")
 
   /** Builds (or returns the existing) session: [[confs]], then the
-    * caller's `overrides`, then SPARK_GRAFT_CONF. Extension classes named
-    * in `spark.sql.extensions` are installed through the builder, because
-    * Spark reads that conf from the SparkContext, which a session built on
-    * a running context (as in the specs) does not get to set. */
+    * caller's `overrides`, then SPARK_GRAFT_CONF, with
+    * [[graft.functions.GraftExtensions]] installed, so every session
+    * resolves the engine's SQL functions. */
   def local(cpus: Int = GraftSession.cpus,
       overrides: Seq[(String, String)] = Nil): SparkSession = {
     val all = (confs(cpus) ++ overrides ++
       parseConf(sys.env.get("SPARK_GRAFT_CONF"))).toMap
-    val b = SparkSession.builder()
-    all.foreach {
-      case ("spark.sql.extensions", classes) =>
-        classes.split(",").map(_.trim).filter(_.nonEmpty).foreach { c =>
-          b.withExtensions(Class.forName(c).getConstructor().newInstance()
-            .asInstanceOf[SparkSessionExtensions => Unit]): Unit
-        }
-      case (k, v) => b.config(k, v): Unit
-    }
+    val b = SparkSession.builder().withExtensions(new GraftExtensions)
+    all.foreach { case (k, v) => b.config(k, v): Unit }
     b.getOrCreate()
   }
 

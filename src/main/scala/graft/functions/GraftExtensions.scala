@@ -1,13 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions installer for the engine's native functions and
-  * optimizer rules — the deployment-grade registration path (vs. the
-  * per-session [[PolyHash.register]]): ships in the session from
-  * construction via
+/** SparkSessionExtensions installer for the engine's native SQL functions.
+  * [[graft.GraftSession.local]] installs it in every session it builds;
+  * outside that factory it ships in a session from construction via
   *
   * {{{
   * SparkSession.builder()
@@ -19,68 +18,48 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * `dot_product`, `shingle_hashes`, `cdc_boundaries`, and the mergeable
   * quantile-sketch family (`q_sketch_agg`, `q_merge_agg`,
   * `q_sketch_values` — constant arguments extracted at resolution time,
-  * non-constant ones rejected with the standard analysis error), and
-  * every query benefits from
-  * [[graft.plans.MergeDisjointFilterUnions]] — on a 1000-executor cluster
-  * the config string is the only wiring needed. (MinHashSig / SimHashBits
-  * take Scala-level parameters — permutation constants, bit width — and
-  * stay Column-API-only.)
+  * non-constant ones rejected with the standard analysis error). On a
+  * cluster the config string is the only wiring needed. (MinHashSig /
+  * SimHashBits take Scala-level parameters — permutation constants, bit
+  * width — and stay Column-API-only.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  import GraftExtensions.wrongArgs
 
-  private type Builder =
-    Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    def inject(name: String, cls: Class[_])(
+        builder: Seq[Expression] => Expression): Unit =
+      ext.injectFunction(
+        (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    inject("poly_hash", classOf[PolyHash]) {
+      case Seq(e) => PolyHash(e)
+      case other => wrongArgs("poly_hash", 1, other.size)
+    }
+    inject("dot_product", classOf[DotProduct]) {
+      case Seq(a, b) => DotProduct(a, b)
+      case other => wrongArgs("dot_product", 2, other.size)
+    }
+    inject("shingle_hashes", classOf[ShingleHashes]) {
+      case Seq(e) => ShingleHashes(e)
+      case other => wrongArgs("shingle_hashes", 1, other.size)
+    }
+    inject("cdc_boundaries", classOf[CdcBoundaries]) {
+      case Seq(e) => CdcBoundaries(e)
+      case other => wrongArgs("cdc_boundaries", 1, other.size)
+    }
+    inject("q_sketch_agg", classOf[QSketchAgg])(QuantileSketch.sketchBuilder)
+    inject("q_merge_agg", classOf[QMergeAgg])(QuantileSketch.mergeBuilder)
+    inject("q_sketch_values", classOf[QSketchValues])(QuantileSketch.valuesBuilder)
+  }
+}
 
-  private def wrongArgs(name: String, expected: Int, actual: Int): Nothing =
-    throw new org.apache.spark.sql.AnalysisException(
+object GraftExtensions {
+  /** The standard analysis error for a wrong argument count: raised while
+    * the SQL text resolves, not as a crash at plan time. */
+  private[functions] def wrongArgs(name: String, expected: Int, actual: Int): Nothing =
+    throw new AnalysisException(
       errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
       messageParameters = Map(
         "functionName" -> s"`$name`", "expectedNum" -> expected.toString,
         "actualNum" -> actual.toString, "docroot" -> "-"))
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("poly_hash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "poly_hash"),
-      ((exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        PolyHash.fromArgs(exprs)): Builder))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      ((exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        exprs match {
-          case Seq(a, b) => DotProduct(a, b)
-          case other => wrongArgs("dot_product", 2, other.size)
-        }): Builder))
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      ((exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        exprs match {
-          case Seq(e) => ShingleHashes(e)
-          case other => wrongArgs("shingle_hashes", 1, other.size)
-        }): Builder))
-    ext.injectFunction((
-      new FunctionIdentifier("cdc_boundaries"),
-      new ExpressionInfo(classOf[CdcBoundaries].getName, "cdc_boundaries"),
-      ((exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        exprs match {
-          case Seq(e) => CdcBoundaries(e)
-          case other => wrongArgs("cdc_boundaries", 1, other.size)
-        }): Builder))
-    ext.injectFunction((
-      new FunctionIdentifier("q_sketch_agg"),
-      new ExpressionInfo(classOf[QSketchAgg].getName, "q_sketch_agg"),
-      QuantileSketch.sketchBuilder: Builder))
-    ext.injectFunction((
-      new FunctionIdentifier("q_merge_agg"),
-      new ExpressionInfo(classOf[QMergeAgg].getName, "q_merge_agg"),
-      QuantileSketch.mergeBuilder: Builder))
-    ext.injectFunction((
-      new FunctionIdentifier("q_sketch_values"),
-      new ExpressionInfo(classOf[QSketchValues].getName, "q_sketch_values"),
-      QuantileSketch.valuesBuilder: Builder))
-    ext.injectOptimizerRule(_ => graft.plans.MergeDisjointFilterUnions)
-  }
 }

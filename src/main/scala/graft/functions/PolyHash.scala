@@ -72,23 +72,4 @@ object PolyHash {
   /** Column-level entry point: `poly_hash(c)`. */
   def apply(c: Column): Column =
     Bridge.column(PolyHash(Bridge.expression(c)))
-
-  /** Arity-checked builder for SQL registration: a wrong argument count is
-    * an analysis-time error, not a NoSuchElementException at plan time (and
-    * extra arguments are never silently dropped). */
-  def fromArgs(exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): PolyHash =
-    exprs match {
-      case Seq(e) => PolyHash(e)
-      case other => throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "`poly_hash`", "expectedNum" -> "1",
-          "actualNum" -> other.size.toString, "docroot" -> "-"))
-    }
-
-  /** Register `poly_hash` in a session's function registry so SQL text and
-    * `expr("poly_hash(x)")` can use it. Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash", fromArgs, "built-in")
 }

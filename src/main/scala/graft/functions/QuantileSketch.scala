@@ -108,13 +108,6 @@ object QuantileSketch {
   def values(c: Column, ps: Seq[Double]): Column =
     Bridge.column(QSketchValues(Bridge.expression(c), ps))
 
-  private def wrongArgs(name: String, expected: Int, actual: Int): Nothing =
-    throw new org.apache.spark.sql.AnalysisException(
-      errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-      messageParameters = Map(
-        "functionName" -> s"`$name`", "expectedNum" -> expected.toString,
-        "actualNum" -> actual.toString, "docroot" -> "-"))
-
   private def nonFoldableArg(
       name: String, param: String, tpe: String): Nothing =
     throw new org.apache.spark.sql.AnalysisException(
@@ -124,10 +117,10 @@ object QuantileSketch {
         "paramType" -> tpe))
 
   /** SQL builders — constant arguments (accuracy, the percentile array)
-    * extracted at resolution time; shared by [[GraftExtensions]] and
-    * [[register]]. Each arity-correct-but-invalid shape gets its OWN
-    * analysis error (non-foldable / NULL / out-of-range accuracy) instead
-    * of a confusing "expected 2, got 2" WRONG_NUM_ARGS fallthrough. */
+    * extracted at resolution time; installed by [[GraftExtensions]]. Each
+    * arity-correct-but-invalid shape gets its OWN analysis error
+    * (non-foldable / NULL / out-of-range accuracy) instead of a confusing
+    * "expected 2, got 2" WRONG_NUM_ARGS fallthrough. */
   private[functions] val sketchBuilder: Seq[Expression] => Expression = {
     case Seq(c, org.apache.spark.sql.catalyst.expressions
       .Literal(acc, LongType | IntegerType | ShortType | ByteType))
@@ -145,12 +138,12 @@ object QuantileSketch {
           "currentValue" -> acc.toString))
     case Seq(_, _) => // arity 2, but non-literal / NULL / non-integral
       nonFoldableArg("q_sketch_agg", "accuracy", "\"BIGINT\"")
-    case other => wrongArgs("q_sketch_agg", 2, other.size)
+    case other => GraftExtensions.wrongArgs("q_sketch_agg", 2, other.size)
   }
 
   private[functions] val mergeBuilder: Seq[Expression] => Expression = {
     case Seq(c) => QMergeAgg(c)
-    case other => wrongArgs("q_merge_agg", 1, other.size)
+    case other => GraftExtensions.wrongArgs("q_merge_agg", 1, other.size)
   }
 
   private[functions] val valuesBuilder: Seq[Expression] => Expression = {
@@ -164,16 +157,7 @@ object QuantileSketch {
       QSketchValues(c, arr.toDoubleArray().toSeq)
     case Seq(_, _) => // arity 2, but not a constant double array
       nonFoldableArg("q_sketch_values", "percentiles", "\"ARRAY<DOUBLE>\"")
-    case other => wrongArgs("q_sketch_values", 2, other.size)
-  }
-
-  /** Register the family in a session's function registry so SQL text and
-    * `expr(...)` can use it. Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("q_sketch_agg", sketchBuilder, "built-in")
-    reg.createOrReplaceTempFunction("q_merge_agg", mergeBuilder, "built-in")
-    reg.createOrReplaceTempFunction("q_sketch_values", valuesBuilder, "built-in")
+    case other => GraftExtensions.wrongArgs("q_sketch_values", 2, other.size)
   }
 }
 

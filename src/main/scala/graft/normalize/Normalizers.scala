@@ -217,6 +217,13 @@ object Normalizers {
           .partitionBy(col("tid"), col("taker"), col("coin"))
           .orderBy(col("ts_ms"))))
       .filter(col("rn") === 1)
+    hyperliquidUnified(pairs, market, ingestMs)
+  }
+
+  /** Deduplicated Hyperliquid pairs → the unified schema: the projection
+    * shared by the batch normalizer and the streaming assembly. */
+  private[graft] def hyperliquidUnified(pairs: DataFrame, market: String,
+      ingestMs: Column = defaultIngest): DataFrame = {
     val dirLower = lower(col("fill.dir"))
     val price = toFloat0(col("fill.px"))
     val qty = abs(toFloat0(col("fill.sz")))

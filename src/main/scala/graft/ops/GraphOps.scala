@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -90,7 +90,14 @@ object GraphOps {
   /** The [[prIters]] quantized power iterations over any (src, dst) edge
     * frame — split out so the spec can drive hand-built graphs (a 2-cycle
     * must be a fixed point) and partition-order probes. Returns (id, pr). */
-  private[graft] def pageRankOf(edges0: DataFrame): DataFrame = {
+  private[graft] def pageRankOf(edges0: DataFrame): DataFrame =
+    rankLoop(edges0, seed = lit(1.0), restart = lit(1.0 - prDamping))
+
+  /** The one quantized power iteration behind [[pageRankOf]] and
+    * [[pprOf]]: every vertex starts at `seed` and each round's rank is
+    * `restart + d · Σ in-contributions`, both columns over the vertex `id`. */
+  private def rankLoop(edges0: DataFrame, seed: Column, restart: Column)
+      : DataFrame = {
     val home = edges0.sparkSession
     // entry materialization memoized on the input instance: over the
     // stable LAZY [[tradeEdges]] relation this builds once per JVM while
@@ -112,7 +119,7 @@ object GraphOps {
         .union(edges.select(col("dst").as("id"))).distinct())
     val withDeg = derivedFrame(edges, "withdeg")(
       edges.join(edges.groupBy("src").agg(count(lit(1)).as("deg")), "src"))
-    var pr = vertices.withColumn("pr", lit(1.0))
+    var pr = vertices.withColumn("pr", seed)
     for (_ <- 1 to prIters) {
       // contributions quantized per edge, summed exactly per target
       val contrib = withDeg
@@ -124,7 +131,7 @@ object GraphOps {
       // linear round tree (pr consumed once, by contrib) — [[roundMat]]
       pr = roundMat(loopSpark, home)(vertices.join(contrib, Seq("id"), "left")
         .select(col("id"),
-          (lit(1.0 - prDamping) + lit(prDamping) *
+          (restart + lit(prDamping) *
             (coalesce(col("qsum"), lit(0L)).cast(DoubleType) / 1e12)).as("pr")))
     }
     transplant(home, pr)
@@ -190,36 +197,9 @@ object GraphOps {
     * so the spec can drive closed-form graphs (on a 2-cycle from the
     * source, mass alternates and the source keeps the teleport share;
     * a vertex unreachable from the source must read exactly 0). */
-  private[graft] def pprOf(edges0: DataFrame, source: Long): DataFrame = {
-    val home = edges0.sparkSession
-    val e0 = derivedFrame(edges0, "mat")(edges0) // the [[pageRankOf]] memo
-
-    val loopSpark = loopSession(home, rowsOf(e0))
-    def hint(d: DataFrame) = if (loopSpark eq home) broadcast(d) else d
-    val edges = transplant(loopSpark, e0)
-    val vertices = derivedFrame(edges, "verts")(
-      edges.select(col("src").as("id"))
-        .union(edges.select(col("dst").as("id"))).distinct())
-    val withDeg = derivedFrame(edges, "withdeg")(
-      edges.join(edges.groupBy("src").agg(count(lit(1)).as("deg")), "src"))
-    val restart = when(col("id") === source, 1.0 - prDamping).otherwise(0.0)
-    var pr = vertices.withColumn("pr",
-      when(col("id") === source, 1.0).otherwise(0.0))
-    for (_ <- 1 to prIters) {
-      val contrib = withDeg
-        .join(hint(pr), col("src") === col("id"))
-        .select(col("dst").as("id"),
-          floor(col("pr") / col("deg").cast(DoubleType) * 1e12 + 0.5)
-            .cast(LongType).as("q"))
-        .groupBy("id").agg(sum("q").as("qsum"))
-      // linear round tree (pr consumed once, by contrib) — [[roundMat]]
-      pr = roundMat(loopSpark, home)(vertices.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (restart + lit(prDamping) *
-            (coalesce(col("qsum"), lit(0L)).cast(DoubleType) / 1e12)).as("pr")))
-    }
-    transplant(home, pr)
-  }
+  private[graft] def pprOf(edges0: DataFrame, source: Long): DataFrame =
+    rankLoop(edges0, seed = when(col("id") === source, 1.0).otherwise(0.0),
+      restart = when(col("id") === source, 1.0 - prDamping).otherwise(0.0))
 
   /** TRIANGLE COUNTING per vertex over the undirected trade graph — the
     * clustering/cohesion primitive next to [[pageRank]]'s influence

@@ -92,7 +92,7 @@ object StreamAssembly {
       .withColumn("ts_event", timestamp_millis(col("ts_ms")))
       .withWatermark("ts_event", watermark)
       .dropDuplicatesWithinWatermark("tid", "taker", "coin")
-    finishUnified(pairs, market)
+    Normalizers.hyperliquidUnified(pairs, market)
   }
 
   /** Any normalized stream → 1-minute tumbling liquidation dashboard
@@ -1922,27 +1922,5 @@ object StreamAssembly {
       .as[(String, Option[Double], Option[Double])]
       .groupByKey(_._1)
       .transformWithState(new VwapProcessor(ttl), timeMode, OutputMode.Append())
-  }
-
-  /** Project the pair-stage columns to the unified schema (streaming twin of
-    * the batch normalizer's finish). */
-  private def finishUnified(pairs: DataFrame, market: String): DataFrame = {
-    val dirLower = lower(col("fill.dir"))
-    val price = coalesce(col("fill.px").try_cast("double"), lit(0.0))
-    val qty = abs(coalesce(col("fill.sz").try_cast("double"), lit(0.0)))
-    pairs.select(
-      lit("hyperliquid").as("exchange"),
-      lit(market).as("market"),
-      concat(upper(col("coin")), lit("USDC")).as("symbol"),
-      when(dirLower.contains("close long"), "long")
-        .when(dirLower.contains("close short"), "short")
-        .when(upper(col("fill.side")) === "A", "long")
-        .when(upper(col("fill.side")) === "B", "short").as("side"),
-      qty.as("qty"),
-      price.as("price"),
-      when(price =!= 0 && qty =!= 0, price * qty).as("notional"),
-      col("ts_ms").as("ts_exch_ms"),
-      unix_millis(current_timestamp()).as("ts_ingest_ms"),
-      col("fill_raw").as("raw"))
   }
 }

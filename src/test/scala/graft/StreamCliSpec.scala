@@ -16,7 +16,7 @@ import graft.normalize.Fixtures
   * over fixture frame files producing both fan-out sinks. */
 class StreamCliSpec extends SparkSpec {
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String) = ops.tempDir(prefix)
 
   /** Fixture captures for every `--all` source. The Binance capture cycles
     * its fixture frames up to `binanceFrames`: more than the replay

@@ -88,5 +88,5 @@ class CdcBoundariesSpec extends SparkSpec with TableDrivenPropertyChecks {
   }
 
   // SQL-surface resolution via GraftExtensions is asserted alongside the
-  // other injected functions in MergeUnionSpec's extension-session test.
+  // other injected functions in GraftSessionSpec.
 }

@@ -34,14 +34,12 @@ class PolyHashSpec extends SparkSpec {
   }
 
   test("registers as a SQL function") {
-    PolyHash.register(spark)
     val r = spark.sql("SELECT poly_hash('spark') AS h").collect()(0).getLong(0)
     val ref = "spark".getBytes("UTF-8").foldLeft(0L)((a, b) => (a * 31 + (b & 0xff)) % M)
     assert(r == ref)
   }
 
   test("wrong arity is an analysis error, not a plan-time crash") {
-    PolyHash.register(spark)
     intercept[org.apache.spark.sql.AnalysisException](
       spark.sql("SELECT poly_hash()").collect())
     intercept[org.apache.spark.sql.AnalysisException](

@@ -13,7 +13,6 @@ class QuantileSketchSpec extends SparkSpec {
 
   test("SQL surface == Column API, through the full sketch→merge→query chain") {
     import spark.implicits._
-    QuantileSketch.register(spark)
     val df = (1 to 500).map(i => ((i * 7) % 500 + 0.25, i % 5)).toDF("v", "g")
     df.createOrReplaceTempView("qs_probe")
     val sql = spark.sql(
@@ -34,7 +33,6 @@ class QuantileSketchSpec extends SparkSpec {
   }
 
   test("wrong arity / non-constant args are analysis errors") {
-    QuantileSketch.register(spark)
     intercept[org.apache.spark.sql.AnalysisException](
       spark.sql("SELECT q_sketch_agg(1.0)").collect())
     intercept[org.apache.spark.sql.AnalysisException](

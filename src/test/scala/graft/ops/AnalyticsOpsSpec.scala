@@ -567,7 +567,7 @@ class AnalyticsOpsSpec extends SparkSpec {
       ("feed", new Timestamp(t0 + off), i.toLong) }
       .toDF("event_type", "ts", "event_id")
       .withColumn("value", lit(1.0)).withColumn("user_id", lit(1L))
-    val out = java.nio.file.Files.createTempDirectory("hb").toString
+    val out = tempDir("hb")
     df.write.mode("overwrite").parquet(s"$out/events.parquet")
     val r = DataQuality.dqHeartbeat(spark, out).collect()
     assert(r.length == 1 && r.head.getLong(2) == 5L)
@@ -1242,7 +1242,7 @@ class AnalyticsOpsSpec extends SparkSpec {
         else Seq("even")
       (i.toLong, words.mkString(" "), "en", "s", 1L)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("burst").toString
+    val tmp = tempDir("burst")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val got = TextOps.textBurstiness(spark, tmp).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
@@ -1261,7 +1261,7 @@ class AnalyticsOpsSpec extends SparkSpec {
       Seq((2L, t(3, 23), 11L, "view", 1.0, "{}"),
         (3L, t(-7, 5), 12L, "view", 1.0, "{}")))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val tmp = java.nio.file.Files.createTempDirectory("heat").toString
+    val tmp = tempDir("heat")
     ev.write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val got = TimeWindows.winHeatmap(spark, tmp).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
@@ -1283,7 +1283,7 @@ class AnalyticsOpsSpec extends SparkSpec {
       (i.toLong, f"w$i%04d", "en", src, 5L)
     } :+ (9999L, "common common common", "en", "a", 20L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("oov").toString
+    val tmp = tempDir("oov")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val got = TextOps.tokOov(spark, tmp).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions.col
 
@@ -13,7 +11,7 @@ class BucketingSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("same-bucketed tables join with no shuffle and correct results") {
-    val wh = Files.createTempDirectory("graft_wh").toString
+    val wh = tempDir("graft_wh")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS bucketdb LOCATION '$wh'")
     val li = table(spark, dir, "lineitem").select("l_orderkey", "l_quantity")
     val ord = table(spark, dir, "orders").select("o_orderkey", "o_totalprice")

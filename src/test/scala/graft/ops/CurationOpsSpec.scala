@@ -16,7 +16,7 @@ class CurationOpsSpec extends SparkSpec {
   /** Write rows as <tmp>/documents.parquet and return the tmp dir. */
   private def miniCorpus(rows: Seq[(Long, String, String, String, Long)]): String = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-docs-").toString
+    val tmp = tempDir("graft-docs-")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     tmp

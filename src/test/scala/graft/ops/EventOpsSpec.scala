@@ -321,7 +321,7 @@ class EventOpsSpec extends SparkSpec {
       Seq((1L, new Timestamp(1700006400000L + 3 * 86400000L + 3600000L),
         "click"))) // same user+day dup: distinct() must collapse it
       .toDF("user_id", "ts", "event_type")
-    val tmp = java.nio.file.Files.createTempDirectory("stick").toString
+    val tmp = tempDir("stick")
     ev.write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val got = EventOps.userStickiness(spark, tmp).collect()
     assert(got.length == 1, s"${got.toSeq}")

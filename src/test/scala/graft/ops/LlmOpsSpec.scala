@@ -124,7 +124,7 @@ class LlmOpsSpec extends SparkSpec {
       }
       (i.toLong, e, i % 4)
     }
-    val dir = java.nio.file.Files.createTempDirectory("pca_spec").toString
+    val dir = tempDir("pca_spec")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val r = VectorOps.vecPca(spark, dir).collect().head
@@ -159,7 +159,7 @@ class LlmOpsSpec extends SparkSpec {
         }
         ((40 + i).toLong, e, 1)
       }
-    val dir = java.nio.file.Files.createTempDirectory("vdrift_spec").toString
+    val dir = tempDir("vdrift_spec")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val got = VectorOps.vecDrift(spark, dir).collect()
@@ -519,7 +519,7 @@ class LlmOpsSpec extends SparkSpec {
     import graft.functions.QuantileSketch
     import org.apache.spark.sql.functions.{col, date_trunc, expr}
     val dir = "/root/testdata/sf0.01"
-    val out = java.nio.file.Files.createTempDirectory("graft_qstore").toString
+    val out = tempDir("graft_qstore")
     val ev = table(spark, dir, "events")
     ev.groupBy(date_trunc("week", col("ts")).as("wk"),
         date_trunc("day", col("ts")).as("day"))
@@ -557,7 +557,7 @@ class LlmOpsSpec extends SparkSpec {
   test("text_entropy: closed-form values on known distributions") {
     // uniform over 2^k symbols → exactly k bits; single symbol → 0 bits;
     // quantization (1e-6 log grid, 4 dp round) must not perturb exact cases
-    val fix = java.nio.file.Files.createTempDirectory("entropy_fix").toString
+    val fix = tempDir("entropy_fix")
     import spark.implicits._
     Seq(
       (1L, "aaaaaaaa"),                 // 0 bits
@@ -574,7 +574,7 @@ class LlmOpsSpec extends SparkSpec {
   test("text_jsd: zero on identical sources, closed-form on disjoint ones") {
     import spark.implicits._
     // same distribution in both sources -> JSD vs corpus = 0
-    val fixSame = java.nio.file.Files.createTempDirectory("jsd_same").toString
+    val fixSame = tempDir("jsd_same")
     Seq((1L, "x y z", "a"), (2L, "x y z", "b"))
       .toDF("doc_id", "text", "source")
       .write.parquet(s"$fixSame/documents.parquet")
@@ -585,7 +585,7 @@ class LlmOpsSpec extends SparkSpec {
     // two equal-mass DISJOINT uniform vocabularies: each source vs the
     // corpus mixture has the closed form 3/4·log2(4/3) + 1/4·log2(4) − 1/2
     // = 0.311278... bits, independent of vocabulary size
-    val fixDisj = java.nio.file.Files.createTempDirectory("jsd_disj").toString
+    val fixDisj = tempDir("jsd_disj")
     Seq((1L, (1 to 10).map(i => s"a$i").mkString(" "), "a"),
         (2L, (1 to 10).map(i => s"b$i").mkString(" "), "b"))
       .toDF("doc_id", "text", "source")

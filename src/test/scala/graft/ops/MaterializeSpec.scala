@@ -22,8 +22,8 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("spark.graft.checkpointDir flips to reliable checkpoint files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cp").toFile
-    spark.conf.set("spark.graft.checkpointDir", dir.getAbsolutePath)
+    val dir = new java.io.File(tempDir("graft-cp"))
+    spark.conf.set("spark.graft.checkpointDir", dir.getPath)
     try {
       val m = materialize(spark.range(0, 500).toDF("id"))
       assert(m.count() == 500)
@@ -34,13 +34,7 @@ class MaterializeSpec extends SparkSpec {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
       assert(walk(dir).nonEmpty, "no checkpoint files written to the conf'd dir")
-    } finally {
-      spark.conf.unset("spark.graft.checkpointDir")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
-      }
-      rm(dir)
-    }
+    } finally spark.conf.unset("spark.graft.checkpointDir")
   }
 
   test("chainable .materialized syntax is the same operation") {

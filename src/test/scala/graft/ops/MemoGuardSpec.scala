@@ -6,13 +6,15 @@ import graft.SourceScan
 
 /** Keeps the operator library on its one memo store and its one temp-dir
   * registry (both in `ops/package.scala`): no other main code keeps a weak
-  * map, creates a temp dir or registers an exit hook of its own. */
+  * map or registers an exit hook of its own, and no main or spec code
+  * creates a temp dir of its own. */
 class MemoGuardSpec extends AnyFunSuite {
 
   private val pkg = "src/main/scala/graft/ops/package.scala"
 
-  private def members(needle: String): Seq[(String, String)] =
-    SourceScan.hits(needle, enclosing = SourceScan.enclosingMember)
+  private def members(needle: String,
+      dirs: Seq[String] = Seq("src/main/scala")): Seq[(String, String)] =
+    SourceScan.hits(needle, dirs, SourceScan.enclosingMember)
 
   test("weak maps live only in the memo store and materialize's marker set") {
     val got = members("new java.util.WeakHashMap")
@@ -21,7 +23,8 @@ class MemoGuardSpec extends AnyFunSuite {
   }
 
   test("temp dirs are created and removed only by tempDir's registry") {
-    val created = members("createTempDirectory")
+    // the specs too: a dir they create themselves outlives the run
+    val created = members("createTemp" + "Directory", Seq("src/main/scala", "src/test/scala"))
     assert(created == Seq(pkg -> "tempDir"), created)
     val hooks = members("addShutdownHook")
     assert(hooks == Seq(pkg -> "tempDirs"), hooks)

@@ -16,7 +16,7 @@ class ScaleProbeSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.1"
     val docs = table(spark, dir, "documents")
     val n = docs.count()
-    val out = java.nio.file.Files.createTempDirectory("scale10").toString
+    val out = tempDir("scale10")
     (0 until 10).map(i => docs.withColumn("doc_id", col("doc_id") + lit(i * 1000000L)))
       .reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
@@ -136,7 +136,7 @@ class ScaleProbeSpec extends SparkSpec {
     // the shuffled-hash join uses), not just plan shape: unsalted, the hot
     // key pins its whole volume in one partition; salted, no partition may
     // hold more than ~1/salts of it.
-    val out = java.nio.file.Files.createTempDirectory("scale_salt").toString
+    val out = tempDir("scale_salt")
     val n = 200000L
     val hotKey = 7L
     val fact = spark.range(n).select(
@@ -191,7 +191,7 @@ class ScaleProbeSpec extends SparkSpec {
     // anywhere would show super-linear growth here.
     val dir = "/root/testdata/sf0.1"
     val ev = table(spark, dir, "events")
-    val out = java.nio.file.Files.createTempDirectory("scale10c").toString
+    val out = tempDir("scale10c")
     (0 until 10).map(i => ev.withColumn("event_id", col("event_id") + lit(i * 100000000L)))
       .reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$out/events.parquet")
@@ -270,7 +270,7 @@ class ScaleProbeSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.1"
     val ev = table(spark, dir, "events")
       .select("event_id", "ts", "event_type", "value")
-    val out = java.nio.file.Files.createTempDirectory("scale10s").toString
+    val out = tempDir("scale10s")
     (0 until 10).map(i => ev.withColumn("event_id", col("event_id") + lit(i * 100000000L)))
       .reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$out/events.parquet")
@@ -374,7 +374,7 @@ class ScaleProbeSpec extends SparkSpec {
     // stage).
     val dir = "/root/testdata/sf0.1"
     val emb = table(spark, dir, "embeddings")
-    val out = java.nio.file.Files.createTempDirectory("scale10v").toString
+    val out = tempDir("scale10v")
     (0 until 10).map(i => emb.withColumn("vec_id", col("vec_id") + lit(i * 1000000L)))
       .reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")

@@ -143,7 +143,7 @@ class StagedFixtureSpec extends SparkSpec {
     * path, so every (fixture, dir) key is unstaged — the "first query of
     * the day" state a production cluster is in every morning. */
   private def freshDir(tag: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
+    val dir = tempDir(s"graft_$tag")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       java.nio.file.Files.createSymbolicLink(

@@ -10,21 +10,14 @@ import org.apache.spark.sql.functions._
 class TextSegSpec extends SparkSpec {
 
   private def withFixture(nDocs: Int)(f: String => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-seg").toFile
-    try {
-      import spark.implicits._
-      // every doc contains the stopword "the"; doc<i> makes each doc's
-      // vocab otherwise unique so token frequencies span 1..nDocs
-      (0 until nDocs).map(i => (i.toLong, s"the unique$i token"))
-        .toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/documents.parquet")
-      f(dir.getAbsolutePath)
-    } finally {
-      def rm(x: java.io.File): Unit = {
-        if (x.isDirectory) x.listFiles.foreach(rm); x.delete()
-      }
-      rm(dir)
-    }
+    val dir = tempDir("graft-seg")
+    import spark.implicits._
+    // every doc contains the stopword "the"; doc<i> makes each doc's
+    // vocab otherwise unique so token frequencies span 1..nDocs
+    (0 until nDocs).map(i => (i.toLong, s"the unique$i token"))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    f(dir)
   }
 
   test("stopword postings are bounded at B per segment row") {
@@ -52,24 +45,17 @@ class TextSegSpec extends SparkSpec {
     // CdcBoundaries emits byte offsets; substr/length count chars. On
     // multibyte text the two disagree and chunks would silently hash wrong
     // slices — the guard must throw instead.
-    val dir = java.nio.file.Files.createTempDirectory("graft-mb").toFile
-    try {
-      import spark.implicits._
-      Seq((1L, "x" * 40 + "é" + "y" * 40))
-        .toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/documents.parquet")
-      val e = intercept[Exception] {
-        TextOps.chunksCdc(spark, dir.getAbsolutePath).collect()
-      }
-      def msgs(t: Throwable): Seq[String] =
-        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-      assert(msgs(e).exists(_.contains("non-ASCII")),
-        s"expected the ASCII-guard raise_error, got: $e")
-    } finally {
-      def rm(x: java.io.File): Unit = {
-        if (x.isDirectory) x.listFiles.foreach(rm); x.delete()
-      }
-      rm(dir)
+    val dir = tempDir("graft-mb")
+    import spark.implicits._
+    Seq((1L, "x" * 40 + "é" + "y" * 40))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val e = intercept[Exception] {
+      TextOps.chunksCdc(spark, dir).collect()
     }
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    assert(msgs(e).exists(_.contains("non-ASCII")),
+      s"expected the ASCII-guard raise_error, got: $e")
   }
 }

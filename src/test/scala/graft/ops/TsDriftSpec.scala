@@ -35,7 +35,7 @@ class TsDriftSpec extends SparkSpec {
   /** A fixture dir = symlinks to every real sf0.001 table + events.parquet
     * rewritten with `ts` in the requested physical type. */
   private def fixture(mode: String): String = {
-    val dir = Files.createTempDirectory(s"ts_drift_$mode").toString
+    val dir = tempDir(s"ts_drift_$mode")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
       Files.createSymbolicLink(

@@ -57,7 +57,7 @@ class AdapterSurfaceSpec extends SparkSpec {
   test("ws seam: transport pumps into the capture file the replay source serves") {
     import java.nio.file.{Files, Paths}
     import graft.sources.{RecordedWsTransport, WsTransport}
-    val dir = Files.createTempDirectory("ws_seam").toString
+    val dir = graft.ops.tempDir("ws_seam")
     val capture = s"$dir/bybit.jsonl"
     val dataFrames = Seq(
       """{"topic":"allLiquidation.BTCUSDT","ts":1739502302929,"data":[{"T":1739502302929,"s":"BTCUSDT","S":"Sell","v":"2","p":"30000"}]}""",

@@ -23,7 +23,7 @@ import java.nio.file.{Files, Path, Paths}
   *     double-counting. */
 class CandlesDailyReplaySpec extends SparkSpec {
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
+  private def tmp(p: String) = graft.ops.tempDir(p)
 
   private val base = 1700000000000L // 2023-11-14T22:13:20Z
 

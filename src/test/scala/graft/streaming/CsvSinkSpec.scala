@@ -27,7 +27,7 @@ class CsvSinkSpec extends SparkSpec {
     val edge = Row("okx", "usdt", "A,B", "", null, 1.0E-7, null, 1L, 2L,
       "{\"a\":\"x,y\"}\nline \"two\"")
     val rows = normalized :+ edge
-    val dir = Files.createTempDirectory("csvsink")
+    val dir = Path.of(graft.ops.tempDir("csvsink"))
     val ours = CsvSink.writeBatch(rows, Schemas.unified, dir.resolve("ours").toString,
       7L, "2024-03-09", "UTC")
     assert(ours == dir.resolve("ours/day=2024-03-09/part-7.csv"))
@@ -41,7 +41,7 @@ class CsvSinkSpec extends SparkSpec {
   }
 
   test("a replayed batch replaces its file; another batch adds one") {
-    val dir = Files.createTempDirectory("csvsink_replay").toString
+    val dir = graft.ops.tempDir("csvsink_replay")
     val row = Row("bybit", "usdt", "BTCUSDT", "long", 1.0, 2.0, 2.0, 1L, 2L, "{}")
     CsvSink.writeBatch(Seq(row, row), Schemas.unified, dir, 3L, "2024-03-09", "UTC")
     CsvSink.writeBatch(Seq(row), Schemas.unified, dir, 3L, "2024-03-09", "UTC")

@@ -219,7 +219,7 @@ class LiveTransportSpec extends SparkSpec {
     val server = new LoopbackWs(expectSubs = subs.size,
       Seq(WsScript(dataFrames, cleanClose = true)))
     val capture =
-      s"${Files.createTempDirectory("ws_live").toString}/bybit.jsonl"
+      s"${graft.ops.tempDir("ws_live")}/bybit.jsonl"
     val n = WsTransport.pumpTo(new LiveTransport.JdkWsTransport(),
       s"ws://127.0.0.1:${server.port}/v5/public/linear", subs, capture)
     server.join()
@@ -229,7 +229,7 @@ class LiveTransportSpec extends SparkSpec {
     // the recorded-double path logs for the same inputs
     val double = new RecordedWsTransport(dataFrames)
     WsTransport.pumpTo(double, "wss://stream.bybit.com/v5/public/linear",
-      subs, s"${Files.createTempDirectory("ws_double").toString}/d.jsonl"): Unit
+      subs, s"${graft.ops.tempDir("ws_double")}/d.jsonl"): Unit
     assert(server.received.toSeq == Seq(double.connections.head._2))
     // the capture feeds the replay machinery identically to the double's:
     // control frames drop, both data frames replay
@@ -253,7 +253,7 @@ class LiveTransportSpec extends SparkSpec {
       WsScript(first, cleanClose = false), // TCP drop, no close frame
       WsScript(second, cleanClose = true)))
     val capture =
-      s"${Files.createTempDirectory("ws_reconn").toString}/bybit.jsonl"
+      s"${graft.ops.tempDir("ws_reconn")}/bybit.jsonl"
     val n = WsTransport.pumpTo(
       new LiveTransport.JdkWsTransport(backoffMs = 5L),
       s"ws://127.0.0.1:${server.port}/v5/public/linear", subs, capture)
@@ -277,7 +277,7 @@ class LiveTransportSpec extends SparkSpec {
       WsScript(Nil, cleanClose = false, rejectHandshake = true),
       WsScript(frames, cleanClose = true)))
     val capture =
-      s"${Files.createTempDirectory("ws_connfail").toString}/b.jsonl"
+      s"${graft.ops.tempDir("ws_connfail")}/b.jsonl"
     val n = WsTransport.pumpTo(
       new LiveTransport.JdkWsTransport(backoffMs = 5L),
       s"ws://127.0.0.1:${server.port}/v5/public/linear", subs, capture)
@@ -293,7 +293,7 @@ class LiveTransportSpec extends SparkSpec {
       WsScript(Nil, cleanClose = false, rejectHandshake = true),
       WsScript(Nil, cleanClose = false, rejectHandshake = true)))
     val capture =
-      s"${Files.createTempDirectory("ws_connbudget").toString}/b.jsonl"
+      s"${graft.ops.tempDir("ws_connbudget")}/b.jsonl"
     intercept[java.io.IOException] {
       WsTransport.pumpTo(
         new LiveTransport.JdkWsTransport(maxReconnects = 1, backoffMs = 5L),
@@ -327,7 +327,7 @@ class LiveTransportSpec extends SparkSpec {
         new LoopbackWs(subs.size, Seq(WsScript(frames.take(half), cleanClose = true))),
         new LoopbackWs(subs.size, Seq(WsScript(frames.drop(half), cleanClose = true))))
     }
-    val liveRoot = Files.createTempDirectory("live_all").toString
+    val liveRoot = graft.ops.tempDir("live_all")
     // 4 concurrent pump threads (one per capture file; the two connections
     // of an exchange append sequentially so lines never interleave)
     val pumps = servers.map { case (ex, ss) =>
@@ -345,7 +345,7 @@ class LiveTransportSpec extends SparkSpec {
       Seq.fill(8)(subs))
 
     // the recorded-double path: same frames through the double transport
-    val dblRoot = Files.createTempDirectory("dbl_all").toString
+    val dblRoot = graft.ops.tempDir("dbl_all")
     exchanges.foreach { case (ex, frames) =>
       WsTransport.pumpTo(new RecordedWsTransport(frames), s"wss://$ex/stream",
         subs, s"$dblRoot/$ex.jsonl"): Unit
@@ -371,8 +371,8 @@ class LiveTransportSpec extends SparkSpec {
       graft.StreamCli.run(spark, graft.StreamCli.CliArgs(
         all = true, framesRoot = root, outdirRoot = out,
         triggerMs = 100L, noColor = true))
-    val liveOut = Files.createTempDirectory("live_all_out").toString
-    val dblOut = Files.createTempDirectory("dbl_all_out").toString
+    val liveOut = graft.ops.tempDir("live_all_out")
+    val dblOut = graft.ops.tempDir("dbl_all_out")
     val (liveCsv, livePq) = runAll(liveRoot, liveOut)
     val (dblCsv, dblPq) = runAll(dblRoot, dblOut)
     assert(livePq > 0 && liveCsv == livePq)
@@ -408,7 +408,7 @@ class LiveTransportSpec extends SparkSpec {
     val subs = SymbolDiscovery.subscribeFrames(Seq("BTCUSDT"))
     val server = new LoopbackWs(expectSubs = subs.size,
       Seq(WsScript(frames, cleanClose = true, interFrameDelayMs = 120L)))
-    val dir = Files.createTempDirectory("ws_live_tail")
+    val dir = graft.ops.tempDir("ws_live_tail")
     val capture = s"$dir/b.jsonl"
     Files.write(Paths.get(capture), Array.emptyByteArray) // tail target exists
     val pump = new Thread(() =>
@@ -449,7 +449,7 @@ class LiveTransportSpec extends SparkSpec {
       WsScript(Seq("""{"topic":"t","ts":1,"data":[]}"""), cleanClose = false),
       WsScript(Nil, cleanClose = false)))
     val capture =
-      s"${Files.createTempDirectory("ws_budget").toString}/b.jsonl"
+      s"${graft.ops.tempDir("ws_budget")}/b.jsonl"
     intercept[java.io.IOException] {
       WsTransport.pumpTo(
         new LiveTransport.JdkWsTransport(maxReconnects = 1, backoffMs = 5L),

@@ -120,7 +120,7 @@ class RocksDbCarryStateSpec extends SparkSpec {
       rest: Seq[Seq[Row4]]): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory(s"restart_$name")
+    val dir = java.nio.file.Path.of(graft.ops.tempDir(s"restart_$name"))
     val out = dir.resolve("out").toString
     val mem = MemoryStream[Row4]
     val events = mem.toDF().toDF("event_type", "event_id", "ts", "value")

@@ -16,7 +16,7 @@ import graft.normalize.{Fixtures, Normalizers}
   * the quarantine split, and the streaming twins of the batch queries. */
 class StreamingSpec extends SparkSpec {
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String) = graft.ops.tempDir(prefix)
 
   test("file-tail stream: backfill + new-file rollover, dedup across batches") {
     val root = tmp("hl_root")

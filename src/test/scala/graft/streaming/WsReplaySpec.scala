@@ -16,7 +16,7 @@ import graft.sources.WsReplay
   * adapters' reconnect loop (liq-stream `binance_adapter.py:96-129`). */
 class WsReplaySpec extends SparkSpec {
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String) = graft.ops.tempDir(prefix)
 
   private def frame(sym: String, ts: Long): String =
     s"""{"e":"forceOrder","E":$ts,"o":{"s":"$sym","S":"SELL","q":"2","p":"10","l":"2","T":$ts}}"""
