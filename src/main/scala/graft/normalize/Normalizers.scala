@@ -227,22 +227,22 @@ object Normalizers {
     val dirLower = lower(col("fill.dir"))
     val price = toFloat0(col("fill.px"))
     val qty = abs(toFloat0(col("fill.sz")))
-    finish(pairs
-      .select(
-        lit("hyperliquid").as("exchange"),
-        lit(market).as("market"),
-        concat(upper(col("fill.coin")), lit("USDC")).as("symbol"),
-        when(dirLower.contains("close long"), "long")
-          .when(dirLower.contains("close short"), "short")
-          .when(upper(col("fill.side")) === "A", "long")
-          .when(upper(col("fill.side")) === "B", "short").as("side"),
-        qty.as("qty"),
-        price.as("price"),
-        col("ts_ms").as("ts_exch_ms"),
-        ingestMs.as("ts_ingest_ms"),
-        col("fill_raw").as("raw"))
-      .withColumn("notional",
-        when(col("price") =!= 0 && col("qty") =!= 0, col("price") * col("qty"))))
+    // one select in unified column order: the optimizer folds it and
+    // finish's no-op casts into a single projection over the pairs
+    finish(pairs.select(
+      lit("hyperliquid").as("exchange"),
+      lit(market).as("market"),
+      concat(upper(col("coin")), lit("USDC")).as("symbol"),
+      when(dirLower.contains("close long"), "long")
+        .when(dirLower.contains("close short"), "short")
+        .when(upper(col("fill.side")) === "A", "long")
+        .when(upper(col("fill.side")) === "B", "short").as("side"),
+      qty.as("qty"),
+      price.as("price"),
+      when(price =!= 0 && qty =!= 0, price * qty).as("notional"),
+      col("ts_ms").as("ts_exch_ms"),
+      ingestMs.as("ts_ingest_ms"),
+      col("fill_raw").as("raw")))
   }
 
   /** Shared Hyperliquid pair-extraction stage: prefilter → parse → explode →
