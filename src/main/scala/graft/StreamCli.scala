@@ -21,10 +21,12 @@ import graft.streaming.{ConsoleSink, CsvSink, JdbcSink, StreamAssembly}
   * Source mapping: the four WS exchanges replay recorded frames through the
   * custom MicroBatchStream source ([[graft.sources.WsReplayProvider]],
   * `<framesRoot>/<exchange>.jsonl`); Hyperliquid tails its hour-file
-  * directory (`<framesRoot>/hyperliquid/`) exactly like the reference's
-  * file adapter. The reference's 8 asyncio tasks sharing one PG writer
-  * become one streaming query over an 8-way union — one checkpoint, one
-  * sink transaction per micro-batch.
+  * directory (`<framesRoot>/hyperliquid/`) through the same source's
+  * directory mode, like the reference's file adapter. The reference's 8
+  * asyncio tasks sharing one PG writer become one streaming query over a
+  * union of one source per capture (5 for `--all`; the pairs of one
+  * capture fan out to their markets) — one checkpoint, one sink
+  * transaction per micro-batch.
   */
 object StreamCli {
 
@@ -131,30 +133,24 @@ object StreamCli {
       Seq(rewrite(ex, mk))
     }
 
-  /** One normalized stream per pair, unioned — the reference's N asyncio
-    * tasks into one shared writer (`stream.py:169-188`). `hlNoCatchup`
-    * models `--hl-no-catchup` (`stream.py:42-43,152-158`): only files
-    * younger than an hour relative to the newest are picked up, i.e. tail
-    * the latest hour instead of backfilling the whole directory. */
+  /** One normalized stream per capture, unioned — the reference's N
+    * asyncio tasks into one shared writer (`stream.py:169-188`). The pairs
+    * that read one capture share one source, one scan and one parse per
+    * trigger, and fan out to their markets ([[Normalizers.forMarkets]]),
+    * so `--all`'s 8 pairs run on 5 sources. `hlNoCatchup` models
+    * `--hl-no-catchup` (`stream.py:42-43,152-158`): only files younger
+    * than an hour relative to the newest are read, i.e. tail the latest
+    * hour instead of backfilling the whole directory. */
   def buildUnified(spark: SparkSession, framesRoot: String,
       pairs: Seq[(String, String)], hlNoCatchup: Boolean = false): DataFrame =
-    pairs.map { case (ex, mk) =>
-      ex match {
-        case "hyperliquid" =>
-          StreamAssembly.hyperliquidNormalizedStream(
-            StreamAssembly.hyperliquidFileStream(spark, s"$framesRoot/hyperliquid",
-              catchUp = !hlNoCatchup), mk)
-        case _ =>
-          val raw = StreamAssembly.wsReplayStream(spark, s"$framesRoot/$ex.jsonl")
-          ex match {
-            case "binance" => Normalizers.binance(raw, mk)
-            case "aster" => Normalizers.aster(raw, mk)
-            case "bybit" => Normalizers.bybit(raw, mk)
-            case "okx" => Normalizers.okx(raw, mk)
-            case other =>
-              throw new IllegalArgumentException(s"unknown exchange: $other")
-          }
-      }
+    pairs.map(_._1).distinct.map { ex =>
+      val markets = pairs.collect { case (`ex`, mk) => mk }
+      if (ex == "hyperliquid")
+        Normalizers.withMarkets(StreamAssembly.hyperliquidNormalizedStream(
+          StreamAssembly.hyperliquidFileStream(spark, s"$framesRoot/hyperliquid",
+            catchUp = !hlNoCatchup), markets.head), markets)
+      else Normalizers.forMarkets(ex,
+        StreamAssembly.wsReplayStream(spark, s"$framesRoot/$ex.jsonl"), markets)
     }.reduce(_ unionByName _)
 
   /** Run the resolved streams to completion of the recorded input (drain +
@@ -198,6 +194,15 @@ object StreamCli {
     * whose local rename forks `readlink` processes; the session's
     * previous choice is restored afterwards. The output root is created
     * with `java.nio`, so it is local and a rename is one `rename(2)`.
+    *
+    * The drain reads whole lines only: a capture whose last frame has no
+    * newline yet keeps that frame back, as the reference's tail buffers a
+    * partial line until its newline arrives. A later run over the same
+    * output root reads it once the newline is written.
+    *
+    * Checkpoints from before the one-source-per-capture union (8 sources,
+    * Hyperliquid on Spark's file source) do not restart: the sources and
+    * their offsets differ. Start such a run with a new `--outdir-root`.
     *
     * Returns (csv rows, pg-or-parquet rows) read back from the sinks. */
   def run(spark: SparkSession, args: CliArgs): (Long, Long) = {

@@ -155,23 +155,30 @@ object Normalizers {
     * posSide passthrough when ∈ {long,short} (`:82-83`), price = `fillPx`
     * else `bkPx` (`:85`), notional null unless both factors truthy.
     */
-  def okx(rawDf: DataFrame, market: String, ingestMs: Column = defaultIngest): DataFrame = {
-    val suffix = market match {
-      case "usdt" => "-USDT-SWAP"
-      case "usdc" => "-USDC-SWAP"
-      case _      => "-USD-SWAP"
-    }
+  def okx(rawDf: DataFrame, market: String, ingestMs: Column = defaultIngest): DataFrame =
+    okxOf(rawDf, Seq(market), ingestMs)
+
+  private def okxSuffix(market: String): String = market match {
+    case "usdt" => "-USDT-SWAP"
+    case "usdc" => "-USDC-SWAP"
+    case _      => "-USD-SWAP"
+  }
+
+  /** [[okx]] over the instruments of every market in `markets`, each row
+    * labelled `markets.head`. */
+  private def okxOf(rawDf: DataFrame, markets: Seq[String],
+      ingestMs: Column = defaultIngest): DataFrame = {
     val env = rawDf.select(from_json(col("raw"), Schemas.okxEnvelope).as("env"))
       .filter(col("env").isNotNull && col("env.arg.channel") === "liquidation-orders")
     val inst = env.select(explode(col("env.data")).as("inst"))
-      .filter(col("inst.instId").endsWith(suffix))
+      .filter(markets.map(m => col("inst.instId").endsWith(okxSuffix(m))).reduce(_ || _))
     val det = inst.select(col("inst.instId").as("instId"),
       explode(col("inst.details")).as("d"))
     val price = firstNonEmpty(col("d.fillPx"), col("d.bkPx")).try_cast(DoubleType)
     finish(det
       .select(
         lit("okx").as("exchange"),
-        lit(market).as("market"),
+        lit(markets.head).as("market"),
         col("instId").as("symbol"),
         when(col("d.posSide").isin("long", "short"), col("d.posSide")).as("side"),
         toFloat0(col("d.sz")).as("qty"),
@@ -183,6 +190,35 @@ object Normalizers {
       .withColumn("notional",
         when(col("price") =!= 0 && col("qty") =!= 0, col("price") * col("qty"))))
   }
+
+  /** One capture's rows for every requested market, from one parse of it
+    * (`stream.py:93-99` runs one adapter per pair; here the pairs that
+    * read one capture share it). Binance, Aster and Bybit rows differ only
+    * in `market`; OKX keeps each instrument for every requested market
+    * whose instId suffix it carries. A market listed twice yields its rows
+    * twice, as two adapters would. */
+  def forMarkets(exchange: String, rawDf: DataFrame, markets: Seq[String]): DataFrame =
+    exchange match {
+      case "binance" => withMarkets(binance(rawDf, markets.head), markets)
+      case "aster" => withMarkets(aster(rawDf, markets.head), markets)
+      case "bybit" => withMarkets(bybit(rawDf, markets.head), markets)
+      case "okx" => withMarkets(okxOf(rawDf, markets), markets,
+        m => col("symbol").endsWith(okxSuffix(m)))
+      case other => throw new IllegalArgumentException(s"unknown exchange: $other")
+    }
+
+  /** `normalized` (labelled `markets.head`) once per market in `markets`
+    * whose `keep` holds for the row, labelled with that market. One market
+    * returns `normalized` itself, so a single pair keeps its plan. */
+  private[graft] def withMarkets(normalized: DataFrame, markets: Seq[String],
+      keep: String => Column = _ => lit(true)): DataFrame =
+    if (markets.size == 1) normalized
+    else normalized
+      .select(col("*"), explode(array(markets.map(m =>
+        struct(lit(m).as("name"), keep(m).as("keep"))): _*)).as("mk"))
+      .filter(col("mk.keep"))
+      .select(normalized.columns.toIndexedSeq.map(c =>
+        if (c == "market") col("mk.name").as(c) else col(c)): _*)
 
   /** Hyperliquid node-fill normalizer (liq-stream
     * `hyperliquid_adapter.py:166-257`). Each line holds `events` as an array

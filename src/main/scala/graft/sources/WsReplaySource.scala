@@ -29,7 +29,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *     A per-file [[FrameIndex]] maps frame index → byte offset: the driver
   *     scans only appended bytes per trigger (O(appended), not O(file)) and
   *     readers seek straight to their slice instead of rescanning from
-  *     line 0.
+  *     line 0. A `path` that is a directory is read as a directory of hour
+  *     files served as one frame sequence ([[HourFileIndex]]): the
+  *     Hyperliquid node's file tail.
   *   - **ping/pong** — dropped inside the source, exactly where the
   *     reference handles them (`okx_adapter.py:119-124` whole-string "ping"
   *     and parsed `event == "pong"`): a frame is control only when the whole
@@ -70,6 +72,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *   .option("framesPerPartition", 25)
   *   .load()                       // schema: frame_id LONG, raw STRING
   * }}}
+  *
+  * A directory `path` takes one more option, `.option("catchUp", false)`,
+  * to skip the backlog older than the newest hour (`--hl-no-catchup`); on
+  * a capture file it is rejected.
   */
 class WsReplayProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -84,17 +90,19 @@ class WsReplayProvider extends TableProvider {
   * newlines, so a steady trigger loop over a growing capture costs
   * O(appended bytes) per trigger instead of O(file) — the previous
   * implementation re-counted every line each trigger, O(n²) over a long
-  * replay. A trailing unterminated line counts as a frame (a capture
-  * process writes the newline last; if it appends mid-line between
-  * triggers the continuation bytes extend that frame, never create a new
-  * one).
+  * replay. A trailing unterminated line counts in [[refresh]]'s total but
+  * not in [[wholeFrames]]: a capture process writes the newline last, so
+  * the stream admits that line only under `ReadAllAvailable` (see
+  * [[WsReplayMicroBatchStream.latestOffset]]).
   *
   * Memory: 8 bytes per frame on the driver (an Int-indexed in-memory
   * array); a multi-billion-frame production capture would page the index
   * to disk — offsets and frame ids stay Long end to end so only this
   * array, not the protocol, bounds capture size.
   */
-final class FrameIndex(path: String) {
+final class FrameIndex(path: String, genPath: String) extends FrameLog {
+  def this(path: String) = this(path, path + ".gen")
+
   private val starts = new scala.collection.mutable.ArrayBuffer[Long]()
   private var scanned = 0L      // bytes consumed by the scanner so far
   private var lineOpen = false  // byte at `scanned` continues an indexed line
@@ -103,7 +111,7 @@ final class FrameIndex(path: String) {
   private var fileKey: AnyRef = _ // inode identity of the current generation
   private var rotationCount = 0L  // generations consumed (probe/telemetry)
   private var restoredState = false // sidecar consulted (once, first refresh)
-  private var persisted: String = null // last sidecar line written (dedup)
+  private var persisted: String = null // sidecar line on disk (dedup)
 
   private def currentKey(): AnyRef =
     try java.nio.file.Files
@@ -112,7 +120,7 @@ final class FrameIndex(path: String) {
       .fileKey()
     catch { case _: Exception => null }
 
-  /** GENERATION STATE SIDECAR (`<capture>.gen`) — the rebase state
+  /* GENERATION STATE SIDECAR (`genPath`, `<capture>.gen`) — the rebase state
     * (generation inode key, live floor, id high-water, scanned bytes)
     * persisted beside the capture so the no-id-reuse invariant holds ACROSS DRIVER
     * RESTARTS, not just within one JVM: a fresh index restoring from the
@@ -128,8 +136,8 @@ final class FrameIndex(path: String) {
     * sidecar stores `-` for the key and the restart check falls back to
     * length PLUS the head fingerprint below — a rotation-while-down to a
     * same-length-or-longer file is still detected as a new generation
-    * because its first bytes hash differently. */
-  private val genPath = path + ".gen"
+    * because its first bytes hash differently. Directory mode keeps it
+    * hidden (`.<file>.gen`, [[HourFileIndex]]). */
 
   /** Content fingerprint of the generation's HEAD (first
     * min(scanned, 4 KB) bytes, SHA-1): the cheap identity check that
@@ -162,9 +170,10 @@ final class FrameIndex(path: String) {
 
   private def readSidecar(): Option[(String, Long, Long, Long, Long, String)] =
     try {
-      val parts = new String(java.nio.file.Files.readAllBytes(
+      persisted = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(genPath)),
-        java.nio.charset.StandardCharsets.UTF_8).trim.split('\t')
+        java.nio.charset.StandardCharsets.UTF_8).trim
+      val parts = persisted.split('\t')
       if (parts.length == 6)
         Some((parts(0), parts(1).toLong, parts(2).toLong, parts(3).toLong,
           parts(4).toLong, parts(5)))
@@ -290,7 +299,12 @@ final class FrameIndex(path: String) {
     baseCount + starts.size
   }
 
-  def frames: Long = synchronized(baseCount + starts.size)
+  /** Frames whose newline has been scanned: [[refresh]]'s count less an
+    * open last line. */
+  def wholeFrames: Long = synchronized(baseCount + starts.size - (if (lineOpen) 1 else 0))
+
+  def indexed(s: Long, e: Long): Seq[(Segment, FrameIndex)] =
+    Seq((Segment(path, 0L, Long.MaxValue), this))
 
   /** Generations consumed so far (0 = the original file, untouched). */
   def rotations: Long = synchronized(rotationCount)
@@ -326,17 +340,144 @@ final class FrameIndex(path: String) {
   def bytesScanned: Long = synchronized(scannedTotal)
 }
 
+/** One file of a frame sequence: its frames carry the global ids
+  * `[first, end)`, and global id `first + i` is its local frame `i`. A
+  * tailed file is open-ended (`end = Long.MaxValue`). */
+final case class Segment(path: String, first: Long, end: Long)
+
+/** The frame sequence a [[WsReplayMicroBatchStream]] serves: one capture
+  * file ([[FrameIndex]]) or a directory of hour files ([[HourFileIndex]]). */
+trait FrameLog {
+  /** Index appended bytes (and, for a directory, new files); returns the
+    * frame count, an open last line included. */
+  def refresh(): Long
+  /** Frames up to the last newline of the tailed file. */
+  def wholeFrames: Long
+  /** The files that hold ids `[s, e)`, in id order, each with its index. */
+  def indexed(s: Long, e: Long): Seq[(Segment, FrameIndex)]
+  /** Ids below `end` are committed and will not be planned again. */
+  def commit(end: Long): Unit = ()
+}
+
+/** Directory mode: the hour files of a Hyperliquid node directory as one
+  * frame sequence — the reference's backfill-then-tail
+  * (`hyperliquid_adapter.py:68-82,276-339`).
+  *
+  *  - Files join in the reference's numeric order ([[HourFileIndex.order]]),
+  *    and frame ids run on across them.
+  *  - Only the newest file is tailed. A newer file freezes it at the frames
+  *    indexed then, its last line included even without a newline (the
+  *    reference's rollover); a file that sorts before the tailed one
+  *    arrives too late and is never read.
+  *  - Each file keeps its own [[FrameIndex]], with the same rotation and
+  *    generation logic as a single capture, and its sidecar is hidden
+  *    (`.<file>.gen`).
+  *  - The file list with each file's id range persists in the hidden
+  *    `.frames` sidecar, so a restarted driver maps committed ids to the
+  *    same lines. Hidden names keep `spark.read.text(dir)`, the batch twin,
+  *    on exactly the data lines.
+  *  - Driver memory is the tailed file's index plus a few words per file:
+  *    a frozen file is indexed only while a planned batch still needs it.
+  *    A commit past its last id drops its index, and a restarted driver
+  *    indexes a recorded file only when a batch plans over its ids. */
+final class HourFileIndex(dir: String) extends FrameLog {
+  private val segs = scala.collection.mutable.ArrayBuffer[Segment]()
+  private val held = scala.collection.mutable.HashMap[String, FrameIndex]()
+  private val statePath = java.nio.file.Paths.get(dir, ".frames")
+
+  private def indexOf(seg: Segment): FrameIndex = held.getOrElseUpdate(seg.path, {
+    val index = new FrameIndex(seg.path,
+      s"$dir/.${new java.io.File(seg.path).getName}.gen")
+    index.refresh()
+    index
+  })
+
+  // restart: the recorded files, indexed when a batch first needs them
+  try java.nio.file.Files.readAllLines(statePath).asScala.foreach { line =>
+    val Array(name, first, end) = line.split('\t')
+    segs += Segment(s"$dir/$name", first.toLong, end.toLong)
+  } catch { case _: java.io.IOException => } // no sidecar yet: a new directory
+
+  private def persist(): Unit = try {
+    val tmp = java.nio.file.Paths.get(dir, ".frames.tmp")
+    java.nio.file.Files.write(tmp, segs.map { s =>
+      s"${new java.io.File(s.path).getName}\t${s.first}\t${s.end}" }.asJava)
+    java.nio.file.Files.move(tmp, statePath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
+  } catch { case _: java.io.IOException => } // best-effort, as FrameIndex's sidecar
+
+  def refresh(): Long = synchronized {
+    val last = segs.lastOption.map(s => new java.io.File(s.path).getName)
+    val fresh = Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      .map(_.getName).filter(n => last.forall(HourFileIndex.order.gt(n, _)))
+      .sorted(HourFileIndex.order)
+    fresh.foreach { name =>
+      val first = segs.lastOption.fold(0L) { t =>
+        val end = t.first + indexOf(t).refresh()
+        segs(segs.size - 1) = t.copy(end = end)
+        end
+      }
+      segs += Segment(s"$dir/$name", first, Long.MaxValue)
+    }
+    if (fresh.nonEmpty) persist()
+    segs.lastOption.fold(0L)(t => t.first + indexOf(t).refresh())
+  }
+
+  def wholeFrames: Long =
+    synchronized(segs.lastOption.fold(0L)(t => t.first + indexOf(t).wholeFrames))
+
+  def indexed(s: Long, e: Long): Seq[(Segment, FrameIndex)] = synchronized {
+    segs.toSeq.filter(g => g.first < e && g.end > s).map(g => (g, indexOf(g)))
+  }
+
+  override def commit(end: Long): Unit = synchronized {
+    segs.foreach(g => if (g.end <= end) held.remove(g.path))
+  }
+
+  def segments: Seq[Segment] = synchronized(segs.toSeq)
+
+  /** The files whose index is in memory. */
+  def heldFiles: Set[String] = synchronized(held.keySet.toSet)
+
+  /** `--hl-no-catchup`'s start (`hyperliquid_adapter.py:341-347`): the
+    * first frame of the first file modified within an hour of the newest
+    * one. */
+  def latestHourStart: Long = synchronized {
+    val total = refresh()
+    val mtimes = segs.map(s => new java.io.File(s.path).lastModified)
+    val newest = mtimes.maxOption.getOrElse(0L)
+    segs.indices.find(i => mtimes(i) >= newest - 3600 * 1000L)
+      .fold(total)(segs(_).first)
+  }
+}
+
+object HourFileIndex {
+  /** The reference's numeric file order (`hyperliquid_adapter.py:68-82`):
+    * names compare by their digit runs as numbers, then as text. */
+  val order: Ordering[String] = {
+    import Ordering.Implicits._
+    Ordering.by((n: String) => ("\\d+".r.findAllIn(n).map(BigInt(_)).toList, n))
+  }
+}
+
 object WsReplay {
   val schema: StructType = StructType(Seq(
     StructField("frame_id", LongType, nullable = false),
     StructField("raw", StringType, nullable = true)))
 
-  /** One index per capture path, shared across stream instances on the
-    * driver (a restarted query re-scans once, then stays incremental). */
+  /** One index per capture path (and per hour directory), shared across
+    * stream instances on the driver (a restarted query re-scans once,
+    * then stays incremental). */
   private val indexes =
     new java.util.concurrent.ConcurrentHashMap[String, FrameIndex]()
+  private val hourDirs =
+    new java.util.concurrent.ConcurrentHashMap[String, HourFileIndex]()
   def indexFor(path: String): FrameIndex =
     indexes.computeIfAbsent(path, p => new FrameIndex(p))
+  def hourFilesFor(dir: String): HourFileIndex =
+    hourDirs.computeIfAbsent(dir, d => new HourFileIndex(d))
 
   /** TEST SEAM — drop the cached driver-side index for `path`, simulating a
     * driver restart: a fresh JVM starts with an empty cache, so the next
@@ -345,7 +486,8 @@ object WsReplay {
     * sidecar exists for). Production code never calls this — within one
     * driver life the cached index IS the generation state. */
   private[graft] def evictIndex(path: String): Unit = {
-    indexes.remove(path): Unit
+    indexes.remove(path)
+    hourDirs.remove(path): Unit
   }
 
   private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper
@@ -376,9 +518,6 @@ object WsReplay {
       } catch { case _: Exception => false }
     } else false
   }
-
-  /** Frame count via the side index — O(appended) after the first call. */
-  def countFrames(path: String): Long = indexFor(path).refresh()
 }
 
 class WsReplayTable(options: CaseInsensitiveStringMap)
@@ -387,6 +526,7 @@ class WsReplayTable(options: CaseInsensitiveStringMap)
     throw new IllegalArgumentException("ws-replay source requires option 'path'"))
   private val framesPerBatch = options.getInt("framesPerBatch", 1000)
   private val framesPerPartition = options.getInt("framesPerPartition", 1000)
+  private val catchUp = options.getBoolean("catchUp", true)
 
   override def name(): String = s"ws-replay($path)"
   override def schema(): StructType = WsReplay.schema
@@ -398,7 +538,8 @@ class WsReplayTable(options: CaseInsensitiveStringMap)
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = WsReplay.schema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new WsReplayMicroBatchStream(path, framesPerBatch, framesPerPartition)
+          new WsReplayMicroBatchStream(path, framesPerBatch, framesPerPartition,
+            catchUp)
       }
     }
 }
@@ -409,13 +550,25 @@ case class WsOffset(frame: Long) extends Offset {
   override def json: String = frame.toString
 }
 
+/** A `path` that is a directory when the stream starts is served as hour
+  * files ([[HourFileIndex]]); there `catchUp = false` starts at
+  * [[HourFileIndex.latestHourStart]] instead of frame 0. A capture file
+  * rejects `catchUp = false`. */
 class WsReplayMicroBatchStream(path: String, framesPerBatch: Int,
-    framesPerPartition: Int = 1000)
+    framesPerPartition: Int = 1000, catchUp: Boolean = true)
     extends MicroBatchStream with SupportsAdmissionControl {
 
-  private val index = WsReplay.indexFor(path)
+  private val log: FrameLog =
+    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path)))
+      WsReplay.hourFilesFor(path)
+    else WsReplay.indexFor(path)
+  require(catchUp || log.isInstanceOf[HourFileIndex],
+    s"ws-replay: catchUp = false needs an hour-file directory, not the file $path")
 
-  override def initialOffset(): Offset = WsOffset(0L)
+  override def initialOffset(): Offset = log match {
+    case hours: HourFileIndex if !catchUp => WsOffset(hours.latestHourStart)
+    case _ => WsOffset(0L)
+  }
 
   override def deserializeOffset(json: String): Offset = WsOffset(json.toLong)
 
@@ -423,68 +576,99 @@ class WsReplayMicroBatchStream(path: String, framesPerBatch: Int,
 
   /** Admission-controlled pacing: at most `framesPerBatch` new frames per
     * micro-batch (Trigger.Once's ReadAllAvailable takes everything). The
-    * index refresh scans only bytes appended since the last trigger. */
+    * index refresh scans only bytes appended since the last trigger.
+    *
+    * Whole-line admission: a paced trigger admits only frames whose
+    * newline has been written. A trigger that lands while a capture
+    * process is mid-line leaves that frame for a later trigger; admitting
+    * it would commit its id over half its bytes and lose the rest (the
+    * reference buffers a partial line the same way,
+    * `hyperliquid_adapter.py:314-334`). Only `ReadAllAvailable`
+    * (AvailableNow, Once) also takes a final unterminated line. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[WsOffset].frame
-    val total = index.refresh()
-    val cap = limit match {
-      case rows: ReadMaxRows => from + rows.maxRows()
+    val total = log.refresh()
+    val end = limit match {
       case _: ReadAllAvailable => total
-      case _ => from + framesPerBatch
+      case rows: ReadMaxRows => math.min(from + rows.maxRows(), log.wholeFrames)
+      case _ => math.min(from + framesPerBatch, log.wholeFrames)
     }
-    WsOffset(math.max(from, math.min(cap, total)))
+    WsOffset(math.max(from, end))
   }
 
-  override def reportLatestOffset(): Offset = WsOffset(index.refresh())
+  override def reportLatestOffset(): Offset = WsOffset(log.refresh())
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException(
       "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
   /** Range-split partitions: the batch's frame slice divides into
-    * `framesPerPartition`-sized ranges, each carrying its byte extent from
-    * the index, so wide batches (Trigger.Once over a long capture) scan in
-    * parallel and every reader seeks instead of rescanning from line 0. */
+    * `framesPerPartition`-sized ranges, each mapped onto the (file, byte
+    * range) slices that hold it, so wide batches (Trigger.Once over a long
+    * capture) scan in parallel, every reader seeks instead of rescanning
+    * from line 0, and a directory's many small hour files share
+    * partitions instead of taking one task each. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s0 = start.asInstanceOf[WsOffset].frame
+    val s = start.asInstanceOf[WsOffset].frame
     val e = end.asInstanceOf[WsOffset].frame
-    index.refresh() // restart case: a fresh index scans the file once here
-    // rotation recovery: ids below the live floor have no bytes anymore —
-    // clamp the slice so surviving frames keep their true ids and the
-    // lost range contributes nothing (never crashes, never duplicates)
-    val s = math.max(s0, index.liveFloor)
-    if (e <= s) Array.empty
-    else {
-      val parts = scala.collection.mutable.ArrayBuffer[InputPartition]()
-      var f = s
-      while (f < e) {
-        val g = math.min(f + framesPerPartition, e)
-        parts += WsReplayPartition(path, f, g, index.byteOf(f),
-          index.byteOf(g), index.generationKey)
+    log.refresh() // restart case: a fresh index scans the file once here
+    val parts = scala.collection.mutable.ArrayBuffer[InputPartition]()
+    var slices = Vector.empty[FrameSlice]
+    var room = framesPerPartition.toLong
+    for ((seg, index) <- log.indexed(s, e)) {
+      // rotation recovery: ids below the live floor have no bytes anymore
+      // — clamp the slice so surviving frames keep their true ids and the
+      // lost range contributes nothing (never crashes, never duplicates)
+      var f = math.max(s, seg.first + index.liveFloor)
+      val hi = math.min(e, seg.end)
+      while (f < hi) {
+        val g = math.min(f + room, hi)
+        slices :+= FrameSlice(seg.path, f, g, index.byteOf(f - seg.first),
+          index.byteOf(g - seg.first), index.generationKey)
+        room -= g - f
         f = g
+        if (room == 0) {
+          parts += WsReplayPartition(slices)
+          slices = Vector.empty; room = framesPerPartition
+        }
       }
-      parts.toArray
     }
+    if (slices.nonEmpty) parts += WsReplayPartition(slices)
+    parts.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new WsReplayReaderFactory
 
-  override def commit(end: Offset): Unit = ()
+  override def commit(end: Offset): Unit = log.commit(end.asInstanceOf[WsOffset].frame)
   override def stop(): Unit = ()
 }
 
-case class WsReplayPartition(path: String, start: Long, end: Long,
+/** Frames `[start, end)` of one file, at bytes `[startByte, endByte)`. */
+case class FrameSlice(path: String, start: Long, end: Long,
     startByte: Long, endByte: Long, genKey: String = null)
-    extends InputPartition
+
+case class WsReplayPartition(slices: Seq[FrameSlice]) extends InputPartition
 
 class WsReplayReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[WsReplayPartition]
-    new WsReplayReader(p.path, p.start, p.end, p.startByte, p.endByte, p.genKey)
-  }
+  /** The partition's slices read in order, one open file at a time. */
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new PartitionReader[InternalRow] {
+      private val readers = partition.asInstanceOf[WsReplayPartition].slices.iterator
+        .map(p => new WsReplayReader(p.path, p.start, p.end, p.startByte, p.endByte, p.genKey))
+      private var cur: WsReplayReader = _
+      override def next(): Boolean = {
+        while (cur == null || !cur.next()) {
+          if (cur != null) cur.close()
+          if (!readers.hasNext) { cur = null; return false }
+          cur = readers.next()
+        }
+        true
+      }
+      override def get(): InternalRow = cur.get()
+      override def close(): Unit = if (cur != null) cur.close()
+    }
 }
-
 /** Deterministic replay of the frame slice `[start, end)` — idempotent under
   * task retry (the reconnect analog). The reader seeks to its byte extent
   * and reads only `[startByte, endByte)`; it never touches bytes outside

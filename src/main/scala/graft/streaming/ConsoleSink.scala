@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StringType
 
 /** Console sink — the reference's color-coded terminal print
@@ -45,17 +44,4 @@ object ConsoleSink {
     if (colors) colored
     else regexp_replace(colored, "\u001b\\[[0-9;]*m", "")
   }
-
-  /** Attach the console sink to a unified stream. The collect-and-print is
-    * the sink itself (presentation I/O, same as the reference's per-row
-    * print) — not a query-path collect; rows per micro-batch are bounded by
-    * the trigger. */
-  def attach(unified: DataFrame, ckpt: String,
-      colors: Boolean = true): StreamingQuery =
-    unified.select(line(colors).as("line")).writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.collect().foreach(r => println(r.getString(0)))
-      }
-      .start()
 }

@@ -12,9 +12,11 @@ import graft.normalize.Normalizers
   * `hyperliquid_adapter.py`), re-expressed on Spark's micro-batch engine:
   *
   *  - the file-tail source (hour-file listing, rollover detection, partial-
-  *    line buffering — `hyperliquid_adapter.py:68-101,259-351`) is Spark's
-  *    FileStreamSource: discovery, ordering, and exactly-once file tracking
-  *    are built in; backfill ≡ starting the query with files already present;
+  *    line buffering — `hyperliquid_adapter.py:68-101,259-351`) is the
+  *    replay source's directory mode ([[graft.sources.HourFileIndex]]): one
+  *    frame sequence over the hour files in numeric order, the newest
+  *    tailed, whole lines only, offsets checkpointed as frame ids; backfill
+  *    ≡ starting the query with files already present;
   *  - the 50k-entry dedup ring (`:148-164`) is dropDuplicatesWithinWatermark:
   *    state bounded by the watermark instead of a fixed count, keyed by the
   *    same tid|liquidatedUser|coin;
@@ -30,41 +32,33 @@ import graft.normalize.Normalizers
   *    `writer_pg.py:211-215`); foreachBatch + checkpoint gives at-least-once
   *    into idempotent sinks — a deliberate upgrade, documented here.
   *
-  * At scale: sources partition by file; the dedup/window state lives in the
-  * state store partitioned by key (spark.sql.shuffle.partitions state
-  * shards); watermarks bound state growth regardless of stream length.
+  * At scale: sources partition by frame range; the dedup/window state
+  * lives in the state store partitioned by key (spark.sql.shuffle.partitions
+  * state shards); watermarks bound state growth regardless of stream
+  * length.
   */
 object StreamAssembly {
 
   /** Tail a directory of Hyperliquid node-fill JSON lines as a stream —
     * phase-1 backfill + phase-2 tail collapse into one query
-    * (`hyperliquid_adapter.py:341-351`). maxFilesPerTrigger is the rate
-    * control the reference's drop-oldest queue approximated. */
+    * (`hyperliquid_adapter.py:341-351`). The source is the replay source's
+    * directory mode ([[graft.sources.HourFileIndex]]): one frame sequence
+    * over the hour files in numeric order, the newest tailed line by line,
+    * paced by the source's per-trigger frame cap. `catchUp = false` is
+    * `--hl-no-catchup` (`hyperliquid_adapter.py:341-347`): the stream
+    * starts at the first file modified within an hour of the newest, so
+    * the backlog before it is indexed once but never read. `root` must be an
+    * existing directory: the source reads a directory path as hour files. */
   def hyperliquidFileStream(spark: SparkSession, root: String,
-      maxFilesPerTrigger: Int = 100, catchUp: Boolean = true): DataFrame = {
-    val base = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(root)
-      .withColumnRenamed("value", "raw")
-    if (catchUp) base
-    else {
-      // catch_up=False (`--hl-no-catchup`, hyperliquid_adapter.py:341-347):
-      // skip the historical backfill, tail only the latest hour. The stale
-      // set is fixed at build time — files more than an hour older than the
-      // newest — and dropped at the source boundary by file name. (Spark's
-      // `maxFileAge` cannot model this: the first-batch listing treats every
-      // file as new, and the first batch IS the backfill.) The historical
-      // files are still listed/opened once; at real scale the layout fix is
-      // date-partitioned hourly directories plus a path filter so the
-      // backlog is never even listed.
-      val files = Option(new java.io.File(root).listFiles())
-        .getOrElse(Array.empty[java.io.File]).filter(_.isFile)
-      val newest = files.map(_.lastModified).maxOption.getOrElse(0L)
-      val staleNames = files
-        .filter(_.lastModified < newest - 3600 * 1000L).map(_.getName).toSeq
-      if (staleNames.isEmpty) base
-      else base.filter(!col("_metadata.file_name").isin(staleNames: _*))
-    }
+      catchUp: Boolean = true): DataFrame = {
+    require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(root)),
+      s"Hyperliquid hour-file directory does not exist: $root")
+    spark.readStream
+      .format("graft.sources.WsReplayProvider")
+      .option("path", root)
+      .option("catchUp", catchUp)
+      .load()
+      .select(col("raw"))
   }
 
   /** A WebSocket-shaped frame stream replayed through the custom

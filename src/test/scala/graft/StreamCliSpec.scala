@@ -5,11 +5,13 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.MicroBatchPlans
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 import graft.model.Schemas
-import graft.normalize.Fixtures
+import graft.normalize.{Fixtures, Normalizers}
 
 /** CLI orchestrator spec: stream resolution semantics (incl. the aster/
   * hyperliquid market rewrites, `stream.py:90-122`) and an end-to-end run
@@ -147,9 +149,42 @@ class StreamCliSpec extends SparkSpec {
   test("--all: the full 8-pair roster runs as ONE streaming query over 5 sources") {
     val framesRoot = allFrames("cli_all_frames")
     val out = tmp("cli_all_out")
-    val (csvRows, pgRows) = StreamCli.run(spark, StreamCli.CliArgs(
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.add(e.progress): Unit
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    val (csvRows, pgRows) = try StreamCli.run(spark, StreamCli.CliArgs(
       all = true, framesRoot = framesRoot, outdirRoot = out, triggerMs = 100L))
+    finally {
+      // progress events reach listeners asynchronously
+      val deadline = System.currentTimeMillis() + 10000
+      while (progress.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(25)
+      spark.streams.removeListener(listener)
+    }
     assert(csvRows > 0 && csvRows == pgRows)
+    // one source per capture: binance, bybit, okx, aster, hyperliquid
+    val last = progress.asScala.toSeq.maxBy(_.batchId)
+    assert(last.sources.length == 5, last.sources.map(_.description).mkString(", "))
+    // the market fan-out yields exactly the per-pair batch normalizers' rows
+    val cols = Schemas.unified.fieldNames.filterNot(_ == "ts_ingest_ms").map(col)
+    def text(path: String) = spark.read.text(path).withColumnRenamed("value", "raw")
+    val batch = StreamCli.allPairs.map { case (ex, mk) =>
+      val capture = if (ex == "hyperliquid") s"$framesRoot/$ex" else s"$framesRoot/$ex.jsonl"
+      val normalize: (DataFrame, String) => DataFrame = ex match {
+        case "binance" => Normalizers.binance(_, _)
+        case "aster" => Normalizers.aster(_, _)
+        case "bybit" => Normalizers.bybit(_, _)
+        case "okx" => Normalizers.okx(_, _)
+        case "hyperliquid" => Normalizers.hyperliquid(_, _)
+      }
+      normalize(text(capture), mk)
+    }.reduce(_ unionByName _)
+    assert(multiset(spark.read.parquet(s"$out/parquet").select(cols: _*).collect()) ==
+      multiset(batch.select(cols: _*).collect()))
     val pq = spark.read.parquet(s"$out/parquet")
     val exchanges = pq.select("exchange").distinct()
       .collect().map(_.getString(0)).toSet
@@ -163,6 +198,51 @@ class StreamCliSpec extends SparkSpec {
     assert(Set("binance" -> "usdt", "binance" -> "coin", "bybit" -> "usdt",
       "bybit" -> "coin", "okx" -> "usdt", "aster" -> "usdt",
       "hyperliquid" -> "usdc").subsetOf(pairs), s"got $pairs")
+  }
+
+  test("lines appended to a Hyperliquid hour file after it was streamed are read") {
+    val framesRoot = tmp("cli_hl_append")
+    val hour = Paths.get(s"$framesRoot/hyperliquid/hour1.json")
+    Files.createDirectories(hour.getParent)
+    // the ETH self-liquidation line alone, streamed to the sinks
+    Files.write(hour, Fixtures.hyperliquid.take(1).mkString("", "\n", "\n").getBytes)
+    val out = tmp("cli_hl_append_out")
+    val url = "jdbc:derby:memory:cli_hl_append;create=true"
+    val args = StreamCli.CliArgs(streams = "hyperliquid:usdc", framesRoot = framesRoot,
+      outdirRoot = out, triggerMs = 100L, pgUrl = url)
+    val quiet = new PrintStream(OutputStream.nullOutputStream())
+    assert(Console.withOut(quiet)(StreamCli.run(spark, args)) == ((1L, 1L)))
+    // the node appends the other six lines to the SAME hour file; the
+    // restarted run reads them from where the checkpoint left off
+    Files.write(hour, Fixtures.hyperliquid.drop(1).mkString("", "\n", "\n").getBytes,
+      java.nio.file.StandardOpenOption.APPEND)
+    Console.withOut(quiet)(StreamCli.run(spark, args))
+    val cols = Schemas.unified.fieldNames.filterNot(_ == "ts_ingest_ms").map(col)
+    val want = multiset(Normalizers.hyperliquid(spark.read.text(s"$framesRoot/hyperliquid")
+      .withColumnRenamed("value", "raw")).select(cols: _*).collect())
+    assert(want.values.sum == 3)
+    assert(multiset(spark.read.jdbc(url, "liquidations", new java.util.Properties())
+      .select(cols: _*).collect()) == want)
+    assert(multiset(spark.read.option("header", "true").schema(Schemas.unified)
+      .csv(s"$out/csv").select(cols: _*).collect()) == want)
+  }
+
+  test("a capture's final frame without its newline waits for it, then streams once") {
+    val framesRoot = tmp("cli_open_line")
+    val capture = Paths.get(s"$framesRoot/binance.jsonl")
+    // the BTC frame is whole; the XRP frame's newline is not written yet
+    Files.write(capture, s"${Fixtures.binance(0)}\n${Fixtures.binance(2)}".getBytes)
+    val out = tmp("cli_open_line_out")
+    val args = StreamCli.CliArgs(streams = "binance:usdt", framesRoot = framesRoot,
+      outdirRoot = out, triggerMs = 100L)
+    val quiet = new PrintStream(OutputStream.nullOutputStream())
+    assert(Console.withOut(quiet)(StreamCli.run(spark, args)) == ((1L, 1L)))
+    // the newline arrives; a later run over the same checkpoint reads XRP
+    Files.write(capture, "\n".getBytes, java.nio.file.StandardOpenOption.APPEND)
+    assert(Console.withOut(quiet)(StreamCli.run(spark, args)) == ((2L, 2L)))
+    val symbols = spark.read.parquet(s"$out/parquet").select("symbol")
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(symbols == Seq("BTCUSDT", "XRPUSDT"))
   }
 
   test("--all over several micro-batches: one stamp per batch, CSV == JDBC, a line per row") {
@@ -284,7 +364,7 @@ class StreamCliSpec extends SparkSpec {
       frame(t0 + 125 * 60000L, "62800.0"))                      // hour 2 (open)
     val framesRoot = tmp("cli_dash_frames")
     Files.write(Paths.get(s"$framesRoot/binance.jsonl"),
-      frames.mkString("\n").getBytes)
+      frames.mkString("", "\n", "\n").getBytes)
     val out = tmp("cli_dash_out")
     StreamCli.run(spark, StreamCli.CliArgs(
       streams = "binance:usdt", framesRoot = framesRoot, outdirRoot = out,

@@ -48,9 +48,20 @@ class PolyHashSpec extends SparkSpec {
 
   test("GraftExtensions injects poly_hash into a SparkSessionExtensions") {
     // full end-to-end needs a fresh SparkContext (builder extensions are
-    // ignored when a session exists); this exercises the injection path
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    // ignored when a session exists); this records what the installer
+    // injects and builds poly_hash through the injected builder
+    val injected = scala.collection.mutable.Map[String,
+      Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+        org.apache.spark.sql.catalyst.expressions.Expression]()
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected(f._1.funcName) = f._3
+        super.injectFunction(f)
+      }
+    }
     new GraftExtensions().apply(ext)
+    val arg = org.apache.spark.sql.catalyst.expressions.Literal("spark")
+    assert(injected.get("poly_hash").map(_(Seq(arg))).contains(PolyHash(arg)))
   }
 
   test("participates in whole-stage codegen") {

@@ -18,6 +18,20 @@ class WsReplaySpec extends SparkSpec {
 
   private def tmp(prefix: String) = graft.ops.tempDir(prefix)
 
+  /** Every row of one planned batch `[s, e)`, as (frame id, frame). */
+  private def readBatch(stream: graft.sources.WsReplayMicroBatchStream,
+      s: Long, e: Long): Seq[(Long, String)] = {
+    import graft.sources.WsOffset
+    val factory = new graft.sources.WsReplayReaderFactory
+    stream.planInputPartitions(WsOffset(s), WsOffset(e)).toSeq.flatMap { p =>
+      val r = factory.createReader(p)
+      val out = scala.collection.mutable.ArrayBuffer[(Long, String)]()
+      while (r.next()) out += ((r.get().getLong(0), r.get().getUTF8String(1).toString))
+      r.close()
+      out
+    }
+  }
+
   private def frame(sym: String, ts: Long): String =
     s"""{"e":"forceOrder","E":$ts,"o":{"s":"$sym","S":"SELL","q":"2","p":"10","l":"2","T":$ts}}"""
 
@@ -140,8 +154,11 @@ class WsReplaySpec extends SparkSpec {
     val lines = (1 to 10).map(i => frame(f"PRT$i%02dUSDT", i.toLong))
     Files.write(Paths.get(file), lines.mkString("\n").getBytes)
     val stream = new WsReplayMicroBatchStream(file, 100, framesPerPartition = 3)
-    val parts = stream.planInputPartitions(WsOffset(0L), WsOffset(10L))
-      .map(_.asInstanceOf[WsReplayPartition])
+    val partitions = stream.planInputPartitions(WsOffset(0L), WsOffset(10L))
+    // one file: each partition is one (file, byte range) slice
+    val slices = partitions.map(_.asInstanceOf[WsReplayPartition].slices)
+    assert(slices.forall(_.size == 1))
+    val parts = slices.map(_.head)
     assert(parts.map(p => p.end - p.start).toSeq == Seq(3L, 3L, 3L, 1L))
     assert(parts.head.startByte == 0L)
     assert(parts.last.endByte == Paths.get(file).toFile.length)
@@ -150,7 +167,7 @@ class WsReplaySpec extends SparkSpec {
     }
     // each reader yields exactly its slice, ids contiguous across readers
     val factory = new WsReplayReaderFactory
-    val rows = parts.flatMap { p =>
+    val rows = partitions.flatMap { p =>
       val r = factory.createReader(p)
       val out = scala.collection.mutable.ArrayBuffer[(Long, String)]()
       while (r.next()) out += ((r.get().getLong(0), r.get().getUTF8String(1).toString))
@@ -169,7 +186,7 @@ class WsReplaySpec extends SparkSpec {
       val f = frame(f"SYM$i%03dUSDT", 1710000000000L + i * 1000L)
       if (i % 10 == 0) Seq("""{"op":"ping"}""", f) else Seq(f)
     }
-    Files.write(Paths.get(framesFile), lines.mkString("\n").getBytes)
+    Files.write(Paths.get(framesFile), lines.mkString("", "\n", "\n").getBytes)
 
     val outDir = tmp("ws_out"); val ckpt = tmp("ws_ckpt")
     def start() = {
@@ -213,7 +230,7 @@ class WsReplaySpec extends SparkSpec {
     val framesFile = s"${tmp("ws_live")}/frames.jsonl"
     Files.write(Paths.get(framesFile),
       (1 to 4).map(i => frame(s"AAA${i}USDT", 1710000000000L + i))
-        .mkString("\n").getBytes)
+        .mkString("", "\n", "\n").getBytes)
     val outDir = tmp("ws_live_out"); val ckpt = tmp("ws_live_ckpt")
     val raw = spark.readStream
       .format("graft.sources.WsReplayProvider")
@@ -231,8 +248,8 @@ class WsReplaySpec extends SparkSpec {
       // a live capture process appends more frames — the next trigger's
       // recount must pick them up
       Files.write(Paths.get(framesFile),
-        ("\n" + (5 to 7).map(i => frame(s"AAA${i}USDT", 1710000000000L + i))
-          .mkString("\n")).getBytes, APPEND)
+        (5 to 7).map(i => frame(s"AAA${i}USDT", 1710000000000L + i))
+          .mkString("", "\n", "\n").getBytes, APPEND)
       q.processAllAvailable()
       assert(spark.read.parquet(outDir).count() == 7)
     } finally q.stop()
@@ -253,7 +270,7 @@ class WsReplaySpec extends SparkSpec {
   private def restartRotationCase(tag: String)(rotate: (String, Seq[String]) => Unit): Unit = {
     val framesFile = s"${tmp(s"ws_rr_$tag")}/frames.jsonl"
     val oldLines = (1 to 40).map(i => frame(f"OLD$i%03dUSDT", 1710000000000L + i))
-    Files.write(Paths.get(framesFile), oldLines.mkString("\n").getBytes)
+    Files.write(Paths.get(framesFile), oldLines.mkString("", "\n", "\n").getBytes)
     val outDir = tmp(s"ws_rr_${tag}_out"); val ckpt = tmp(s"ws_rr_${tag}_ckpt")
     def start() = spark.readStream
       .format("graft.sources.WsReplayProvider")
@@ -311,7 +328,7 @@ class WsReplaySpec extends SparkSpec {
   test("checkpointed restart across delete+recreate rotation while down (new inode)") {
     restartRotationCase("inode") { (file, lines) =>
       Files.delete(Paths.get(file))
-      Files.write(Paths.get(file), lines.mkString("\n").getBytes): Unit
+      Files.write(Paths.get(file), lines.mkString("", "\n", "\n").getBytes): Unit
     }
   }
 
@@ -319,7 +336,7 @@ class WsReplaySpec extends SparkSpec {
     restartRotationCase("trunc") { (file, lines) =>
       // truncating overwrite keeps the inode: only the persisted
       // scanned-length (and head fingerprint) can tell the bytes changed
-      Files.write(Paths.get(file), lines.mkString("\n").getBytes): Unit
+      Files.write(Paths.get(file), lines.mkString("", "\n", "\n").getBytes): Unit
     }
   }
 
@@ -327,7 +344,7 @@ class WsReplaySpec extends SparkSpec {
     val framesFile = s"${tmp("ws_rot")}/frames.jsonl"
     Files.write(Paths.get(framesFile),
       (1 to 4).map(i => frame(s"OLD${i}USDT", 1710000000000L + i))
-        .mkString("\n").getBytes)
+        .mkString("", "\n", "\n").getBytes)
     val outDir = tmp("ws_rot_out"); val ckpt = tmp("ws_rot_ckpt")
     val raw = spark.readStream
       .format("graft.sources.WsReplayProvider")
@@ -348,12 +365,125 @@ class WsReplaySpec extends SparkSpec {
       // behavior errored the stream here
       Files.write(Paths.get(framesFile),
         (1 to 2).map(i => frame(s"NEW${i}USDT", 1710000001000L + i))
-          .mkString("\n").getBytes)
+          .mkString("", "\n", "\n").getBytes)
       q.processAllAvailable()
       val out = spark.read.parquet(outDir)
       assert(out.count() == 6, "2 new-generation frames after the 4 old ones")
       assert(out.select("symbol").distinct().count() == 6,
         "no frame may be emitted twice across the rotation")
     } finally q.stop()
+  }
+
+  test("a trigger that lands mid-line leaves that frame whole for a later trigger") {
+    import java.nio.file.StandardOpenOption.APPEND
+    val framesFile = s"${tmp("ws_midline")}/frames.jsonl"
+    val Seq(a, b, c, d) = Seq("AAA", "BBB", "CCC", "DDD").map(s => frame(s"${s}USDT", 1L))
+    // two whole frames and the first half of a third: the capture process
+    // has not written CCC's newline yet
+    Files.write(Paths.get(framesFile),
+      s"$a\n$b\n${c.take(c.length / 2)}".getBytes)
+    val outDir = tmp("ws_midline_out"); val ckpt = tmp("ws_midline_ckpt")
+    val q = Normalizers.binance(spark.readStream
+        .format("graft.sources.WsReplayProvider")
+        .option("path", framesFile)
+        .load().select(col("raw")), "usdt")
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.ProcessingTime(100L))
+      .format("parquet").option("path", outDir)
+      .start()
+    def symbols() = spark.read.parquet(outDir).select("symbol")
+      .collect().map(_.getString(0)).sorted.toSeq
+    try {
+      q.processAllAvailable()
+      assert(symbols() == Seq("AAAUSDT", "BBBUSDT"))
+      Files.write(Paths.get(framesFile),
+        s"${c.drop(c.length / 2)}\n$d\n".getBytes, APPEND)
+      q.processAllAvailable()
+      assert(symbols() == Seq("AAAUSDT", "BBBUSDT", "CCCUSDT", "DDDUSDT"))
+    } finally q.stop()
+    // AvailableNow (ReadAllAvailable) reads a final line without a newline
+    val last = s"${tmp("ws_midline_now")}/frames.jsonl"
+    Files.write(Paths.get(last), s"$a\n$b".getBytes)
+    val now = spark.readStream.format("graft.sources.WsReplayProvider")
+      .option("path", last).load()
+      .writeStream.option("checkpointLocation", tmp("ws_midline_now_ckpt"))
+      .trigger(Trigger.AvailableNow())
+      .format("memory").queryName("ws_midline_now").start()
+    now.awaitTermination(60000)
+    assert(spark.table("ws_midline_now").count() == 2)
+  }
+
+  test("directory mode: one id sequence over the hour files, newest tailed, restartable") {
+    import java.nio.file.StandardOpenOption.APPEND
+    import graft.sources.{HourFileIndex, WsOffset, WsReplayMicroBatchStream}
+    val dir = tmp("ws_hours")
+    def write(name: String, body: String, opts: java.nio.file.OpenOption*) =
+      Files.write(Paths.get(s"$dir/$name"), body.getBytes, opts: _*)
+    // numeric order: hour 9 before hour 10, though "10" < "9" as text
+    assert(Seq("h10.json", "h9.json", "h2.json").sorted(HourFileIndex.order) ==
+      Seq("h2.json", "h9.json", "h10.json"))
+    write("h10.json", "c1\nc2\n")
+    write("h9.json", "b1\nb2\nb3") // frozen by h10: its last line counts
+    val idx = new HourFileIndex(dir)
+    assert(idx.refresh() == 5 && idx.wholeFrames == 5)
+    assert(idx.segments.map(s => (s.first, s.end)) == Seq((0L, 3L), (3L, Long.MaxValue)))
+    // the tailed file grows; a frozen one's appended lines are never read
+    write("h10.json", "c3\nc", APPEND)
+    write("h9.json", "\nlate\n", APPEND)
+    assert(idx.refresh() == 7 && idx.wholeFrames == 6)
+    // a newer hour freezes h10 with its open line; a file sorting before
+    // the tail arrives too late
+    write("h11.json", "d1\n")
+    write("h3.json", "x\n")
+    assert(idx.refresh() == 8 && idx.segments.map(_.first) == Seq(0L, 3L, 7L))
+    // every piece of a batch across three files, each line under its id
+    val stream = new WsReplayMicroBatchStream(dir, 100, framesPerPartition = 4)
+    val all = Seq("b1", "b2", "b3", "c1", "c2", "c3", "c", "d1")
+    assert(readBatch(stream, 0L, 8L) == all.indices.map(_.toLong).zip(all))
+    assert(stream.planInputPartitions(WsOffset(0L), WsOffset(8L)).length == 2)
+    // a restarted driver restores the same files and ids from the hidden
+    // sidecar, and only hidden files were added beside the hour files
+    val again = new HourFileIndex(dir)
+    def ranges(i: HourFileIndex) = i.segments.map(s => (s.path, s.first, s.end))
+    assert(again.refresh() == 8 && ranges(again) == ranges(idx))
+    assert(spark.read.text(dir).count() == 4 + 4 + 1 + 1)
+    // --hl-no-catchup: start at the first file within an hour of the newest
+    val hourAgo = System.currentTimeMillis() - 2 * 3600 * 1000L
+    Seq("h9.json", "h10.json").foreach(n => new java.io.File(s"$dir/$n").setLastModified(hourAgo))
+    assert(again.latestHourStart == 7L)
+  }
+
+  test("directory mode: a commit drops frozen files' indexes, a restart indexes lazily") {
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    import graft.sources.{HourFileIndex, WsOffset, WsReplayMicroBatchStream}
+    val dir = tmp("ws_hours_held")
+    Seq("h1.json" -> "a1\na2\n", "h2.json" -> "b1\n", "h3.json" -> "c1\nc2\n").foreach {
+      case (name, body) => Files.write(Paths.get(s"$dir/$name"), body.getBytes)
+    }
+    def files(names: String*) = names.map(n => s"$dir/$n").toSet
+    val stream = new WsReplayMicroBatchStream(dir, 100)
+    val idx = WsReplay.hourFilesFor(dir)
+    assert(stream.latestOffset(WsOffset(0L), ReadLimit.maxRows(100)) == WsOffset(5L))
+    assert(idx.heldFiles == files("h1.json", "h2.json", "h3.json"))
+    // a commit inside h2 keeps its index; one past its last id drops it;
+    // the tailed file keeps its index
+    stream.commit(WsOffset(2L))
+    assert(idx.heldFiles == files("h2.json", "h3.json"))
+    stream.commit(WsOffset(5L))
+    assert(idx.heldFiles == files("h3.json"))
+    // a batch planned over dropped files indexes them again, same ids
+    val all = Seq("a1", "a2", "b1", "c1", "c2")
+    assert(readBatch(stream, 0L, 5L) == all.indices.map(_.toLong).zip(all))
+    assert(idx.heldFiles == files("h1.json", "h2.json", "h3.json"))
+    // a restarted driver indexes the tailed file only
+    val again = new HourFileIndex(dir)
+    assert(again.heldFiles.isEmpty)
+    assert(again.refresh() == 5 && again.heldFiles == files("h3.json"))
+    assert(again.indexed(2L, 3L).map(_._1.path) == Seq(s"$dir/h2.json"))
+    assert(again.heldFiles == files("h2.json", "h3.json"))
+    // catchUp = false means a directory; a capture file rejects it
+    intercept[IllegalArgumentException](
+      new WsReplayMicroBatchStream(s"$dir/h1.json", 100, catchUp = false))
   }
 }
