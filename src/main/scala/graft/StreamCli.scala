@@ -195,6 +195,12 @@ object StreamCli {
     * previous choice is restored afterwards. The output root is created
     * with `java.nio`, so it is local and a rename is one `rename(2)`.
     *
+    * A backlog is one micro-batch: a trigger admits every whole frame its
+    * sources hold, so a restart after downtime or a Hyperliquid catch-up
+    * runs as a single batch. That batch's collected rows, and the index of
+    * the hour files it plans over (8 bytes a line), stay on the driver
+    * until it commits.
+    *
     * The drain reads whole lines only: a capture whose last frame has no
     * newline yet keeps that frame back, as the reference's tail buffers a
     * partial line until its newline arrives. A later run over the same

@@ -58,11 +58,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *     straddles a restart rebases past the persisted id high-water
   *     instead of reinterpreting committed offsets against the new file.
   *
-  * Offsets are frame indexes; admission control paces `framesPerBatch`
-  * frames per micro-batch (the analog of the reference's batched flush —
-  * `writer_pg.py:187-215` flushes on size∨time), and each batch splits into
-  * `framesPerPartition`-sized input partitions so wide batches scan in
-  * parallel. Usage:
+  * Offsets are frame indexes. A paced trigger admits every whole frame
+  * available, so a backlog (a restart after downtime, a Hyperliquid
+  * catch-up) is one micro-batch: the reference forwards each row as it
+  * arrives, and its writer's batch is whatever has queued (SURVEY §2.4,
+  * "batch size = natural micro-batch"). The `framesPerBatch` cap is
+  * opt-in: when set, a micro-batch admits at most that many frames. Each
+  * batch splits into `framesPerPartition`-sized input partitions (1000 by
+  * default) so a wide batch scans in parallel. Usage:
   *
   * {{{
   * spark.readStream
@@ -379,7 +382,9 @@ trait FrameLog {
   *  - Driver memory is the tailed file's index plus a few words per file:
   *    a frozen file is indexed only while a planned batch still needs it.
   *    A commit past its last id drops its index, and a restarted driver
-  *    indexes a recorded file only when a batch plans over its ids. */
+  *    indexes a recorded file only when a batch plans over its ids. A
+  *    catch-up batch spans the whole backlog, so it holds every backlog
+  *    file's index (8 bytes a line) until it commits. */
 final class HourFileIndex(dir: String) extends FrameLog {
   private val segs = scala.collection.mutable.ArrayBuffer[Segment]()
   private val held = scala.collection.mutable.HashMap[String, FrameIndex]()
@@ -524,7 +529,7 @@ class WsReplayTable(options: CaseInsensitiveStringMap)
     extends Table with SupportsRead {
   private val path = Option(options.get("path")).getOrElse(
     throw new IllegalArgumentException("ws-replay source requires option 'path'"))
-  private val framesPerBatch = options.getInt("framesPerBatch", 1000)
+  private val framesPerBatch = options.getLong("framesPerBatch", Long.MaxValue)
   private val framesPerPartition = options.getInt("framesPerPartition", 1000)
   private val catchUp = options.getBoolean("catchUp", true)
 
@@ -553,8 +558,8 @@ case class WsOffset(frame: Long) extends Offset {
 /** A `path` that is a directory when the stream starts is served as hour
   * files ([[HourFileIndex]]); there `catchUp = false` starts at
   * [[HourFileIndex.latestHourStart]] instead of frame 0. A capture file
-  * rejects `catchUp = false`. */
-class WsReplayMicroBatchStream(path: String, framesPerBatch: Int,
+  * rejects `catchUp = false`. `framesPerBatch = Long.MaxValue` sets no cap. */
+class WsReplayMicroBatchStream(path: String, framesPerBatch: Long,
     framesPerPartition: Int = 1000, catchUp: Boolean = true)
     extends MicroBatchStream with SupportsAdmissionControl {
 
@@ -574,9 +579,10 @@ class WsReplayMicroBatchStream(path: String, framesPerBatch: Int,
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(framesPerBatch)
 
-  /** Admission-controlled pacing: at most `framesPerBatch` new frames per
-    * micro-batch (Trigger.Once's ReadAllAvailable takes everything). The
-    * index refresh scans only bytes appended since the last trigger.
+  /** Admission control: a paced trigger admits every whole frame, or at
+    * most `framesPerBatch` of them when that cap is set (Trigger.Once's
+    * ReadAllAvailable takes everything). The index refresh scans only
+    * bytes appended since the last trigger.
     *
     * Whole-line admission: a paced trigger admits only frames whose
     * newline has been written. A trigger that lands while a capture
@@ -590,8 +596,14 @@ class WsReplayMicroBatchStream(path: String, framesPerBatch: Int,
     val total = log.refresh()
     val end = limit match {
       case _: ReadAllAvailable => total
-      case rows: ReadMaxRows => math.min(from + rows.maxRows(), log.wholeFrames)
-      case _ => math.min(from + framesPerBatch, log.wholeFrames)
+      case _ =>
+        val cap = limit match {
+          case rows: ReadMaxRows => rows.maxRows()
+          case _ => framesPerBatch
+        }
+        // compared as a difference: `from + cap` overflows for no cap
+        val whole = log.wholeFrames
+        if (whole - from <= cap) whole else from + cap
     }
     WsOffset(math.max(from, end))
   }

@@ -43,12 +43,12 @@ object StreamAssembly {
     * phase-1 backfill + phase-2 tail collapse into one query
     * (`hyperliquid_adapter.py:341-351`). The source is the replay source's
     * directory mode ([[graft.sources.HourFileIndex]]): one frame sequence
-    * over the hour files in numeric order, the newest tailed line by line,
-    * paced by the source's per-trigger frame cap. `catchUp = false` is
-    * `--hl-no-catchup` (`hyperliquid_adapter.py:341-347`): the stream
-    * starts at the first file modified within an hour of the newest, so
-    * the backlog before it is indexed once but never read. `root` must be an
-    * existing directory: the source reads a directory path as hour files. */
+    * over the hour files in numeric order, the newest tailed line by line.
+    * `catchUp = false` is `--hl-no-catchup` (`hyperliquid_adapter.py:341-347`):
+    * the stream starts at the first file modified within an hour of the
+    * newest, so the backlog before it is indexed once but never read. `root`
+    * must be an existing directory: the source reads a directory path as
+    * hour files. */
   def hyperliquidFileStream(spark: SparkSession, root: String,
       catchUp: Boolean = true): DataFrame = {
     require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(root)),
@@ -68,12 +68,10 @@ object StreamAssembly {
     * normalizer — e.g. `Normalizers.binance(wsReplayStream(spark, f), "usdt")`
     * is the full Binance adapter path (liq-stream
     * `binance_adapter.py:96-129`) on Spark's source contract. */
-  def wsReplayStream(spark: SparkSession, framesFile: String,
-      framesPerBatch: Int = 1000): DataFrame =
+  def wsReplayStream(spark: SparkSession, framesFile: String): DataFrame =
     spark.readStream
       .format("graft.sources.WsReplayProvider")
       .option("path", framesFile)
-      .option("framesPerBatch", framesPerBatch)
       .load()
       .select(col("raw"))
 
@@ -460,9 +458,9 @@ object StreamAssembly {
     * PRE-UPDATE state (a spike never vouches for itself), in
     * [[emitInOrder]]'s order: a per-batch (ts, id) sort, rows older than
     * the watermark dropped, and an in-order feed per key assumed across
-    * batches (StreamingSpec drives ordered batches). The batch twin
-    * [[anomalyAgg]] is the identical test over cumulative window sums;
-    * parity is row-exact. */
+    * batches (StreamingSpec drives ordered batches). StreamingSpec's batch
+    * twin is the identical test over cumulative window sums; parity is
+    * row-exact. */
   def anomalyStream(events: DataFrame,
       watermark: String = "10 minutes", minN: Long = 30L): DataFrame = {
     import events.sparkSession.implicits._
@@ -479,32 +477,6 @@ object StreamAssembly {
         } else None
       (MomentState(st.n + 1, st.s + vc, st.q + vc * vc), hit)
     }.toDF()
-  }
-
-  /** The batch twin: the same integer 3σ test over cumulative window sums
-    * (strictly-preceding frame, (ts, id) order). */
-  private[graft] def anomalyAgg(events: DataFrame,
-      minN: Long = 30L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("event_type")
-      .orderBy(col("ts_us"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    events
-      .select(col("event_type"), col("event_id"), unix_micros(col("ts")).as("ts_us"),
-        (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) *
-          lit(100)).cast("long").as("vc"))
-      .select(col("event_type"), col("event_id"), col("ts_us"), col("vc"),
-        count(lit(1)).over(w).as("n"),
-        coalesce(sum(col("vc")).over(w), lit(0L)).as("s"),
-        coalesce(sum(col("vc") * col("vc")).over(w), lit(0L)).as("q"))
-      .filter(col("n") >= minN)
-      .filter(
-        (col("vc").cast(org.apache.spark.sql.types.DecimalType(38, 0)) * col("n") - col("s"))
-          * (col("vc").cast(org.apache.spark.sql.types.DecimalType(38, 0)) * col("n") - col("s"))
-          > lit(9) * (col("n").cast(org.apache.spark.sql.types.DecimalType(38, 0)) * col("q")
-            - col("s").cast(org.apache.spark.sql.types.DecimalType(38, 0)) * col("s")))
-      .select(col("event_type"), col("event_id"), col("vc"),
-        col("n").as("n_prior"))
   }
 
   /** STREAMING EXACT HOURLY REACH — live distinct users per event-time

@@ -1,7 +1,7 @@
 package graft
 
 import java.io.{ByteArrayOutputStream, OutputStream, PrintStream}
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -20,15 +20,10 @@ class StreamCliSpec extends SparkSpec {
 
   private def tmp(prefix: String) = ops.tempDir(prefix)
 
-  /** Fixture captures for every `--all` source. The Binance capture cycles
-    * its fixture frames up to `binanceFrames`: more than the replay
-    * source's 1000 frames per batch spreads a run over several
-    * micro-batches. */
-  private def allFrames(prefix: String,
-      binanceFrames: Int = Fixtures.binance.size): String = {
+  /** Fixture captures for every `--all` source. */
+  private def allFrames(prefix: String): String = {
     val framesRoot = tmp(prefix)
-    val binance = Iterator.continually(Fixtures.binance).flatten.take(binanceFrames).toSeq
-    Seq("binance" -> binance, "aster" -> Fixtures.aster,
+    Seq("binance" -> Fixtures.binance, "aster" -> Fixtures.aster,
       "bybit" -> Fixtures.bybit, "okx" -> Fixtures.okx).foreach { case (ex, fx) =>
       Files.write(Paths.get(s"$framesRoot/$ex.jsonl"), fx.mkString("\n").getBytes)
     }
@@ -36,6 +31,17 @@ class StreamCliSpec extends SparkSpec {
     Files.write(Paths.get(s"$framesRoot/hyperliquid/hour1.json"),
       Fixtures.hyperliquid.mkString("", "\n", "\n").getBytes)
     framesRoot
+  }
+
+  /** Two runs over one output root, with the Binance fixture frames
+    * appended to the capture between them. A run drains its whole backlog
+    * in one micro-batch, so the second run streams the appended frames as
+    * a later batch with rows. Returns the second run's sink counts. */
+  private def runTwice(args: StreamCli.CliArgs): (Long, Long) = {
+    StreamCli.run(spark, args)
+    Files.write(Paths.get(s"${args.framesRoot}/binance.jsonl"),
+      Fixtures.binance.mkString("\n", "\n", "").getBytes, StandardOpenOption.APPEND)
+    StreamCli.run(spark, args)
   }
 
   /** Rows as a multiset: each distinct row with its count. */
@@ -246,15 +252,15 @@ class StreamCliSpec extends SparkSpec {
   }
 
   test("--all over several micro-batches: one stamp per batch, CSV == JDBC, a line per row") {
-    val framesRoot = allFrames("cli_mb_frames", binanceFrames = 1200)
+    val framesRoot = allFrames("cli_mb_frames")
     val out = tmp("cli_mb_out")
     val url = "jdbc:derby:memory:cli_mb;create=true"
+    val args = StreamCli.CliArgs(all = true, framesRoot = framesRoot,
+      outdirRoot = out, triggerMs = 100L, noColor = true, pgUrl = url)
     val console = new ByteArrayOutputStream()
     val t0 = System.currentTimeMillis()
     val ((csvRows, pgRows), jobs) = MicroBatchPlans.jobsByBatch(spark)(
-      Console.withOut(new PrintStream(console, true, "UTF-8"))(
-        StreamCli.run(spark, StreamCli.CliArgs(all = true, framesRoot = framesRoot,
-          outdirRoot = out, triggerMs = 100L, noColor = true, pgUrl = url))))
+      Console.withOut(new PrintStream(console, true, "UTF-8"))(runTwice(args)))
     val t1 = System.currentTimeMillis()
     val jdbc = spark.read.jdbc(url, "liquidations", new java.util.Properties())
     val jdbcRows = jdbc.collect()
@@ -295,7 +301,7 @@ class StreamCliSpec extends SparkSpec {
   }
 
   test("a replayed batch duplicates no sink rows: JDBC and CSV keep the first run's rows") {
-    val framesRoot = allFrames("cli_replay_frames", binanceFrames = 1200)
+    val framesRoot = allFrames("cli_replay_frames")
     val out = tmp("cli_replay_out")
     val url = "jdbc:derby:memory:cli_replay;create=true"
     val args = StreamCli.CliArgs(all = true, framesRoot = framesRoot,
@@ -307,18 +313,24 @@ class StreamCliSpec extends SparkSpec {
         .select(cols: _*).collect()),
       multiset(spark.read.option("header", "true").schema(Schemas.unified)
         .csv(s"$out/csv").select(cols: _*).collect()))
-    Console.withOut(quiet)(StreamCli.run(spark, args))
+    // two runs, so the replayed batch has an earlier batch's rows beside it
+    Console.withOut(quiet)(runTwice(args))
     val first = sinks()
-    // the last batch reached both sinks, but its commit was lost: the
-    // restart runs it again with the same batch id and the same rows
-    val commits = Paths.get(s"$out/ckpt/commits")
-    val n = Files.list(commits).iterator().asScala.map(_.getFileName.toString)
-      .filter(_.forall(_.isDigit)).map(_.toLong).max
-    val lastRows = spark.read.jdbc(url, "liquidations", new java.util.Properties())
-      .filter(col("batch_id") === n).count()
+    // the last batch that wrote rows reached both sinks, but its commit and
+    // every later batch were lost: the restart runs it again with the same
+    // batch id and the same rows
+    val jdbcTable = spark.read.jdbc(url, "liquidations", new java.util.Properties())
+    val n = jdbcTable.agg(org.apache.spark.sql.functions.max("batch_id")).head().getLong(0)
+    val lastRows = jdbcTable.filter(col("batch_id") === n).count()
     assert(lastRows > 0, s"batch $n wrote no rows, so its replay tests nothing")
-    Files.delete(commits.resolve(n.toString))
-    Files.delete(commits.resolve(s".$n.crc"))
+    def batchFiles(log: String): Seq[(Long, Path)] =
+      Files.list(Paths.get(s"$out/ckpt/$log")).iterator().asScala.toSeq.flatMap { f =>
+        val id = f.getFileName.toString.stripPrefix(".").stripSuffix(".crc")
+        if (id.nonEmpty && id.forall(_.isDigit)) Some(id.toLong -> f) else None
+      }
+    assert(batchFiles("commits").exists(_._1 == n), s"batch $n has no commit")
+    (batchFiles("commits").filter(_._1 >= n) ++ batchFiles("offsets").filter(_._1 > n))
+      .foreach { case (_, f) => Files.delete(f) }
     Console.withOut(quiet)(StreamCli.run(spark, args))
     val (jdbcSame, csvSame) = sinks() match { case (j, c) => (j == first._1, c == first._2) }
     assert(jdbcSame, "the JDBC replay changed the table")
@@ -332,12 +344,12 @@ class StreamCliSpec extends SparkSpec {
     // a value that changes every micro-batch changes the generated class
     // of every stage it reaches, which is then compiled again on every
     // trigger
-    val framesRoot = allFrames("cli_plan_frames", binanceFrames = 1200)
+    val framesRoot = allFrames("cli_plan_frames")
     val out = tmp("cli_plan_out")
     val quiet = new PrintStream(OutputStream.nullOutputStream())
-    val (_, batches) = MicroBatchPlans.during(spark)(Console.withOut(quiet)(
-      StreamCli.run(spark, StreamCli.CliArgs(all = true, framesRoot = framesRoot,
-        outdirRoot = out, triggerMs = 100L, noWrite = true))))
+    val args = StreamCli.CliArgs(all = true, framesRoot = framesRoot,
+      outdirRoot = out, triggerMs = 100L, noWrite = true)
+    val (_, batches) = MicroBatchPlans.during(spark)(Console.withOut(quiet)(runTwice(args)))
     assert(batches.size >= 2, s"expected several micro-batches: ${batches.size}")
     batches.foreach { ie =>
       val leaked = MicroBatchPlans.perBatchValues(ie)

@@ -6,7 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, unix_micros}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.SparkSpec
 import graft.normalize.{Fixtures, Normalizers}
@@ -17,6 +20,27 @@ import graft.normalize.{Fixtures, Normalizers}
 class StreamingSpec extends SparkSpec {
 
   private def tmp(prefix: String) = graft.ops.tempDir(prefix)
+
+  /** The batch twin of [[StreamAssembly.anomalyStream]]: the same integer
+    * 3σ test over cumulative window sums (strictly-preceding frame,
+    * (ts, id) order). */
+  private def anomalyAgg(events: DataFrame, minN: Long = 30L): DataFrame = {
+    val w = Window.partitionBy("event_type")
+      .orderBy(col("ts_us"), col("event_id"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    def exact(c: String) = col(c).cast(DecimalType(38, 0))
+    events
+      .select(col("event_type"), col("event_id"), unix_micros(col("ts")).as("ts_us"),
+        (col("value").cast(DecimalType(18, 2)) * lit(100)).cast("long").as("vc"))
+      .select(col("event_type"), col("event_id"), col("ts_us"), col("vc"),
+        count(lit(1)).over(w).as("n"),
+        coalesce(sum(col("vc")).over(w), lit(0L)).as("s"),
+        coalesce(sum(col("vc") * col("vc")).over(w), lit(0L)).as("q"))
+      .filter(col("n") >= minN)
+      .filter((exact("vc") * col("n") - col("s")) * (exact("vc") * col("n") - col("s"))
+        > lit(9) * (exact("n") * col("q") - exact("s") * col("s")))
+      .select(col("event_type"), col("event_id"), col("vc"), col("n").as("n_prior"))
+  }
 
   test("file-tail stream: backfill + new-file rollover, dedup across batches") {
     val root = tmp("hl_root")
@@ -294,7 +318,7 @@ class StreamingSpec extends SparkSpec {
     val family: Seq[(String, org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.DataFrame)] = Seq(
-      ("anomaly", StreamAssembly.anomalyStream(_), StreamAssembly.anomalyAgg(_)),
+      ("anomaly", StreamAssembly.anomalyStream(_), anomalyAgg(_)),
       ("cusum", StreamAssembly.cusumStream(_), StreamAssembly.cusumAgg(_)),
       ("hampel", StreamAssembly.hampelStream(_),
         graft.ops.TimeWindows.hampelFlags(_)))
@@ -958,7 +982,7 @@ class StreamingSpec extends SparkSpec {
       val got = spark.sql(
         """SELECT event_type, event_id, vc, n_prior FROM anom_stream
            ORDER BY event_type, event_id""").collect().toSeq
-      val want = StreamAssembly.anomalyAgg(
+      val want = anomalyAgg(
         graft.ops.table(spark, dir, "events"))
         .orderBy("event_type", "event_id").collect().toSeq
       assert(want.nonEmpty, "batch twin flagged nothing - fixture degenerate")

@@ -2,8 +2,11 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.SparkSpec
 import graft.normalize.Normalizers
@@ -31,6 +34,20 @@ class WsReplaySpec extends SparkSpec {
       out
     }
   }
+
+  /** Streams the replay source at `path`, default options, on a paced
+    * trigger; each micro-batch with rows records its frames under its id. */
+  private def recordBatches(path: String,
+      batches: java.util.Map[Long, Seq[String]]): StreamingQuery =
+    spark.readStream.format("graft.sources.WsReplayProvider")
+      .option("path", path).load()
+      .writeStream.option("checkpointLocation", tmp("ws_batches_ckpt"))
+      .trigger(Trigger.ProcessingTime(100L))
+      .foreachBatch { (df: DataFrame, id: Long) =>
+        val raw = df.select("raw").collect().map(_.getString(0)).toSeq
+        if (raw.nonEmpty) batches.put(id, raw): Unit
+      }
+      .start()
 
   private def frame(sym: String, ts: Long): String =
     s"""{"e":"forceOrder","E":$ts,"o":{"s":"$sym","S":"SELL","q":"2","p":"10","l":"2","T":$ts}}"""
@@ -414,6 +431,36 @@ class WsReplaySpec extends SparkSpec {
     assert(spark.table("ws_midline_now").count() == 2)
   }
 
+  test("a backlog streams in one paced trigger; a half-written frame waits for its newline") {
+    import java.nio.file.StandardOpenOption.APPEND
+    import graft.sources.{WsOffset, WsReplayMicroBatchStream}
+    val framesFile = s"${tmp("ws_backlog")}/frames.jsonl"
+    // 2500 frames, every 100th a heartbeat, then the first half of one more
+    val lines = (1 to 2500).map { i =>
+      if (i % 100 == 0) """{"op":"ping"}""" else frame(f"B$i%04dUSDT", 1710000000000L + i)
+    }
+    val data = lines.filterNot(WsReplay.isControlFrame)
+    val half = frame("HALFUSDT", 1710000002501L)
+    Files.write(Paths.get(framesFile),
+      (lines.mkString("", "\n", "\n") + half.take(half.length / 2)).getBytes)
+    val batches = new java.util.concurrent.ConcurrentHashMap[Long, Seq[String]]()
+    val q = recordBatches(framesFile, batches)
+    try {
+      q.processAllAvailable()
+      // the first trigger takes every whole frame, with no cap of its own
+      assert(batches.keySet.asScala == Set(0L), s"batches ${batches.keySet}")
+      assert(batches.get(0L).sorted == data.sorted)
+      Files.write(Paths.get(framesFile), s"${half.drop(half.length / 2)}\n".getBytes, APPEND)
+      q.processAllAvailable()
+      assert(batches.values.asScala.toSeq.flatten.count(_ == half) == 1)
+      assert(batches.values.asScala.map(_.size).sum == data.size + 1)
+    } finally q.stop()
+    // no cap: a trigger from a mid-capture offset admits the rest, where
+    // `from + maxRows` would overflow
+    val stream = new WsReplayMicroBatchStream(framesFile, Long.MaxValue)
+    assert(stream.latestOffset(WsOffset(1000L), stream.getDefaultReadLimit) == WsOffset(2501L))
+  }
+
   test("directory mode: one id sequence over the hour files, newest tailed, restartable") {
     import java.nio.file.StandardOpenOption.APPEND
     import graft.sources.{HourFileIndex, WsOffset, WsReplayMicroBatchStream}
@@ -485,5 +532,20 @@ class WsReplaySpec extends SparkSpec {
     // catchUp = false means a directory; a capture file rejects it
     intercept[IllegalArgumentException](
       new WsReplayMicroBatchStream(s"$dir/h1.json", 100, catchUp = false))
+  }
+
+  test("directory mode: a catch-up backlog over several hour files is one paced batch") {
+    val dir = tmp("ws_hours_backlog")
+    // 1200 lines over three hour files; the newest is tailed
+    val files = Seq("h1.json", "h2.json", "h3.json").map { name =>
+      val lines = (0 until 400).map(i => s"$name:$i")
+      Files.write(Paths.get(s"$dir/$name"), lines.mkString("", "\n", "\n").getBytes)
+      lines
+    }
+    val batches = new java.util.concurrent.ConcurrentHashMap[Long, Seq[String]]()
+    val q = recordBatches(dir, batches)
+    try q.processAllAvailable() finally q.stop()
+    assert(batches.keySet.asScala == Set(0L), s"batches ${batches.keySet}")
+    assert(batches.get(0L).sorted == files.flatten.sorted)
   }
 }
