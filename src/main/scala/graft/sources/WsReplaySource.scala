@@ -594,16 +594,11 @@ class WsReplayMicroBatchStream(path: String, framesPerBatch: Long,
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[WsOffset].frame
     val total = log.refresh()
+    // `from + cap` would overflow for no cap, so the cap bounds the gap
     val end = limit match {
       case _: ReadAllAvailable => total
-      case _ =>
-        val cap = limit match {
-          case rows: ReadMaxRows => rows.maxRows()
-          case _ => framesPerBatch
-        }
-        // compared as a difference: `from + cap` overflows for no cap
-        val whole = log.wholeFrames
-        if (whole - from <= cap) whole else from + cap
+      case rows: ReadMaxRows => from + math.min(rows.maxRows(), log.wholeFrames - from)
+      case _ => from + math.min(framesPerBatch, log.wholeFrames - from)
     }
     WsOffset(math.max(from, end))
   }
